@@ -16,7 +16,11 @@ Scale design notes (the point of each operator is its shuffle shape):
   oracle for tests only.
 - all LSH candidate generators cap bucket sizes: near-identical
   mega-clusters are the exact-dedup pass's responsibility, never a
-  quadratic join.
+  quadratic join. The shared LSH guard and pair machinery live in one
+  place each: ``_cap_buckets`` (the cap), ``_candidates_from_banded``
+  (the band-bucket self-join), ``_probe_index`` (the incremental
+  operators' broadcast probe of a committed index) and ``_verify_pairs``
+  (the exact verify, scored by ``_jaccard`` or similarity's ``_cosine``).
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from feature_engineering_spark.functions.text import (
     token_hash64,
     word_shingles,
 )
+from feature_engineering_spark.operators.similarity import _cosine, _dot
 
 
 def _shingles(text_col, n: int, unit: str):
@@ -102,6 +107,13 @@ def _guard_all_pairs(df: DataFrame, max_rows: int, op: str) -> None:
         )
 
 
+def _jaccard(a, b):
+    """Exact set Jaccard of two shingle arrays (0.0 when both are empty)."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text: str = "text",
@@ -121,9 +133,7 @@ def ngram_jaccard_pairs(
     )
     a, b = g.alias("a"), g.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id"))
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    jac = _jaccard(F.col("a.sh"), F.col("b.sh"))
     return (
         pairs.select(
             F.col("a.id").alias("a"), F.col("b.id").alias("b"), jac.alias("jaccard")
@@ -294,6 +304,56 @@ def _candidates_from_banded(
     )
 
 
+def _probe_index(
+    banded_new: DataFrame,
+    corpus_banded: DataFrame,
+    max_bucket_size: int | None,
+    intermediates: dict | None,
+) -> DataFrame:
+    """Cross candidates (a = corpus id, b = batch id) of an already-capped
+    batch banding against a committed (id, band, bucket) index — the
+    broadcast probe and matched-row cap both incremental operators share
+    (scale argument in ``minhash_lsh_incremental``). Fills
+    ``intermediates['hit']`` with the matched index rows BEFORE their cap."""
+    probe = banded_new.select("band", "bucket").distinct()
+    hit = corpus_banded.join(F.broadcast(probe), ["band", "bucket"])
+    if intermediates is not None:
+        intermediates["hit"] = hit
+    hit = _cap_buckets(hit, max_bucket_size)
+    return (
+        hit.select("band", "bucket", F.col("id").alias("a"))
+        .join(
+            banded_new.select("band", "bucket", F.col("id").alias("b")),
+            ["band", "bucket"],
+        )
+        .select("a", "b")
+        .distinct()
+    )
+
+
+def _verify_pairs(
+    cand: DataFrame,
+    ga: DataFrame,
+    gb: DataFrame,
+    col: str,
+    score,
+    name: str,
+    threshold: float,
+) -> DataFrame:
+    """The exact verify of every LSH operator: join each candidate (a, b)
+    to its ``col`` payload in the (id, col) frames ``ga`` (a side) and
+    ``gb`` (b side), score the pair with ``score`` (``_jaccard`` or
+    ``_cosine``) and keep (a, b, name) rows scoring >= ``threshold``."""
+    ca, cb = f"{col}a", f"{col}b"
+    j = (
+        cand.join(ga.withColumnRenamed("id", "a").withColumnRenamed(col, ca), "a")
+        .join(gb.withColumnRenamed("id", "b").withColumnRenamed(col, cb), "b")
+    )
+    return j.select("a", "b", score(F.col(ca), F.col(cb)).alias(name)).where(
+        F.col(name) >= threshold
+    )
+
+
 def minhash_lsh_candidates(
     sig: DataFrame,
     bands: int = 8,
@@ -371,16 +431,7 @@ def minhash_lsh_dedup_parts(
         df.join(F.broadcast(ids), df[id_col] == ids["id"], "left_semi"),
         text, id_col, shingle_n, shingle_unit,
     )
-    j = (
-        cand.join(gc.withColumnRenamed("id", "a").withColumnRenamed("sh", "sha"), "a")
-        .join(gc.withColumnRenamed("id", "b").withColumnRenamed("sh", "shb"), "b")
-    )
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-    union = F.size(F.array_union(F.col("sha"), F.col("shb")))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    pairs = j.select("a", "b", jac.alias("jaccard")).where(
-        F.col("jaccard") >= threshold
-    )
+    pairs = _verify_pairs(cand, gc, gc, "sh", _jaccard, "jaccard", threshold)
     return pairs, banded, [sig, cand]
 
 
@@ -470,22 +521,7 @@ def minhash_lsh_incremental(
         intermediates["banded_new"] = banded_new
         intermediates["shingles"] = g_new
     banded_new = _cap_buckets(banded_new, max_bucket_size)
-
-    # --- cross candidates: probe the committed index with the batch
-    probe = banded_new.select("band", "bucket").distinct()
-    hit = corpus_banded.join(F.broadcast(probe), ["band", "bucket"])
-    if intermediates is not None:
-        intermediates["hit"] = hit
-    hit = _cap_buckets(hit, max_bucket_size)
-    cross = (
-        hit.select("band", "bucket", F.col("id").alias("a"))
-        .join(
-            banded_new.select("band", "bucket", F.col("id").alias("b")),
-            ["band", "bucket"],
-        )
-        .select("a", "b")
-        .distinct()
-    )
+    cross = _probe_index(banded_new, corpus_banded, max_bucket_size, intermediates)
 
     # --- exact verify: shingle ONLY the candidate corpus rows
     g_corp = _shingle_frame(
@@ -495,23 +531,12 @@ def minhash_lsh_incremental(
         ),
         text, id_col, shingle_n, shingle_unit,
     )
-
-    def _verify(cand: DataFrame, ga: DataFrame, gb: DataFrame) -> DataFrame:
-        j = (
-            cand.join(ga.withColumnRenamed("id", "a").withColumnRenamed("sh", "sha"), "a")
-            .join(gb.withColumnRenamed("id", "b").withColumnRenamed("sh", "shb"), "b")
-        )
-        inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-        union = F.size(F.array_union(F.col("sha"), F.col("shb")))
-        jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-        return j.select("a", "b", jac.alias("jaccard")).where(
-            F.col("jaccard") >= threshold
-        )
-
     # in-batch pairs: banded_new is already capped, so no second cap pass
     batch_cand = _candidates_from_banded(banded_new, max_bucket_size=None)
-    return _verify(cross, g_corp, g_new).unionByName(
-        _verify(batch_cand, g_new, g_new)
+    return _verify_pairs(
+        cross, g_corp, g_new, "sh", _jaccard, "jaccard", threshold
+    ).unionByName(
+        _verify_pairs(batch_cand, g_new, g_new, "sh", _jaccard, "jaccard", threshold)
     )
 
 
@@ -698,15 +723,7 @@ def embedding_neardup_pairs(
     )
     a, b = v.alias("a"), v.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id"))
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    cos = dot / (norm("a.v") * norm("b.v"))
+    cos = _cosine(F.col("a.v"), F.col("b.v"))
     return pairs.select(
         F.col("a.id").alias("a"), F.col("b.id").alias("b"), cos.alias("cosine")
     ).where(F.col("cosine") >= threshold)
@@ -759,12 +776,7 @@ def srp_signature_buckets(
     rows_per_band = nbits // bands
     bit_exprs = []
     for h in planes:
-        plane = F.array(*[F.lit(w) for w in h])
-        dot = F.aggregate(
-            F.zip_with(v, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        dot = _dot(v, F.array(*[F.lit(w) for w in h]))
         bit_exprs.append(F.when(dot > 0, F.lit(1)).otherwise(F.lit(0)))
     buckets = []
     for b in range(bands):
@@ -805,39 +817,12 @@ def embedding_neardup_lsh(
     P(bit agree) = 1 - angle/pi (Goemans-Williamson); P(candidate) =
     1 - (1 - p^r)^bands.
     """
-    planes = srp_hyperplanes(dim, nbits, seed)
-    banded = srp_signature_buckets(df, planes, bands, emb, id_col)
-    banded = _cap_buckets(banded, max_bucket_size)
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .distinct()
-    )
+    banded = srp_banded(df, dim, emb, id_col, nbits, bands, seed)
+    cand = _candidates_from_banded(banded, max_bucket_size)
     vv = df.select(
         F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
     )
-    j = (
-        cand.join(vv.withColumnRenamed("id", "a").withColumnRenamed("v", "va"), "a")
-        .join(vv.withColumnRenamed("id", "b").withColumnRenamed("v", "vb"), "b")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    cos = dot / (norm("va") * norm("vb"))
-    return j.select("a", "b", cos.alias("cosine")).where(
-        F.col("cosine") >= threshold
-    )
+    return _verify_pairs(cand, vv, vv, "v", _cosine, "cosine", threshold)
 
 
 def srp_banded(
@@ -908,22 +893,7 @@ def embedding_lsh_incremental(
     if intermediates is not None:
         intermediates["banded_new"] = banded_new
     banded_new = _cap_buckets(banded_new, max_bucket_size)
-
-    # --- cross candidates: probe the committed index with the batch
-    probe = banded_new.select("band", "bucket").distinct()
-    hit = corpus_banded.join(F.broadcast(probe), ["band", "bucket"])
-    if intermediates is not None:
-        intermediates["hit"] = hit
-    hit = _cap_buckets(hit, max_bucket_size)
-    cross = (
-        hit.select("band", "bucket", F.col("id").alias("a"))
-        .join(
-            banded_new.select("band", "bucket", F.col("id").alias("b")),
-            ["band", "bucket"],
-        )
-        .select("a", "b")
-        .distinct()
-    )
+    cross = _probe_index(banded_new, corpus_banded, max_bucket_size, intermediates)
 
     # --- exact verify: fetch ONLY the candidate corpus vectors
     v_new = new_vecs.select(
@@ -934,29 +904,12 @@ def embedding_lsh_incremental(
     ).select(
         F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
     )
-
-    def _verify(cand: DataFrame, ga: DataFrame, gb: DataFrame) -> DataFrame:
-        j = (
-            cand.join(ga.withColumnRenamed("id", "a").withColumnRenamed("v", "va"), "a")
-            .join(gb.withColumnRenamed("id", "b").withColumnRenamed("v", "vb"), "b")
-        )
-        dot = F.aggregate(
-            F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        norm = lambda c: F.sqrt(  # noqa: E731
-            F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-        )
-        cos = dot / (norm("va") * norm("vb"))
-        return j.select("a", "b", cos.alias("cosine")).where(
-            F.col("cosine") >= threshold
-        )
-
     # in-batch pairs: banded_new is already capped, so no second cap pass
     batch_cand = _candidates_from_banded(banded_new, max_bucket_size=None)
-    return _verify(cross, v_corp, v_new).unionByName(
-        _verify(batch_cand, v_new, v_new)
+    return _verify_pairs(
+        cross, v_corp, v_new, "v", _cosine, "cosine", threshold
+    ).unionByName(
+        _verify_pairs(batch_cand, v_new, v_new, "v", _cosine, "cosine", threshold)
     )
 
 

@@ -26,10 +26,16 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _cosine(a, b):
+    """THE cosine fold every similarity/dedup operator uses: left-
+    associated sequential sums, so values are bit-stable across callers."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
 def cosine_to_query(df: DataFrame, query: list[float], emb: str = "embedding") -> DataFrame:
     q = F.array(*[F.lit(float(x)) for x in query])
     v = F.col(emb).cast("array<double>")
-    return df.withColumn("cosine", _dot(v, q) / (_norm(v) * _norm(q)))
+    return df.withColumn("cosine", _cosine(v, q))
 
 
 def brute_force_topk(
@@ -115,7 +121,7 @@ def ivf_assign(
     scored = F.transform(
         carr,
         lambda c: F.struct(
-            (_dot(v, c["cvec"]) / (_norm(v) * _norm(c["cvec"]))).alias("s"),
+            _cosine(v, c["cvec"]).alias("s"),
             c["cid"].alias("cid"),
         ),
     )

@@ -20,8 +20,9 @@ from pyspark.sql import functions as F
 from feature_engineering_spark.functions import text as TX
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The one table reader every plans/ module uses."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -42,10 +43,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 def _docs_with_dupes(
     spark: SparkSession, sf_dir: str, spread: bool = True
 ) -> DataFrame:
@@ -55,7 +52,7 @@ def _docs_with_dupes(
     FIRST operation is already a full shuffle with cheap map-side work
     (dedup_exact: one md5 per doc, then groupBy — the spread exchange
     would just move the same rows twice)."""
-    d = _docs(spark, sf_dir)
+    d = _t(spark, sf_dir, "documents")
     if spread:
         d = _spread(d)
     mut = d.where(F.col("doc_id") < 60).select(
@@ -90,7 +87,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit ROUND(6) + quality from the metric ATTRIBUTES. Arithmetic is
     expression-for-expression the one quality_score defines — identical
     values (oracle unchanged)."""
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     t = F.col("text")
     staged = d.select(
         "doc_id",
@@ -164,7 +161,7 @@ def q_lang_id_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     token split and all five intersections per reference (~10-20x/row).
     Stage the token set, then the five score COLUMNS, then the argmax
     over attributes. Same tiebreak order, same values."""
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     toks = F.array_distinct(TX.ws_tokens(F.lower(F.col("text"))))
     staged = d.select(toks.alias("__toks"))
     scores = staged.select(
@@ -223,7 +220,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates each reference the token-hash array — in one projection
     the md5 transform re-ran 16x per row. Stage the hash array once; the
     16 aggregate scans over the attribute are the genuine work."""
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     t = F.col("text")
     staged = d.select(
         "doc_id",
@@ -462,7 +459,7 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_incremental,
     )
 
-    corpus = _spread(_docs(spark, sf_dir))
+    corpus = _spread(_t(spark, sf_dir, "documents"))
     d = _docs_with_dupes(spark, sf_dir)
     batch = d.where(F.col("doc_id") >= 10000)
     index = minhash_banded(corpus)
@@ -544,7 +541,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _docs_with_dupes(spark, sf_dir)
-    probes = _docs(spark, sf_dir).where(F.col("doc_id") < 5)
+    probes = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 5)
     return contamination_report(d, probes, n=3, min_hits=2)
 
 
@@ -589,7 +586,7 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         repetition_signals,
     )
 
-    return repetition_signals(_spread(_docs(spark, sf_dir)))
+    return repetition_signals(_spread(_t(spark, sf_dir, "documents")))
 
 
 def _repetition_sql(ns: tuple[int, ...] = (2, 3, 4)) -> str:
@@ -670,7 +667,7 @@ def q_line_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         line_repetition_signals,
     )
 
-    docs = _spread(_docs(spark, sf_dir)).select(
+    docs = _spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.expr("replace(text, ' a ', chr(10))").alias("text")
     )
     return line_repetition_signals(docs)
@@ -714,7 +711,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent)."""
     from feature_engineering_spark.operators.dedup import line_corpus_dedup
 
-    docs = _spread(_docs(spark, sf_dir)).select(
+    docs = _spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.expr("replace(text, ' a ', chr(10))").alias("text")
     )
     out = line_corpus_dedup(docs, min_count=3)
@@ -770,7 +767,7 @@ def q_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         line_dedup_batch_against_index,
     )
 
-    docs = _spread(_docs(spark, sf_dir)).select(
+    docs = _spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.expr("replace(text, ' a ', chr(10))").alias("text")
     )
     corpus = docs.where(F.col("doc_id") % 3 != 0)
@@ -837,7 +834,7 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring-containment case MinHash (whole-doc) misses."""
     from feature_engineering_spark.operators.dedup import winnow_overlap_pairs
 
-    d = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
     derived = d.where(F.col("doc_id") % 4 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(
@@ -905,7 +902,7 @@ def q_winnow_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnow_overlap_incremental,
     )
 
-    d = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
     batch = d.where(F.col("doc_id") % 4 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(
@@ -936,7 +933,7 @@ def q_winnow_char(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets a derived copy sharing its first 80 characters."""
     from feature_engineering_spark.operators.dedup import winnow_overlap_pairs
 
-    d = _spread(_docs(spark, sf_dir)).select(
+    d = _spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.replace(F.col("text"), F.lit(" "), F.lit("")).alias("s")
     )
     derived = d.where(F.col("doc_id") % 4 == 0).select(
@@ -1004,7 +1001,7 @@ def q_trim_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter rebuild)."""
     from feature_engineering_spark.operators.dedup import trim_contained_runs
 
-    d = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    d = _spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
     derived = d.where(F.col("doc_id") % 4 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(
@@ -1098,7 +1095,7 @@ SQL_SIMHASH_NEARDUP = SQL_SIMHASH_NEARDUP.replace(
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from feature_engineering_spark.operators.dedup import embedding_neardup_pairs
 
-    out = embedding_neardup_pairs(_emb(spark, sf_dir), threshold=0.0)
+    out = embedding_neardup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.0)
     return out.select(
         "a", "b", F.round("cosine", 4).alias("cosine")
     ).where(F.round("cosine", 4) >= 0.3)
@@ -1123,7 +1120,7 @@ def q_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine verify all replicate in DuckDB."""
     from feature_engineering_spark.operators.dedup import embedding_neardup_lsh
 
-    e = _emb(spark, sf_dir).select(
+    e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     mut = e.where(F.col("vec_id") < 50).select(
@@ -1139,7 +1136,9 @@ def q_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _srp_sql() -> str:
+def _srp_bucket_sql() -> str:
+    """bucket0..bucket3 select-list of the dim-64, nbits-16, 4-band SRP
+    oracles."""
     from feature_engineering_spark.operators.dedup import srp_hyperplanes
 
     planes = srp_hyperplanes(64, 16, 7)
@@ -1155,7 +1154,11 @@ def _srp_sql() -> str:
     for b in range(4):
         terms = " + ".join(f"{bits[4 * b + r]} * {2 ** r}" for r in range(4))
         buckets.append(f"0 + {terms} AS bucket{b}")
-    bucket_sql = ",\n         ".join(buckets)
+    return ",\n         ".join(buckets)
+
+
+def _srp_sql() -> str:
+    bucket_sql = _srp_bucket_sql()
     return f"""
 WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 d AS (
@@ -1212,7 +1215,7 @@ def q_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         srp_banded,
     )
 
-    e = _emb(spark, sf_dir).select(
+    e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     b1 = e.where(F.col("vec_id") < 50).select(
@@ -1238,22 +1241,7 @@ def q_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _srp_incremental_sql() -> str:
-    from feature_engineering_spark.operators.dedup import srp_hyperplanes
-
-    planes = srp_hyperplanes(64, 16, 7)
-    # identical left-associated add chains as the Spark operator emits —
-    # same IEEE op sequence, bit-identical dot products, identical sign bits
-    bits = [
-        "(CASE WHEN 0.0 + "
-        + " + ".join(f"v[{k + 1}] * ({w!r})" for k, w in enumerate(h))
-        + " > 0 THEN 1 ELSE 0 END)"
-        for h in planes
-    ]
-    buckets = []
-    for b in range(4):
-        terms = " + ".join(f"{bits[4 * b + r]} * {2 ** r}" for r in range(4))
-        buckets.append(f"0 + {terms} AS bucket{b}")
-    bucket_sql = ",\n         ".join(buckets)
+    bucket_sql = _srp_bucket_sql()
     return f"""
 WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 batch AS (
@@ -1319,7 +1307,7 @@ SQL_EMBED_INCREMENTAL = _srp_incremental_sql()
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from feature_engineering_spark.operators.similarity import brute_force_topk
 
-    emb = _emb(spark, sf_dir)
+    emb = _t(spark, sf_dir, "embeddings")
     query = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     out = brute_force_topk(emb.where(F.col("vec_id") != 0), list(query), k=20)
     return out.select("vec_id", F.round("cosine", 4).alias("cosine"))
@@ -1366,7 +1354,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     force additionally property-tested in tests."""
     from feature_engineering_spark.operators.similarity import ivf_topk
 
-    emb = _emb(spark, sf_dir)
+    emb = _t(spark, sf_dir, "embeddings")
     cents = [
         (int(r["vec_id"]), list(r["embedding"]))
         for r in emb.where(F.col("vec_id") < 16).collect()
@@ -1381,7 +1369,7 @@ def q_clean_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical text-normalization pass, fingerprinted so the oracle
     verifies BYTE-identical normalized output (the input_hint's
     byte-identity invariant applied to the cleaning stage)."""
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     norm = TX.normalize_text(F.col("text"))
     return d.select(
         "doc_id",
@@ -1409,7 +1397,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset where Java regex and RE2 agree (operators/pii docstring)."""
     from feature_engineering_spark.operators.pii import pii_signals, scrub_text
 
-    d = _spread(_docs(spark, sf_dir)).withColumn(
+    d = _spread(_t(spark, sf_dir, "documents")).withColumn(
         "text",
         F.when(
             F.col("doc_id") % 7 == 0,
@@ -1464,7 +1452,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top 500 by (count desc, token). One explode + one map-side-combined
     groupBy + TakeOrdered — the word-count shape that stays one shuffle at
     any corpus size."""
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     tok = F.explode(F.split(TX.normalize_text(F.col("text")), " ")).alias("token")
     return (
         d.select(tok)
@@ -1496,7 +1484,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample is reproducible across runs/engines and the oracle is exact."""
     from feature_engineering_spark.operators.split import deterministic_sample
 
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     en = deterministic_sample(d.where(F.col("lang") == "en"), 0.10, key="doc_id")
     rest = deterministic_sample(d.where(F.col("lang") != "en"), 0.50, key="doc_id")
     return en.unionByName(rest).select("doc_id", "lang", "n_chars")
@@ -1526,7 +1514,7 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitions tf and df and AQE will still broadcast it at runtime if
     the dictionary turns out tiny. N (doc count) joins in lazily as a
     single-row broadcast cross join instead of a separate driver action."""
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     tok = d.select(
         "doc_id",
         F.explode(F.split(TX.normalize_text(F.col("text")), " ")).alias("term"),
@@ -1575,7 +1563,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ROUND(6) on both sides (order-summed ln terms, tfidf precedent)."""
     from feature_engineering_spark.operators.lm_score import unigram_nll
 
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     return unigram_nll(d).select(
         "doc_id", F.col("n_tok").cast("long").alias("n_tok"), "avg_nll"
     )
@@ -1666,7 +1654,7 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE operation order — integer thresholds match bit-for-bit."""
     from feature_engineering_spark.operators.split import domain_mix_sample
 
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     return domain_mix_sample(d, _MIX_WEIGHTS).select("doc_id", "lang", "n_chars")
 
 
@@ -1700,7 +1688,7 @@ def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's window cumsum matches bit-for-bit."""
     from feature_engineering_spark.operators.packing import pack_chunks
 
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     return pack_chunks(d, max_tokens=512, n_shards=8)
 
 
@@ -1740,7 +1728,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_media_from_ids,
     )
 
-    d = _spread(_docs(spark, sf_dir))
+    d = _spread(_t(spark, sf_dir, "documents"))
     media = synthesize_media_from_ids(d, id_col="doc_id")
     out = media_features(media, frame_stride=2)
     return out.select(

@@ -23,10 +23,7 @@ from feature_engineering_spark.operators.lagging import (
     rolling_causal_stats,
 )
 from feature_engineering_spark.operators.sessionize import sessionize
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from feature_engineering_spark.plans.data_queries import _t
 
 
 def _r6(c):
@@ -182,7 +179,10 @@ def q_group_topstats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "l_linestatus")
         .agg(_r6(F.min("l_quantity")).alias("p90_qty"))
     )
-    return stats.join(p90, ["l_returnflag", "l_linestatus"]).select(
+    # left join: a group whose l_quantity is all NULL has no counts rows,
+    # hence no p90 row; it keeps its stats with p90_qty NULL, like
+    # quantile_disc over an all-NULL group
+    return stats.join(p90, ["l_returnflag", "l_linestatus"], "left").select(
         "l_returnflag", "l_linestatus", "sum_qty", "revenue", "avg_qty",
         "min_qty", "max_qty", "n", "p90_qty",
     )

@@ -11,10 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from feature_engineering_spark.functions.timeutil import epoch_micros
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from feature_engineering_spark.plans.data_queries import _t
 
 
 # ---------------------------------------------------------------- P5

@@ -132,9 +132,11 @@ def _warmup(spark: SparkSession) -> None:
            .select(F.explode(F.col("a")).alias("e"), "v")
            .groupBy("e").agg(F.sum("v").alias("sv")))
     spark.sparkContext.setJobDescription("session-warmup (JIT)")
-    for q in (j1, j2, arr):
-        q.write.format("noop").mode("overwrite").save()
-    spark.sparkContext.setJobDescription(None)
+    try:
+        for q in (j1, j2, arr):
+            q.write.format("noop").mode("overwrite").save()
+    finally:
+        spark.sparkContext.setJobDescription(None)
 
 
 def get_spark(
@@ -168,9 +170,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0"
-            and not getattr(spark, "_fes_warmed", False)):
-        spark._fes_warmed = True  # once per session, even on getOrCreate reuse
+    if getattr(spark, "_fes_warmed", False):
+        return spark
+    # marked once per session, even on getOrCreate reuse or when opted out
+    spark._fes_warmed = True
+    if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
         try:
             _warmup(spark)
         except Exception as exc:  # never block session creation on warmup

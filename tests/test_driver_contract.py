@@ -100,3 +100,32 @@ def test_query_vs_oracle(spark, ddb, entry_mod, name):
         return
     exp = ddb.execute(oracles[name]).fetch_df()
     _assert_frames_match(got, exp, name)
+
+
+def test_group_topstats_keeps_all_null_quantity_group(spark, tmp_path):
+    """A (returnflag, linestatus) group whose l_quantity is all NULL has
+    no p90 candidate; DuckDB keeps the group with p90_qty NULL, and so
+    must the Spark plan."""
+    from feature_engineering_spark.plans.driver_queries import (
+        SQL_GROUP_TOPSTATS,
+        q_group_topstats,
+    )
+
+    li = pd.DataFrame({
+        "l_returnflag": ["A", "A", "A", "N", "N", "R"],
+        "l_linestatus": ["F", "F", "F", "O", "O", "F"],
+        "l_quantity": [1.0, 7.0, 3.0, None, None, 5.0],
+        "l_extendedprice": [10.0, 20.0, 30.0, 40.0, 50.0, 60.0],
+        "l_discount": [0.0, 0.1, 0.05, 0.0, 0.02, 0.1],
+    })
+    li.to_parquet(tmp_path / "lineitem.parquet", index=False)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'"
+    )
+    exp = con.execute(SQL_GROUP_TOPSTATS).fetch_df()
+    got = q_group_topstats(spark, str(tmp_path)).toPandas()
+    assert len(exp) == 3
+    _assert_frames_match(got, exp, "group_topstats_all_null")
+    null_group = got[got["l_returnflag"] == "N"]
+    assert null_group["p90_qty"].isna().all() and (null_group["n"] == 2).all()

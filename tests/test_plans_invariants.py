@@ -142,6 +142,20 @@ def test_winnow_pairs_plan_no_nlj(spark):
     assert "PythonUDF" not in plan and "ArrowEval" not in plan
 
 
+def test_embed_neardup_lsh_plan_no_nlj(spark):
+    """The SRP-LSH candidate join is a hash equi-join on (band, bucket)
+    — never a nested-loop/cartesian product — and signing plus the
+    cosine verify stay JVM expressions (no Python eval)."""
+    from feature_engineering_spark.operators.dedup import embedding_neardup_lsh
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    plan = _plan(embedding_neardup_lsh(emb, dim=64))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "PythonUDF" not in plan and "ArrowEval" not in plan
+    assert "BatchEvalPython" not in plan
+
+
 def test_trim_plan_no_nlj_semi_probe(spark):
     """Excision's source probe is a (broadcast) hash semi-join on the
     gram hash — no nested loops, no Python."""

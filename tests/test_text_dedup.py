@@ -523,6 +523,77 @@ def test_embed_incremental_matches_full_lsh(spark):
     assert len(in_batch) >= 3  # 4 planted in-batch pairs
 
 
+def _dropped(banded, cap):
+    from feature_engineering_spark.operators.dedup import lsh_dropped_bucket_stats
+
+    r = lsh_dropped_bucket_stats(banded, max_bucket_size=cap).collect()[0]
+    return r["n_dropped_buckets"], r["n_dropped_rows"], r["max_bucket_size_seen"]
+
+
+def test_minhash_incremental_intermediates_before_cap(spark):
+    """Probe contract: ``banded_new`` and ``hit`` are the frames BEFORE
+    their caps, so the drop stats see a planted over-cap batch bucket and
+    a planted over-cap corpus bucket; ``shingles`` is the cached batch
+    shingle frame. A genuine near-dup outside the caps is still found."""
+    from feature_engineering_spark.operators.dedup import (
+        minhash_banded,
+        minhash_lsh_incremental,
+    )
+
+    boiler = " ".join(f"w{i}" for i in range(30))
+    boiler2 = " ".join(f"v{i}" for i in range(30))
+    words = [f"u{i}" for i in range(30)]
+    corp_rows = [(i, boiler) for i in range(10)] + [(50, " ".join(words))]
+    batch_rows = [(100 + i, boiler2) for i in range(6)] + [
+        (200, boiler), (300, " ".join(words[:-1] + ["qqq"])),
+    ]
+    cols = ["doc_id", "text"]
+    corpus = spark.createDataFrame(pd.DataFrame(corp_rows, columns=cols))
+    batch = spark.createDataFrame(pd.DataFrame(batch_rows, columns=cols))
+    inter: dict = {}
+    pairs = minhash_lsh_incremental(
+        batch, corpus, minhash_banded(corpus), threshold=0.5,
+        max_bucket_size=4, intermediates=inter,
+    )
+    got = {(r["a"], r["b"]) for r in pairs.collect()}
+    assert got == {(50, 300)}
+    # 6 identical arrivals fill all 8 band buckets above the cap of 4
+    assert _dropped(inter["banded_new"], 4) == (8, 48, 6)
+    # the boiler arrival probes 8 corpus buckets of 10 rows each
+    assert _dropped(inter["hit"], 4) == (8, 80, 10)
+    assert inter["shingles"].is_cached
+    inter["shingles"].unpersist()
+
+
+def test_embedding_incremental_intermediates_before_cap(spark):
+    """Embedding twin of the probe-contract test: ``banded_new`` and
+    ``hit`` are uncapped, so planted over-cap buckets on each side show
+    up in the drop stats, and the capped clusters yield no pairs."""
+    from feature_engineering_spark.operators.dedup import (
+        embedding_lsh_incremental,
+        srp_banded,
+    )
+
+    v0 = np.random.default_rng(5).normal(size=16)
+    # -v0 flips every sign bit, so its 4-bit band buckets never meet v0's
+    corp_rows = [(i, v0.tolist()) for i in range(10)]
+    batch_rows = [(100 + i, (-v0).tolist()) for i in range(6)] + [
+        (200, v0.tolist())
+    ]
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(corp_rows, schema)
+    batch = spark.createDataFrame(batch_rows, schema)
+    index = srp_banded(corpus, dim=16, nbits=16, bands=4)
+    inter: dict = {}
+    pairs = embedding_lsh_incremental(
+        batch, corpus, index, dim=16, threshold=0.9, nbits=16, bands=4,
+        max_bucket_size=4, intermediates=inter,
+    )
+    assert pairs.count() == 0
+    assert _dropped(inter["banded_new"], 4) == (4, 24, 6)
+    assert _dropped(inter["hit"], 4) == (4, 40, 10)
+
+
 def test_line_repetition_hand_rows(spark):
     """Hand-computed duplicate-line signals: occurrence-weighted dup
     fraction, char coverage over non-space chars, empty-line skipping."""
