@@ -248,9 +248,10 @@ def feature_columns(signal: str) -> list[str]:
     return [f"{signal}-0_{name}" for name in FEATURE_NAMES]
 
 
-def compute_features_slow(x: np.ndarray) -> list[float]:
-    """Registry dispatch — the readable definition; used as the oracle for
-    the fused fast path below."""
+def compute_features(x: np.ndarray) -> list[float]:
+    """All 35 features of one window in FEATURE_NAMES order, by registry
+    dispatch — the readable definition. Tests and the pandas oracle use it
+    as the reference for ``compute_features_batch``, the production path."""
     x = np.asarray(x, dtype="float64")
     return [FEATURE_REGISTRY[name](x) for name in FEATURE_NAMES]
 
@@ -383,103 +384,3 @@ def compute_features_batch(
         out[sel] = _features_matrix(vals[gather])
     return out
 
-
-def compute_features(x: np.ndarray) -> list[float]:
-    """All 35 features in FEATURE_NAMES order — fused single pass.
-
-    Identical results to the registry (property-tested), ~6x faster by
-    sharing intermediates: one sort (median/percentiles/ECDF/unique), one
-    diff (all diff features + turning points + signal distance), one
-    moment sweep (std/var/skew/kurt/energy). This is the hot loop of the
-    whole engine: it runs once per (window x signal)."""
-    x = np.asarray(x, dtype="float64")
-    n = len(x)
-    nan = float("nan")
-
-    s = np.sort(x)
-    mn, mx = float(s[0]), float(s[-1])
-    mean = float(x.mean())
-    median = float(s[n // 2]) if n % 2 == 1 else float(0.5 * (s[n // 2 - 1] + s[n // 2]))
-
-    dvec = x - mean
-    d2 = dvec * dvec
-    m2 = float(d2.mean())
-    var = m2
-    std = float(np.sqrt(m2))
-    e = x * x
-    abs_energy = float(e.sum())
-    rms = float(np.sqrt(abs_energy / n))
-    mean_ad = float(np.abs(dvec).mean())
-    med_ad = float(np.median(np.abs(x - median)))
-    q25, q75 = np.percentile(s, [25, 75])
-    iqr = float(q75 - q25)
-    if m2 == 0:
-        skew, kurt = 0.0, -3.0
-    else:
-        # d**3 / d**4 (not (d^2)*d forms): bit-identical to the registry
-        skew = float(np.mean(dvec ** 3) / m2 ** 1.5)
-        kurt = float(np.mean(dvec ** 4) / (m2 * m2) - 3.0)
-
-    if n > 20:
-        # ECDF: smallest sorted value with cumfrac >= p. searchsorted on the
-        # cumfrac grid reproduces the registry's `(i+1)/n >= p` comparison
-        # bit-for-bit (ceil(p*n) does NOT at IEEE boundaries, e.g. 0.05*40).
-        y = np.arange(1, n + 1) / n
-        def ecdf(p):
-            return float(s[np.searchsorted(y, p, side="left")])
-        e005, e01, e02, e08 = ecdf(0.05), ecdf(0.10), ecdf(0.20), ecdf(0.80)
-    else:
-        e005 = e01 = e02 = e08 = nan
-
-    total_energy = abs_energy / ((n - 1) / _FS) if n >= 2 else nan
-    if n >= 2:
-        dif = np.diff(x)
-        adif = np.abs(dif)
-        auc = float(np.sum(0.5 * (1.0 / _FS) * np.abs(x[:-1] + x[1:])))
-        mean_diff = float(dif.mean())
-        median_diff = float(np.median(dif))
-        mean_abs_diff = float(adif.mean())
-        median_abs_diff = float(np.median(adif))
-        sum_abs_diff = float(adif.sum())
-        signal_dist = float(np.sum(np.sqrt(1.0 + dif * dif)))
-        t = np.arange(n, dtype="float64")
-        tc = t - t.mean()
-        slope = float(np.sum(tc * dvec) / np.sum(tc * tc))
-        if n >= 3:
-            pos_turn = float(np.sum((dif[:-1] > 0) & (dif[1:] < 0)))
-            neg_turn = float(np.sum((dif[:-1] < 0) & (dif[1:] > 0)))
-        else:
-            pos_turn = neg_turn = 0.0
-    else:
-        auc = mean_diff = median_diff = mean_abs_diff = nan
-        median_abs_diff = sum_abs_diff = signal_dist = slope = nan
-        pos_turn = neg_turn = 0.0
-
-    # centroid over t = arange(n)/fs
-    te = float(np.dot(np.arange(n, dtype="float64") / _FS, e))
-    centroid = 0.0 if (abs_energy == 0 or te == 0) else te / abs_energy
-
-    # entropy from the sorted array (unique counts without re-sorting)
-    change = np.flatnonzero(s[1:] != s[:-1])
-    counts = np.diff(np.r_[0, change + 1, n])
-    p = counts / n
-    p = p[p != 0]
-    entropy = (
-        0.0
-        if (n <= 1 or np.log2(n) == 0 or len(p) == 1)
-        else float(-np.sum(p * np.log2(p)) / np.log2(n))
-    )
-
-    zcr = float(len(np.where(np.diff(np.sign(x)))[0]))
-    npeaks = f_neighbourhood_peaks(x)
-    pkpk = float(abs(mx - mn))
-
-    return [
-        mean, median, mx, mn, mx - mn, std, var, rms, mean_ad, med_ad, iqr,
-        skew, kurt, e005, e01, e02, e08, abs_energy, total_energy, auc,
-        f_autocorr(x),  # == sum(x^2) per tsfel 0.1.3; np.correlate for
-        # bit-identity with the registry (BLAS summation order)
-        centroid, entropy, mean_diff, median_diff, mean_abs_diff,
-        median_abs_diff, sum_abs_diff, signal_dist, slope, zcr,
-        pos_turn, neg_turn, npeaks, pkpk,
-    ]

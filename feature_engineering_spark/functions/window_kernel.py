@@ -54,7 +54,16 @@ def make_partition_window_mapper(
     Arrow batch + the open group, which stays cache-resident. Numerics
     are unchanged: windows never cross group boundaries, and every group
     is processed whole.
+
+    Raises ``ValueError`` on the driver for ``step <= 0`` or
+    ``min_points < 1``: the grid would be empty or unbounded, or a window
+    of zero points would reach the kernel, and either would only fail
+    (or silently yield nothing) inside a Python worker.
     """
+    if step <= 0:
+        raise ValueError(f"step must be > 0, got {step}")
+    if min_points < 1:
+        raise ValueError(f"min_points must be >= 1, got {min_points}")
     group_cols = [key] if bounds_cols is None else [key, "__chunk"]
 
     def _process(pdf):

@@ -13,35 +13,29 @@ Our key is equality on the entity (``url``) plus time as-of on ``warc_ts``
 (north_rule). Matching is strictly causal for ``direction='backward'``: a
 left row at time T never reads a right row with ts > T.
 
-Two physical strategies, same semantics:
-
-``strategy='union'`` (default — pure JVM, no Python):
-    Tag and union both inputs, hash-shuffle once on the key, sort each
-    partition by (ts, tag), and carry the most recent right-side row to
-    each left row with ``last(ignorenulls=True)`` over a running window
-    (``first`` over the following window for ``direction='forward'``).
-    Cost: ONE shuffle of |L|+|R| rows, no join node, no Python worker.
-    AQE handles partition coalescing. This is the plan we want at 100 TB:
-    sort-merge-like locality without materializing a join.
-
-``strategy='cogroup'`` (Arrow/pandas):
-    ``left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas`` running
-    ``pd.merge_asof`` per key group — the shape the north_star describes.
-    Useful when per-group logic grows beyond what window frames express
-    (interpolation, multi-column tolerances). One shuffle per side plus an
-    Arrow hop; the union strategy usually wins, benchmarked in bench.py.
+One physical plan (pure JVM, no Python): tag and union both inputs,
+hash-shuffle once on the key, sort each partition by (ts, tag), and carry
+the most recent right-side row to each left row with
+``last(ignorenulls=True)`` over a running window (``first`` over the
+following window for ``direction='forward'``). Cost: ONE shuffle of
+|L|+|R| rows, no join node, no Python worker. AQE handles partition
+coalescing. This is the co-partitioned, time-ordered evaluation the
+temporal-join literature argues for: sort-merge-like locality without
+materializing a join.
 
 Tie semantics match ``pd.merge_asof`` / DuckDB ``ASOF JOIN``:
 backward = latest right with rts <= lts (exact match allowed);
 forward = earliest right with rts >= lts. Duplicate right timestamps are
-broken deterministically by the last column in ``right_order``.
+broken by ``right_tiebreak``: for ``backward`` the row with the largest
+tiebreak wins, for ``forward`` the smallest — what ``merge_asof`` picks
+from a right side sorted by (ts, tiebreak). Without ``right_tiebreak``
+the winner among duplicates depends on partition order.
 """
 
 from __future__ import annotations
 
 from typing import Iterable
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -62,7 +56,6 @@ def asof_join(
     tolerance_seconds: float | None = None,
     right_cols: list[str] | None = None,
     suffix: str = "_r",
-    strategy: str = "union",
     right_tiebreak: str | None = None,
 ) -> DataFrame:
     """Left as-of join: every left row, plus the matched right row's columns
@@ -80,17 +73,10 @@ def asof_join(
         right_cols = [c for c in right.columns if c not in keys and c != rts]
     out_names = [c + suffix if c in left.columns else c for c in right_cols]
 
-    if strategy == "union":
-        return _asof_union(
-            left, right, keys, left_ts, rts, direction,
-            tolerance_seconds, right_cols, out_names, right_tiebreak,
-        )
-    if strategy == "cogroup":
-        return _asof_cogroup(
-            left, right, keys, left_ts, rts, direction,
-            tolerance_seconds, right_cols, out_names,
-        )
-    raise ValueError(f"unknown strategy {strategy}")
+    return _asof_union(
+        left, right, keys, left_ts, rts, direction,
+        tolerance_seconds, right_cols, out_names, right_tiebreak,
+    )
 
 
 def _asof_union(
@@ -171,52 +157,6 @@ def _asof_union(
     )
 
 
-def _asof_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    lts: str,
-    rts: str,
-    direction: str,
-    tol: float | None,
-    right_cols: list[str],
-    out_names: list[str],
-) -> DataFrame:
-    import pyspark.sql.types as T
-
-    rschema = {f.name: f.dataType for f in right.schema.fields}
-    out_fields = list(left.schema.fields) + [
-        T.StructField("matched_ts", T.TimestampType(), True)
-    ] + [T.StructField(n, rschema[c], True) for c, n in zip(right_cols, out_names)]
-    out_schema = T.StructType(out_fields)
-    lcols = list(left.columns)
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        lpdf = lpdf.sort_values(lts, kind="stable")
-        rp = rpdf[[rts] + right_cols].rename(
-            columns={rts: "matched_ts", **dict(zip(right_cols, out_names))}
-        ).sort_values("matched_ts", kind="stable")
-        rp = rp.assign(__mts=rp["matched_ts"])
-        kw = {}
-        if tol is not None:
-            kw["tolerance"] = pd.Timedelta(seconds=float(tol))
-        m = pd.merge_asof(
-            lpdf, rp, left_on=lts, right_on="__mts",
-            direction=direction, **kw,
-        )
-        return m[lcols + ["matched_ts"] + out_names]
-
-    # cogroup shuffles each side once by key; merge_asof runs per Arrow
-    # group — the north_star's repartition+sorted-grouped-map shape.
-    return (
-        left.groupBy(*keys)
-        .cogroup(right.groupBy(*keys))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
 def backfill_asof(
     left: DataFrame,
     right: DataFrame,
@@ -225,7 +165,6 @@ def backfill_asof(
     right_ts: str | None = None,
     value: str = "iri",
     tolerance_seconds: float | None = None,
-    strategy: str = "union",
     right_tiebreak: str | None = None,
 ) -> DataFrame:
     """Backward + forward as-of in one pass with linear interpolation —
@@ -238,15 +177,13 @@ def backfill_asof(
     """
     b = asof_join(
         left, right, on, left_ts, right_ts, "backward",
-        tolerance_seconds, [value], strategy=strategy,
-        right_tiebreak=right_tiebreak,
+        tolerance_seconds, [value], right_tiebreak=right_tiebreak,
     ).withColumnRenamed("matched_ts", "prev_ts").withColumnRenamed(
         value if value not in left.columns else value + "_r", f"{value}_prev"
     )
     f_ = asof_join(
         b, right, on, left_ts, right_ts, "forward",
-        tolerance_seconds, [value], strategy=strategy,
-        right_tiebreak=right_tiebreak,
+        tolerance_seconds, [value], right_tiebreak=right_tiebreak,
     ).withColumnRenamed("matched_ts", "next_ts").withColumnRenamed(
         value if value not in b.columns else value + "_r", f"{value}_next"
     )

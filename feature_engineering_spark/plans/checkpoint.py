@@ -225,17 +225,13 @@ class Pipeline:
         name: str,
         fn: Callable[[], DataFrame],
         ts_col: str | None = None,
-        repartition: int | None = None,
     ) -> DataFrame:
         loc = self._table(name)
         if self.io.exists(self.spark, loc):
             self._emit_metric(name, "skipped_existing", 0.0, None)
             return self.io.read(self.spark, loc)
         t0 = time.monotonic()
-        df = fn()
-        if repartition:
-            df = df.repartition(repartition)
-        self.io.write(self.spark, df, loc)
+        self.io.write(self.spark, fn(), loc)
         out = self.io.read(self.spark, loc)
         lineage = _lineage_rows(out, name, ts_col)
         self.io.append(self.spark, lineage, self.ledger_path)

@@ -347,7 +347,7 @@ FROM (
 # ---------------------------------------------------------------- J3/J4
 def q_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of: each click joined to the user's latest purchase at or
-    before it (strictly causal). Union+window strategy — one shuffle."""
+    before it (strictly causal). Union+window plan — one shuffle."""
     from feature_engineering_spark.operators.asof import asof_join
 
     ev = _t(spark, sf_dir, "events")
@@ -355,7 +355,7 @@ def q_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.where(F.col("event_type") == "purchase")
     j = asof_join(
         clicks, purchases, on="user_id", left_ts="ts",
-        right_cols=["value"], direction="backward", strategy="union",
+        right_cols=["value"], direction="backward",
         right_tiebreak="event_id",
     )
     return j.select(
@@ -386,8 +386,7 @@ def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = asof_join(
         clicks, purchases, on="user_id", left_ts="ts",
         right_cols=["value"], direction="backward",
-        tolerance_seconds=600.0, strategy="union",
-        right_tiebreak="event_id",
+        tolerance_seconds=600.0, right_tiebreak="event_id",
     )
     return j.select(
         "event_id", "user_id",

@@ -126,7 +126,7 @@ def streaming_asof_enrich(
 
     Spark has no native stream-static ASOF join, so the idiomatic lift is
     per-micro-batch: ``foreachBatch`` hands each micro-batch to the SAME
-    batch ``asof_join`` (union+window strategy, one shuffle of
+    batch ``asof_join`` (union+window plan, one shuffle of
     |batch|+|right|), preserving the batch operator's exact semantics —
     including tolerance and tiebreak — instead of re-implementing them.
     Returns a function for ``writeStream.foreachBatch`` that enriches and
@@ -144,7 +144,7 @@ def streaming_asof_enrich(
             batch_df, static_right, on=on, left_ts=left_ts,
             right_ts=right_ts, right_cols=right_cols,
             direction="backward", tolerance_seconds=tolerance_seconds,
-            strategy="union", right_tiebreak=right_tiebreak,
+            right_tiebreak=right_tiebreak,
         )
         sink_fn(out, batch_id)
 

@@ -3,9 +3,14 @@ written in the reference's row-wise loop style (mirrors
 /root/reference/utils/data_loaders.py:450-502 semantics: inclusive
 ``between`` membership, ``[:-1]`` exclusive-end slice, min-points drop,
 grid snapped to step). Used by pytest to validate the Spark engine via
-np.allclose per entity x window (FIXTURES.md F3)."""
+np.allclose per entity x window (FIXTURES.md F3).
+
+Also home of ``value_hash``, the one strict query-vs-oracle comparator:
+``tools/driver_sim.py`` and ``tests/test_driver_contract.py`` both use it."""
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -61,3 +66,17 @@ def oracle_text_signals(pdf: pd.DataFrame) -> pd.DataFrame:
         n_tokens=n_tokens.astype("float64"),
         digit_ratio=np.where(t.str.len() > 0, n_digits / t.str.len(), 0.0),
     )
+
+
+def value_hash(pdf: pd.DataFrame) -> str:
+    """Order-insensitive value hash of a result frame: columns sorted,
+    floats rounded to 6 places, every value as text, rows sorted, sha256.
+    Dtype drift between engines (e.g. a HUGEINT sum, a float32 similarity)
+    changes the text and so the hash."""
+    pdf = pdf[sorted(pdf.columns)].copy()
+    for c in pdf.columns:
+        if pd.api.types.is_float_dtype(pdf[c]):
+            pdf[c] = pdf[c].round(6)
+        pdf[c] = pdf[c].astype(str)
+    lines = sorted("|".join(r) for r in pdf.itertuples(index=False))
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]

@@ -24,17 +24,18 @@ def _oracle_asof(pages, labels, direction="backward", tol=None):
     return pd.concat(out, ignore_index=True)
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup"])
+# the ids name the union/window plan that every case runs through
 @pytest.mark.parametrize("direction,tol", [
-    ("backward", None), ("forward", None), ("backward", 3600.0),
+    pytest.param("backward", None, id="backward-None-union"),
+    pytest.param("forward", None, id="forward-None-union"),
+    pytest.param("backward", 3600.0, id="backward-3600.0-union"),
 ])
 def test_asof_matches_merge_asof(spark, pages_pdf, labels_pdf, pages_df, labels_df,
-                                 strategy, direction, tol):
+                                 direction, tol):
     got = (
         asof_join(
             pages_df, labels_df, on="url", left_ts="warc_ts", right_ts="label_ts",
             direction=direction, tolerance_seconds=tol, right_cols=["iri"],
-            strategy=strategy,
         )
         .select("url", "warc_ts", "matched_ts", "iri")
         .toPandas()
@@ -76,22 +77,31 @@ def test_asof_exact_ts_match_included(spark):
 
 def test_asof_dup_right_ts_tiebreak(spark):
     """Duplicate right timestamps with right_tiebreak: the max-tiebreak row
-    wins for backward (deterministic across partitionings)."""
-    left = pd.DataFrame({
-        "url": ["u"], "warc_ts": pd.to_datetime(["2024-01-01 12:00"])
-    })
+    wins for backward and the min-tiebreak row for forward, as merge_asof
+    picks from a right side sorted by (ts, tiebreak); deterministic across
+    partitionings."""
     right = pd.DataFrame({
         "url": ["u"] * 3,
         "label_ts": pd.to_datetime(["2024-01-01 10:00"] * 3),
         "rid": [2, 0, 1],
         "iri": [20.0, 0.0, 10.0],
     })
-    out = asof_join(
-        spark.createDataFrame(left), spark.createDataFrame(right),
-        on="url", left_ts="warc_ts", right_ts="label_ts",
-        right_cols=["iri"], right_tiebreak="rid",
-    ).collect()[0]
-    assert out["iri"] == 20.0  # rid=2 wins
+    for direction, left_ts, exp in [
+        ("backward", "2024-01-01 12:00", 20.0),  # rid=2 wins
+        ("forward", "2024-01-01 09:00", 0.0),  # rid=0 wins
+    ]:
+        left = pd.DataFrame({"url": ["u"], "warc_ts": pd.to_datetime([left_ts])})
+        out = asof_join(
+            spark.createDataFrame(left), spark.createDataFrame(right),
+            on="url", left_ts="warc_ts", right_ts="label_ts", direction=direction,
+            right_cols=["iri"], right_tiebreak="rid",
+        ).collect()[0]
+        assert out["iri"] == exp, direction
+        oracle = pd.merge_asof(
+            left, right.sort_values(["label_ts", "rid"]), left_on="warc_ts",
+            right_on="label_ts", by="url", direction=direction,
+        )
+        assert oracle["iri"].tolist() == [exp], direction
 
 
 def test_asof_no_label_urls_null(spark, pages_df, labels_df, labels_pdf):

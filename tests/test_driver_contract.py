@@ -1,17 +1,17 @@
 """Local simulation of the driver's correctness gate: run every
 ``queries()`` entry on /root/testdata/sf0.01 and compare with the matching
-``oracle_sql()`` in DuckDB — row count, column names, and order-insensitive
-value equality."""
+``oracle_sql()`` in DuckDB — row count, column names, and the strict
+order-insensitive ``value_hash`` that tools/driver_sim.py applies."""
 
 from __future__ import annotations
 
 import importlib.util
-import math
 
 import duckdb
-import numpy as np
 import pandas as pd
 import pytest
+
+from tests.oracle import value_hash
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -40,42 +40,14 @@ def ddb():
     return con
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object and len(df) and isinstance(df[c].dropna().iloc[0] if df[c].notna().any() else "", (list, np.ndarray)):
-            df[c] = df[c].map(lambda v: tuple(v) if v is not None else None)
-    # Sort on the driver's 6-decimal grid (value_hash rounds floats before
-    # hashing): raw-emitted stats may differ between engines in the last
-    # ulp, and sorting on raw floats would misalign otherwise-equal rows.
-    key = df.copy()
-    for c in key.columns:
-        if pd.api.types.is_float_dtype(key[c]):
-            key[c] = key[c].round(6)
-    order = key.sort_values(
-        list(key.columns), kind="stable", na_position="last"
-    ).index
-    return df.loc[order].reset_index(drop=True)
-
-
 def _assert_frames_match(got: pd.DataFrame, exp: pd.DataFrame, name: str):
     assert len(got) == len(exp), f"{name}: rows {len(got)} != {len(exp)}"
     assert sorted(got.columns) == sorted(exp.columns), (
         f"{name}: cols {sorted(got.columns)} != {sorted(exp.columns)}"
     )
-    g, e = _canon(got), _canon(exp)
-    for c in g.columns:
-        gv, ev = g[c], e[c]
-        if pd.api.types.is_float_dtype(gv) or pd.api.types.is_float_dtype(ev):
-            ok = np.allclose(
-                gv.astype("float64").to_numpy(),
-                ev.astype("float64").to_numpy(),
-                rtol=1e-9, atol=1e-9, equal_nan=True,
-            )
-        else:
-            gn, en = gv.isna(), ev.isna()
-            ok = bool((gn == en).all() and (gv[~gn].to_numpy() == ev[~en].to_numpy()).all())
-        assert ok, f"{name}: column {c} mismatch\n{gv.head()}\nvs\n{ev.head()}"
+    assert value_hash(got) == value_hash(exp), (
+        f"{name}: values differ\n{got.dtypes}\n{got.head()}\nvs\n{exp.dtypes}\n{exp.head()}"
+    )
 
 
 def test_entry_smoke(spark, entry_mod):

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
+from feature_engineering_spark.operators.skew import salted_window_features
 from feature_engineering_spark.operators.windows import (
     derive_text_signals,
     sliding_window_features,
@@ -97,6 +99,38 @@ def test_min_points_drop(spark):
         window_size=600.0, step=600.0, min_points=10,
     ).toPandas()
     assert len(got) == 0
+
+
+def test_include_sequences(spark):
+    """include_sequences carries each window's in-window signal (after the
+    exclusive-end slice) as ``<signal>_seq``, one value per counted point."""
+    ts = pd.to_datetime(np.arange(12) * 60.0, unit="s")
+    pdf = pd.DataFrame({"url": "u", "warc_ts": ts, "x": np.arange(12, dtype="float64")})
+    got = sliding_window_features(
+        spark.createDataFrame(pdf), signals=("x",),
+        window_size=600.0, step=600.0, min_points=1, include_sequences=True,
+    ).toPandas().sort_values("win_start").reset_index(drop=True)
+    assert [list(s) for s in got["x_seq"]] == [
+        [float(i) for i in range(10)], [10.0]
+    ]
+    assert (got["n_points"] == got["x_seq"].map(len)).all()
+
+
+@pytest.mark.parametrize(
+    "op", [sliding_window_features, salted_window_features], ids=["sliding", "salted"]
+)
+@pytest.mark.parametrize("bad", [
+    dict(min_points=0), dict(step=0.0), dict(step=-60.0),
+], ids=["min_points=0", "step=0", "step=-60"])
+def test_window_geometry_checked_on_driver(spark, op, bad):
+    """A window geometry that cannot yield windows raises when the plan is
+    built, before any action reaches a Python worker."""
+    pdf = pd.DataFrame({
+        "url": "u", "warc_ts": pd.to_datetime([0, 100], unit="s"), "v": [1.0, 2.0],
+    })
+    kw = dict(signals=("v",), window_size=600.0, step=60.0, min_points=1)
+    with pytest.raises(ValueError, match="min_points|step"):
+        op(spark.createDataFrame(pdf), **{**kw, **bad})
 
 
 def test_window_leakage_probe(spark, pages_pdf):

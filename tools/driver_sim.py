@@ -1,18 +1,22 @@
 """Simulate the spark-graft driver: import __spark_entry__ by path from a
 clean process, smoke entry(), then run every queries() entry at sf0.01 and
-compare to oracle_sql() via DuckDB with an order-insensitive value hash."""
-import hashlib
+compare to oracle_sql() via DuckDB with the order-insensitive value hash
+of tests/oracle.py."""
 import importlib.util
 import json
+import os
 import sys
 
 import duckdb
-import pandas as pd
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+from tests.oracle import value_hash  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(ROOT, "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 
@@ -36,16 +40,6 @@ assert len(rows) > 0
 con = duckdb.connect()
 for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-
-def value_hash(pdf: pd.DataFrame) -> str:
-    pdf = pdf[sorted(pdf.columns)].copy()
-    for c in pdf.columns:
-        if pd.api.types.is_float_dtype(pdf[c]):
-            pdf[c] = pdf[c].round(6)
-        pdf[c] = pdf[c].astype(str)
-    lines = sorted("|".join(r) for r in pdf.itertuples(index=False))
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
 qs, oracles = mod.queries(), mod.oracle_sql()
