@@ -8,7 +8,9 @@ Usage:
 
 Prints one JSON line: {"sf_dir": ..., "load": [...], "queries": {name:
 [sec, ...]}}. --explain-dir writes <query>_<suffix>.txt with
-explain("formatted") for each selected query (no execution).
+explain("formatted") for each selected query (no execution), normalized
+by ``_normalize_plan`` so dumps of two builds diff only where the plans
+differ.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -29,6 +32,15 @@ DEFAULT = [
     "window_features_35", "group_topstats", "join_orders_customer",
     "text_quality", "dedup_exact", "minhash_lsh_dedup", "ann_topk",
 ]
+
+
+def _normalize_plan(plan: str) -> str:
+    """Strip the ids that differ between two builds of the same plan:
+    expression ids (``#12``, ``#12L``), lambda-variable suffixes
+    (``lambda x_7``) and plan ids (``plan_id=1108``)."""
+    plan = re.sub(r"#\d+L?", "", plan)
+    plan = re.sub(r"(lambda \w+?)_\d+", r"\1", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=", plan)
 
 
 def main() -> None:
@@ -55,8 +67,8 @@ def main() -> None:
             df = QUERIES[name](spark, args.sf_dir)
             path = os.path.join(args.explain_dir, f"{name}_{args.suffix}.txt")
             with open(path, "w") as f:
-                f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
+                f.write(_normalize_plan(df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")))
             print(f"wrote {path}", file=sys.stderr)
         return
 

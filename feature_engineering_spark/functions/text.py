@@ -1,20 +1,36 @@
 """Text-analysis functions for web-scale training-data pipelines:
-language-ID, quality scoring, token counting, document fingerprinting.
+language-ID, quality scoring, token counting, document fingerprinting,
+shingling.
+
+This is the only module that defines a text signal and the only one that
+stages one. Higher-order functions (transform/filter/aggregate) run
+interpreted with no subexpression elimination, so a Column that
+references a derived token array N times re-derives it N times per row.
+The three frame builders project each derived array ONCE in its own
+select and read the attribute afterwards (CollapseProject keeps such a
+stage because its alias is non-cheap and multiply-referenced):
+
+- ``shingle_frame``: (id, sh) word or char shingles — MinHash, n-gram
+  Jaccard and contamination all shingle through it;
+- ``text_scores``: quality, lang_guess and the ratios quality is built
+  from, over one lower-cased token array;
+- ``simhash_frame``: the SimHash over one token-hash array.
 
 All pure JVM column expressions (whole-stage codegen, no Python) — these
 run per page over the full corpus, so they must live on the scan side of
-the first shuffle. Each has an exact DuckDB-SQL twin in
-plans/driver_queries.py; cross-engine-stable primitives only (md5, conv,
+the first shuffle. The scored signals have exact DuckDB-SQL twins in
+plans/data_queries.py (SQL_TEXT_QUALITY, SQL_LANG_ID,
+SQL_DOC_FINGERPRINT); cross-engine-stable primitives only (md5, conv,
 regexp with ASCII classes, single-space split).
 
 The reference analog is the JSON-message flatten + derived scalar layer
-(/root/reference/utils/data_loaders.py:178-199, 382) — the per-row scalar
+(the reference's utils/data_loaders.py:178-199, 382) — the per-row scalar
 function surface of the engine, generalized to text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tiny per-language stopword lists (public common-word lists, truncated).
@@ -44,25 +60,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(F.expr(f"regexp_extract_all(text, '{BPE_ISH_PATTERN}', 0)"))
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    toks = F.array_distinct(ws_tokens(F.lower(text)))
-    return {
-        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
-        for lang, words in STOPWORDS.items()
-    }
-
-
-def lang_id(text: Column) -> Column:
-    """Argmax stopword-hit language, 'und' when no hits; ties broken by
-    _LANG_ORDER (first wins)."""
-    scores = lang_scores(text)
-    best = F.greatest(*scores.values())
-    expr = F.lit("und")
-    for lang in reversed(_LANG_ORDER):
-        expr = F.when((scores[lang] == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
-
-
 def punct_ratio(text: Column) -> Column:
     n = F.length(text)
     stripped = F.length(F.regexp_replace(text, "[.,!?;:]", ""))
@@ -75,24 +72,67 @@ def digit_ratio(text: Column) -> Column:
     return F.when(n > 0, (n - stripped) / n).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = ws_tokens(F.lower(text))
-    stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
+def _words(words: list[str]) -> Column:
+    return F.array(*[F.lit(w) for w in words])
 
 
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic: enough tokens, some stopwords,
-    not digit/punct-heavy. The exact formula is the contract (oracle-
-    matched), not a claim of linguistic truth."""
-    n_tok = ws_token_count(text)
-    return (
-        F.lit(0.4) * F.least(F.lit(1.0), n_tok / F.lit(100.0))
-        + F.lit(0.3) * stopword_ratio(text)
-        + F.lit(0.15) * (F.lit(1.0) - digit_ratio(text))
-        + F.lit(0.15) * (F.lit(1.0) - punct_ratio(text))
+def text_scores(df: DataFrame, text: str = "text") -> DataFrame:
+    """``df``'s columns followed by the scored signals of ``text``:
+
+    - ``ws_tokens``: single-space token count;
+    - ``punct_ratio``, ``digit_ratio``: share of [.,!?;:] / [0-9] chars;
+    - ``stopword_ratio``: share of lower-cased tokens in the English
+      stopword list;
+    - ``quality``: composite [0,1] heuristic — enough tokens, some
+      stopwords, not digit/punct-heavy (0.4 / 0.3 / 0.15 / 0.15 weights);
+    - ``lang_guess``: argmax stopword-hit language over the distinct
+      lower-cased tokens, 'und' when no hits; ties go to the first
+      language of ``_LANG_ORDER``.
+
+    The ratios are unrounded. The exact formulas are the contract
+    (oracle-matched), not a claim of linguistic truth. Staged: the
+    lower-cased token array, then the ratios and the distinct token set,
+    then the five per-language hit counts, then their maximum, then
+    quality and the argmax read off those attributes."""
+    t = F.col(text)
+    keep = [F.col(f"`{c}`") for c in df.columns]
+    toks = df.select(*keep, ws_tokens(F.lower(t)).alias("__ltoks"))
+    lt = F.col("__ltoks")
+    stop = _words(STOPWORDS["en"])
+    hits = F.size(F.filter(lt, lambda x: F.array_contains(stop, x)))
+    ratios = toks.select(
+        *keep,
+        ws_token_count(t).alias("ws_tokens"),
+        punct_ratio(t).alias("punct_ratio"),
+        digit_ratio(t).alias("digit_ratio"),
+        F.when(F.size(lt) > 0, hits / F.size(lt))
+        .otherwise(F.lit(0.0))
+        .alias("stopword_ratio"),
+        F.array_distinct(lt).alias("__dtoks"),
     )
+    out = [*keep, "ws_tokens", "punct_ratio", "digit_ratio", "stopword_ratio"]
+    scores = ratios.select(
+        *out,
+        *[
+            F.size(F.array_intersect(F.col("__dtoks"), _words(words))).alias(
+                f"__s_{lang}"
+            )
+            for lang, words in STOPWORDS.items()
+        ],
+    )
+    s = {lang: F.col(f"__s_{lang}") for lang in _LANG_ORDER}
+    ranked = scores.select("*", F.greatest(*s.values()).alias("__best"))
+    best = F.col("__best")
+    lang = F.lit("und")
+    for code in reversed(_LANG_ORDER):
+        lang = F.when((s[code] == best) & (best > 0), F.lit(code)).otherwise(lang)
+    quality = (
+        F.lit(0.4) * F.least(F.lit(1.0), F.col("ws_tokens") / F.lit(100.0))
+        + F.lit(0.3) * F.col("stopword_ratio")
+        + F.lit(0.15) * (F.lit(1.0) - F.col("digit_ratio"))
+        + F.lit(0.15) * (F.lit(1.0) - F.col("punct_ratio"))
+    )
+    return ranked.select(*out, quality.alias("quality"), lang.alias("lang_guess"))
 
 
 def md5_fingerprint(text: Column) -> Column:
@@ -116,25 +156,22 @@ def rolling_hash(text: Column, base: int = 31, mod: int = 2147483647) -> Column:
     )
 
 
-def simhash64(text: Column, nbits: int = 60) -> Column:
-    """SimHash over whitespace tokens with md5-derived 60-bit token hashes:
-    bit b of the result = 1 iff sum over tokens of (+1 if token-hash bit b
-    set else -1) > 0. Pure JVM (aggregate over a per-bit transform).
+def simhash_frame(
+    df: DataFrame, text: str = "text", nbits: int = 60, name: str = "simhash"
+) -> DataFrame:
+    """``df``'s columns followed by ``name``: the SimHash of ``text`` over
+    whitespace tokens with md5-derived 60-bit token hashes — bit b is 1
+    iff the sum over tokens of (+1 if token-hash bit b is set else -1) is
+    > 0. Pure JVM (aggregate over a per-bit vote).
 
-    NOTE: ``nbits`` per-bit aggregates each reference the token-hash
-    array; in one projection the md5 transform re-runs per reference
-    (interpreted HOFs have no subexpression elimination). Hot paths
-    should stage the hash array in its own select and call
-    ``simhash_from_hashes`` on the attribute."""
-    toks = ws_tokens(text)
-    hashes = F.transform(toks, lambda t: token_hash64(t))
-    return simhash_from_hashes(hashes, nbits)
-
-
-def simhash_from_hashes(hashes: Column, nbits: int = 60) -> Column:
-    """``simhash64`` over an already-materialized token-hash array — pass
-    an ATTRIBUTE so the per-bit aggregates read the array instead of
-    re-deriving it."""
+    Staged: the ``nbits`` per-bit aggregates each read the token-hash
+    array, so it is projected once first — inline, the md5 transform
+    would re-run per bit."""
+    keep = [F.col(f"`{c}`") for c in df.columns]
+    staged = df.select(
+        *keep, F.transform(ws_tokens(F.col(text)), token_hash64).alias("__th")
+    )
+    hashes = F.col("__th")
 
     def _vote(b: int):
         # closure factory: pyspark higher-order lambdas must take exactly
@@ -151,44 +188,14 @@ def simhash_from_hashes(hashes: Column, nbits: int = 60) -> Column:
     out = F.lit(0).cast("long")
     for b, vote in enumerate(bit_votes):
         out = out + F.when(vote > 0, F.lit(2**b).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
+    return staged.select(*keep, out.alias(name))
 
 
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def word_ngrams_all(text: Column, n: int = 2) -> Column:
-    """ALL word n-gram occurrences (multiset semantics — unlike
-    word_shingles, duplicates are kept): the input to repetition /
-    frequency statistics where COUNTS matter, not membership."""
-    toks = ws_tokens(text)
-    m = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), m - n), lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
-    )
-    # guard m < n: sequence(0, negative) would DESCEND, not be empty
-    return F.when(m >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (set semantics) of the single-space
-    tokenization. JVM: transform over a sequence of start offsets.
-
-    NOTE: references the token split several times (size guard, sequence
-    bound, slice source). Higher-order functions evaluate interpreted with
-    no subexpression elimination, so when this Column lands in one
-    projection the split re-runs per reference. Hot paths should stage
-    the split in its own select and use ``word_shingles_from_tokens``
-    (operators/dedup._shingle_frame does exactly that)."""
-    return word_shingles_from_tokens(ws_tokens(text), n)
-
-
-def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """``word_shingles`` over an already-materialized token-array column —
-    pass an ATTRIBUTE (a column projected in a previous select) so the
-    multiple references here are cheap per-row array reads, not repeated
-    evaluations of the split."""
+def _word_shingles(toks: Column, n: int) -> Column:
     m = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(0), m - n), lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
@@ -213,6 +220,36 @@ def char_shingles(text: Column, n: int = 5) -> Column:
     return F.when(m >= n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
     )
+
+
+def shingle_frame(
+    df: DataFrame,
+    text: str = "text",
+    id_col: str | None = "doc_id",
+    n: int = 3,
+    unit: str = "word",
+) -> DataFrame:
+    """(id, sh): the distinct n-gram shingles (set semantics) of each
+    row's ``text``; just (sh) when ``id_col`` is None. The one shingling
+    every MinHash, n-gram Jaccard and contamination operator routes
+    through: ``unit='word'`` (default, web prose: single-space tokens) or
+    ``unit='char'`` (``char_shingles``: short docs / CJK-ish scripts).
+    Incremental probes MUST use the same (n, unit) the committed index
+    was built with.
+
+    Word shingles reference the token split three times (size guard,
+    sequence bound, slice source), so the split is projected first and
+    read as an attribute. Char shingles reference only the text
+    attribute, so they stay one projection."""
+    ids = [F.col(id_col).alias("id")] if id_col else []
+    if unit == "word":
+        staged = df.select(*ids, ws_tokens(F.col(text)).alias("__toks"))
+        return staged.select(
+            "*", _word_shingles(F.col("__toks"), n).alias("sh")
+        ).drop("__toks")
+    if unit == "char":
+        return df.select(*ids, char_shingles(F.col(text), n).alias("sh"))
+    raise ValueError(f"shingle_unit must be 'word' or 'char', got {unit!r}")
 
 
 def normalize_text(text: Column) -> Column:

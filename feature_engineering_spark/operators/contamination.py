@@ -10,7 +10,7 @@ Scale shape (10^12-doc corpus, 10^4-10^6 probe n-grams):
   inflation is map-side only, no shuffle of the expansion) into a
   broadcast hash join, then a map-side-combined groupBy(doc) — the only
   shuffle carries one row per CONTAMINATED doc, a vanishing fraction;
-- n-grams reuse functions/text.word_shingles, so the tokenization is
+- n-grams come from functions/text.shingle_frame, so the tokenization is
   the exact one the dedup operators use (and the DuckDB oracle mirrors).
 """
 
@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_engineering_spark.functions.text import word_shingles
+from feature_engineering_spark.functions.text import shingle_frame
 
 
 def probe_ngrams(
@@ -28,7 +28,8 @@ def probe_ngrams(
     """Distinct word n-grams of the probe/benchmark set: one column
     ``ngram``. Small by construction — broadcast it into the corpus scan."""
     return (
-        probes.select(F.explode(word_shingles(F.col(text), n)).alias("ngram"))
+        shingle_frame(probes, text, None, n)
+        .select(F.explode("sh").alias("ngram"))
         .distinct()
     )
 
@@ -47,12 +48,12 @@ def contamination_report(
     distinct probe n-grams are not reported (single-shingle collisions on
     boilerplate phrases are common; real contamination hits many)."""
     grams = probe_ngrams(probes, text, n)
-    doc_grams = docs.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text), n)).alias("ngram")
+    doc_grams = shingle_frame(docs, text, id_col, n).select(
+        F.col("id").alias(id_col), F.explode("sh").alias("ngram")
     )
     hits = doc_grams.join(F.broadcast(grams), "ngram")
     # count_distinct partial-aggregates map-side; only HIT rows reach the
-    # shuffle (word_shingles is already per-doc distinct, so a doc can't
+    # shuffle (shingles are already per-doc distinct, so a doc can't
     # double-count one n-gram anyway)
     return (
         hits.groupBy(id_col)

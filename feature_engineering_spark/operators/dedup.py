@@ -29,53 +29,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_engineering_spark.functions.text import (
-    char_shingles,
-    token_hash64,
-    word_shingles,
+    hamming64,
+    shingle_frame,
+    simhash_frame,
 )
 from feature_engineering_spark.operators.similarity import _cosine, _dot
-
-
-def _shingles(text_col, n: int, unit: str):
-    """The one shingling dispatch every MinHash operator routes through:
-    ``unit='word'`` (default, web-prose) or ``unit='char'`` (short docs /
-    CJK-ish scripts without whitespace word boundaries — word shingles are
-    too sparse there to near-dup on). Incremental probes MUST use the same
-    (n, unit) the committed index was built with."""
-    if unit == "word":
-        return word_shingles(text_col, n)
-    if unit == "char":
-        return char_shingles(text_col, n)
-    raise ValueError(f"shingle_unit must be 'word' or 'char', got {unit!r}")
-
-
-def _shingle_frame(
-    df: DataFrame, text: str, id_col: str, n: int, unit: str
-) -> DataFrame:
-    """(id, sh) with the tokenization STAGED in its own projection (r6):
-    ``word_shingles`` references the split 3-4 times (size guard,
-    sequence bound, slice source), and interpreted higher-order functions
-    re-run it per reference when everything sits in one projection.
-    Materializing the token array first makes those references cheap
-    per-row reads — CollapseProject keeps the stages separate because the
-    alias is non-cheap and multiply-referenced. Identical values.
-    Char shingles reference only the text attribute (already cheap), so
-    they stay single-projection."""
-    if unit == "word":
-        from feature_engineering_spark.functions.text import (
-            word_shingles_from_tokens,
-            ws_tokens,
-        )
-
-        staged = df.select(
-            F.col(id_col).alias("id"), ws_tokens(F.col(text)).alias("__toks")
-        )
-        return staged.select(
-            "id", word_shingles_from_tokens(F.col("__toks"), n).alias("sh")
-        )
-    return df.select(
-        F.col(id_col).alias("id"), _shingles(F.col(text), n, unit).alias("sh")
-    )
 
 
 def dedup_exact(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -128,9 +86,7 @@ def ngram_jaccard_pairs(
     approximates; bounded subsets only, enforced by ``max_rows`` (raises
     above it). Returns (a, b, jaccard)."""
     _guard_all_pairs(df, max_rows, "ngram_jaccard_pairs")
-    g = df.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text), n).alias("sh")
-    )
+    g = shingle_frame(df, text, id_col, n)
     a, b = g.alias("a"), g.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id"))
     jac = _jaccard(F.col("a.sh"), F.col("b.sh"))
@@ -182,8 +138,7 @@ def minhash_signatures(
     map-side partial mins (measured ~4x faster than per-hash
     transform+array_min array traversals). Docs with no shingles get no
     signature row (they cannot near-dup by shingles)."""
-    sh = _shingles(F.col(text), shingle_n, shingle_unit)
-    g = df.select(F.col(id_col).alias("id"), sh.alias("sh"))
+    g = shingle_frame(df, text, id_col, shingle_n, shingle_unit)
     return _signatures_from_shingles(g, num_hashes, seed)
 
 
@@ -418,7 +373,7 @@ def minhash_lsh_dedup_parts(
     identical values, since inner joins on cand ids never touched any
     other row."""
     rows_per_band = num_hashes // bands
-    g = _shingle_frame(df, text, id_col, shingle_n, shingle_unit)
+    g = shingle_frame(df, text, id_col, shingle_n, shingle_unit)
     sig = _signatures_from_shingles(g, num_hashes).persist()
     banded = _band_signature(sig, bands, rows_per_band)
     cand = _candidates_from_banded(banded, max_bucket_size).persist()
@@ -427,7 +382,7 @@ def minhash_lsh_dedup_parts(
         .unionByName(cand.select(F.col("b").alias("id")))
         .distinct()
     )
-    gc = _shingle_frame(
+    gc = shingle_frame(
         df.join(F.broadcast(ids), df[id_col] == ids["id"], "left_semi"),
         text, id_col, shingle_n, shingle_unit,
     )
@@ -512,7 +467,7 @@ def minhash_lsh_incremental(
     cached frame for the session lifetime (jobs/ingest_increment.py and
     streaming_neardup_filter both clean up)."""
     rows_per_band = num_hashes // bands
-    g_new = _shingle_frame(
+    g_new = shingle_frame(
         new_docs, text, id_col, shingle_n, shingle_unit
     ).persist()
     sig_new = _signatures_from_shingles(g_new, num_hashes)
@@ -524,7 +479,7 @@ def minhash_lsh_incremental(
     cross = _probe_index(banded_new, corpus_banded, max_bucket_size, intermediates)
 
     # --- exact verify: shingle ONLY the candidate corpus rows
-    g_corp = _shingle_frame(
+    g_corp = shingle_frame(
         corpus.join(
             cross.select(F.col("a").alias(id_col)).distinct(),
             id_col, "left_semi",
@@ -672,22 +627,7 @@ def simhash_neardup_pairs(
     ``max_bucket_size`` drops degenerate buckets (near-identical clusters
     belong to the exact-dedup pass) — same guard and rationale as
     minhash_lsh_candidates."""
-    from feature_engineering_spark.functions.text import (
-        hamming64,
-        simhash_from_hashes,
-        token_hash64,
-        ws_tokens,
-    )
-
-    # stage the token-hash array (r6): the per-bit vote aggregates each
-    # reference it, and interpreted HOFs recompute per reference — inline,
-    # the md5 transform ran nbits times per row
-    s = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            ws_tokens(F.col(text)), lambda t: token_hash64(t)
-        ).alias("__th"),
-    ).select("id", simhash_from_hashes(F.col("__th"), nbits).alias("sh"))
+    s = simhash_frame(df, text, nbits, "sh").select(F.col(id_col).alias("id"), "sh")
     s = s.withColumn("bucket", F.shiftright("sh", nbits - prefix_bits))
     s = _cap_buckets(s, max_bucket_size, ("bucket",))
     l, r = s.alias("l"), s.alias("r")
@@ -1438,3 +1378,34 @@ def trim_contained_runs(
             "n_tokens_removed"
         ),
     )
+
+
+def excise_overlaps(
+    docs: DataFrame,
+    corpus: DataFrame,
+    pairs: DataFrame,
+    text: str = "text",
+    id_col: str = "doc_id",
+    k: int = 5,
+) -> DataFrame:
+    """Publish-ready ``docs`` after partial-overlap excision: each b-side
+    doc of the (a, b) overlap ``pairs`` has its quoted runs trimmed
+    (``trim_contained_runs``) against its partners — (corpus ∪ docs)
+    semi-joined on ``overlap_partner_ids``, so a doc that is itself
+    trimmed never serves as a source. Docs no pair flags pass through
+    untouched with ``n_tokens_removed`` 0. Same output columns as
+    ``trim_contained_runs``. Shared by the ingest job's trimmed stage and
+    the streaming overlap trim."""
+    b_ids = pairs.select(F.col("b").alias(id_col)).distinct()
+    flagged = docs.join(b_ids, id_col, "left_semi")
+    partners = corpus.unionByName(docs.select(*corpus.columns)).join(
+        overlap_partner_ids(pairs, id_col), id_col, "left_semi"
+    )
+    trimmed = trim_contained_runs(flagged, partners, text=text, id_col=id_col, k=k)
+    untouched = docs.join(b_ids, id_col, "left_anti").select(
+        id_col,
+        text,
+        F.size(F.split(F.col(text), " ")).cast("long").alias("n_tokens_kept"),
+        F.lit(0).cast("long").alias("n_tokens_removed"),
+    )
+    return trimmed.unionByName(untouched)

@@ -154,8 +154,8 @@ def cluster_representatives(
     variants of one page differ in truncation and boilerplate).
 
     ``clusters`` is the (doc_id, canonical_id) output of dedup_clusters;
-    ``docs`` supplies ``quality_col`` (length, quality_score, anything
-    totally ordered). Ties break to the smallest doc id, so the pick is
+    ``docs`` supplies ``quality_col`` (length, text_scores' quality,
+    anything totally ordered). Ties break to the smallest doc id, so the pick is
     deterministic: argmin of the struct (-quality, doc_id).
 
     Returns (canonical_id, rep_doc_id, rep_quality, n_members). Scale

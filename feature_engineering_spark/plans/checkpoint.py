@@ -228,8 +228,14 @@ class Pipeline:
     ) -> DataFrame:
         loc = self._table(name)
         if self.io.exists(self.spark, loc):
+            out = self.io.read(self.spark, loc)
+            # a kill between the table commit and its ledger append leaves
+            # a committed stage with no lineage: write it from the table
+            if not self._has_lineage(name):
+                lineage = _lineage_rows(out, name, ts_col)
+                self.io.append(self.spark, lineage, self.ledger_path)
             self._emit_metric(name, "skipped_existing", 0.0, None)
-            return self.io.read(self.spark, loc)
+            return out
         t0 = time.monotonic()
         self.io.write(self.spark, fn(), loc)
         out = self.io.read(self.spark, loc)
@@ -238,6 +244,11 @@ class Pipeline:
         n = out.count()
         self._emit_metric(name, "committed", time.monotonic() - t0, n)
         return out
+
+    def _has_lineage(self, name: str) -> bool:
+        if not self.io.exists(self.spark, self.ledger_path):
+            return False
+        return self.ledger().where(F.col("stage") == name).limit(1).count() > 0
 
     def _emit_metric(self, stage: str, status: str, secs: float, rows: int | None):
         if self.metrics_path is None:

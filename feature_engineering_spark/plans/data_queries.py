@@ -79,50 +79,18 @@ FROM documents WHERE doc_id < 20
 
 # ---------------------------------------------------------------- text
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged projections (r6 root cause #4): the single-projection form
-    re-evaluated the lowercase token split ~6x per row (stopword_ratio
-    references it 3x and quality_score re-derives every ratio) — HOFs run
-    interpreted with no subexpression elimination, so each REFERENCE
-    recomputes. Stage the token arrays, then the unrounded metrics, then
-    emit ROUND(6) + quality from the metric ATTRIBUTES. Arithmetic is
-    expression-for-expression the one quality_score defines — identical
-    values (oracle unchanged)."""
+    """TX.text_scores' ratios and quality, ROUND(6), plus the BPE-ish
+    token count (the builder stages the token split, so its references
+    do not re-split per row)."""
     d = _spread(_t(spark, sf_dir, "documents"))
-    t = F.col("text")
-    staged = d.select(
+    return TX.text_scores(d).select(
         "doc_id",
-        t,
-        TX.ws_token_count(t).alias("__ntok"),
-        TX.bpe_ish_token_count(t).alias("__nbpe"),
-        TX.ws_tokens(F.lower(t)).alias("__ltoks"),
-    )
-    lt = F.col("__ltoks")
-    stop = F.array(*[F.lit(w) for w in TX.STOPWORDS["en"]])
-    hits = F.size(F.filter(lt, lambda x: F.array_contains(stop, x)))
-    metrics = staged.select(
-        "doc_id",
-        "__ntok",
-        "__nbpe",
-        TX.punct_ratio(t).alias("__punct"),
-        TX.digit_ratio(t).alias("__digit"),
-        F.when(F.size(lt) > 0, hits / F.size(lt))
-        .otherwise(F.lit(0.0))
-        .alias("__stop"),
-    )
-    quality = (
-        F.lit(0.4) * F.least(F.lit(1.0), F.col("__ntok") / F.lit(100.0))
-        + F.lit(0.3) * F.col("__stop")
-        + F.lit(0.15) * (F.lit(1.0) - F.col("__digit"))
-        + F.lit(0.15) * (F.lit(1.0) - F.col("__punct"))
-    )
-    return metrics.select(
-        "doc_id",
-        F.col("__ntok").alias("ws_tokens"),
-        F.col("__nbpe").alias("bpe_tokens"),
-        F.round(F.col("__punct"), 6).alias("punct_ratio"),
-        F.round(F.col("__digit"), 6).alias("digit_ratio"),
-        F.round(F.col("__stop"), 6).alias("stopword_ratio"),
-        F.round(quality, 6).alias("quality"),
+        "ws_tokens",
+        TX.bpe_ish_token_count(F.col("text")).alias("bpe_tokens"),
+        *[
+            F.round(F.col(c), 6).alias(c)
+            for c in ("punct_ratio", "digit_ratio", "stopword_ratio", "quality")
+        ],
     )
 
 
@@ -155,35 +123,10 @@ FROM b
 
 
 def q_lang_id_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged projections (r6 root cause #4): TX.lang_id in ONE projection
-    references `best` (greatest of 5 stopword-intersection scores) inside
-    every WHEN branch — interpreted evaluation recomputed the distinct-
-    token split and all five intersections per reference (~10-20x/row).
-    Stage the token set, then the five score COLUMNS, then the argmax
-    over attributes. Same tiebreak order, same values."""
+    """Document count per TX.text_scores lang_guess."""
     d = _spread(_t(spark, sf_dir, "documents"))
-    toks = F.array_distinct(TX.ws_tokens(F.lower(F.col("text"))))
-    staged = d.select(toks.alias("__toks"))
-    scores = staged.select(
-        *[
-            F.size(
-                F.array_intersect(
-                    F.col("__toks"), F.array(*[F.lit(w) for w in words])
-                )
-            ).alias(f"__s_{lang}")
-            for lang, words in TX.STOPWORDS.items()
-        ]
-    )
-    best = F.greatest(*[F.col(f"__s_{lang}") for lang in TX._LANG_ORDER])
-    ranked = scores.select(*scores.columns, best.alias("__best"))
-    expr = F.lit("und")
-    for lang in reversed(TX._LANG_ORDER):
-        expr = F.when(
-            (F.col(f"__s_{lang}") == F.col("__best")) & (F.col("__best") > 0),
-            F.lit(lang),
-        ).otherwise(expr)
     return (
-        ranked.select(expr.alias("lang_guess"))
+        TX.text_scores(d)
         .groupBy("lang_guess")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -216,24 +159,14 @@ FROM b GROUP BY 1
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged projections (r6 root cause #4): simhash's 16 per-bit vote
-    aggregates each reference the token-hash array — in one projection
-    the md5 transform re-ran 16x per row. Stage the hash array once; the
-    16 aggregate scans over the attribute are the genuine work."""
+    """md5, rolling hash and a 16-bit TX.simhash_frame per document."""
     d = _spread(_t(spark, sf_dir, "documents"))
     t = F.col("text")
-    staged = d.select(
-        "doc_id",
-        t,
-        F.transform(
-            TX.ws_tokens(t), lambda tok: TX.token_hash64(tok)
-        ).alias("__th"),
-    )
-    return staged.select(
+    return TX.simhash_frame(d, nbits=16, name="simhash16").select(
         "doc_id",
         TX.md5_fingerprint(t).alias("md5_fp"),
         TX.rolling_hash(t).alias("roll_fp"),
-        TX.simhash_from_hashes(F.col("__th"), nbits=16).alias("simhash16"),
+        "simhash16",
     )
 
 

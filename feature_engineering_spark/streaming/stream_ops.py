@@ -322,8 +322,7 @@ def streaming_overlap_trim(
     micro-batch probes this one's content (the grow-the-index contract
     of the other streaming filters)."""
     from feature_engineering_spark.operators.dedup import (
-        overlap_partner_ids,
-        trim_contained_runs,
+        excise_overlaps,
         winnow_overlap_incremental,
     )
 
@@ -333,28 +332,10 @@ def streaming_overlap_trim(
                 batch_df, fp_index, text=text, id_col=id_col, k=k, w=w,
                 min_shared=min_shared,
             )
-            b_ids = pairs.select(F.col("b").alias(id_col)).distinct()
-            flagged = batch_df.join(b_ids, id_col, "left_semi")
-            # partner set EXCLUDES flagged b-side ids (overlap_partner_ids):
-            # a batch doc in both roles (overlap chains within one
-            # micro-batch) would otherwise be trimmed against its own
-            # grams and emitted with empty text
-            partners = corpus.unionByName(
-                batch_df.select(*corpus.columns)
-            ).join(
-                overlap_partner_ids(pairs, id_col), id_col, "left_semi",
+            trimmed = excise_overlaps(
+                batch_df, corpus, pairs, text=text, id_col=id_col, k=k
             )
-            trimmed = trim_contained_runs(
-                flagged, partners, text=text, id_col=id_col, k=k
-            )
-            toks = F.split(F.col(text), " ")
-            untouched = batch_df.join(b_ids, id_col, "left_anti").select(
-                id_col,
-                text,
-                F.size(toks).cast("long").alias("n_tokens_kept"),
-                F.lit(0).cast("long").alias("n_tokens_removed"),
-            )
-            sink_fn(trimmed.unionByName(untouched), pairs, fps_b, batch_id)
+            sink_fn(trimmed, pairs, fps_b, batch_id)
 
         return fn
 

@@ -41,7 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from feature_engineering_spark.functions.text import lang_id, quality_score  # noqa: E402
+from feature_engineering_spark.functions.text import text_scores  # noqa: E402
 from feature_engineering_spark.operators.contamination import (  # noqa: E402
     contamination_report,
 )
@@ -169,10 +169,9 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
 
     def build_scored():
         c = pii_counts(F.col("text"))
-        return (
-            pages.withColumn("quality", quality_score(F.col("text")))
-            .withColumn("lang_guess", lang_id(F.col("text")))
-            .withColumn("n_pii", c["email"] + c["ipv4"] + c["phone"])
+        return text_scores(pages).select(
+            *pages.columns, "quality", "lang_guess",
+            (c["email"] + c["ipv4"] + c["phone"]).alias("n_pii"),
         )
 
     scored = p.stage("scored", build_scored, ts_col="warc_ts")

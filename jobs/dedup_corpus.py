@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from feature_engineering_spark.functions.text import lang_id, quality_score  # noqa: E402
+from feature_engineering_spark.functions.text import text_scores  # noqa: E402
 from feature_engineering_spark.operators.dedup import (  # noqa: E402
     dedup_exact,
     minhash_lsh_dedup_parts,
@@ -72,8 +72,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
 
     scored = p.stage(
         "scored",
-        lambda: pages.withColumn("quality", quality_score(F.col("text")))
-        .withColumn("lang_guess", lang_id(F.col("text"))),
+        lambda: text_scores(pages).select(*pages.columns, "quality", "lang_guess"),
         ts_col="warc_ts",
     )
 

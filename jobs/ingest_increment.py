@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from feature_engineering_spark.operators.dedup import (  # noqa: E402
     dedup_batch_against_corpus as dedup_batch,
+    excise_overlaps,
     line_counts,
     line_dedup_batch_against_index,
     minhash_banded,
@@ -343,40 +344,13 @@ def run(spark, out_root: str, n_rows: int, n_batches: int = 2,
         # keep the untrimmed survivors (ids and signatures stay pure
         # functions of what arrived); trimmed_k is the downstream
         # training-data view, with per-doc token accounting.
-        def build_trimmed(s=survivors, pairs=overlap_k, corpus=corpus):
-            from feature_engineering_spark.operators.dedup import (
-                overlap_partner_ids,
-                trim_contained_runs,
-            )
-
-            flagged = s.join(
-                pairs.select(F.col("b").alias("doc_id")).distinct(),
-                "doc_id",
-                "left_semi",
-            )
-            # partner set EXCLUDES flagged b-side ids (overlap_partner_ids):
-            # a survivor in both roles (A<B<C chains over one shared
-            # paragraph) would otherwise match its own grams and be fully
-            # excised — same keep-set discipline as curate_corpus
-            partners = corpus.unionByName(s).join(
-                overlap_partner_ids(pairs), "doc_id", "left_semi",
-            )
-            trimmed = trim_contained_runs(flagged, partners)
-            untouched = s.join(
-                pairs.select(F.col("b").alias("doc_id")).distinct(),
-                "doc_id",
-                "left_anti",
-            ).select(
-                "doc_id",
-                "text",
-                F.expr("cast(size(split(text, ' ')) as long)").alias(
-                    "n_tokens_kept"
-                ),
-                F.lit(0).cast("long").alias("n_tokens_removed"),
-            )
-            return trimmed.unionByName(untouched)
-
-        trimmed_k = p.stage(f"trimmed_{k:03d}", build_trimmed, ts_col=None)
+        trimmed_k = p.stage(
+            f"trimmed_{k:03d}",
+            lambda s=survivors, pairs=overlap_k, corpus=corpus: excise_overlaps(
+                s, corpus, pairs
+            ),
+            ts_col=None,
+        )
 
         corpus_parts.append(survivors)
         index_parts.append(index_k)

@@ -71,6 +71,52 @@ def test_partial_failure_resume(spark, pages_df, tmp_path):
     assert b.count() > 0
 
 
+class _AppendFailsOnce(ParquetTableIO):
+    """Parquet IO whose first ``append`` raises — a job killed after a
+    stage's table committed but before its lineage reached the ledger."""
+
+    def __init__(self):
+        self.failed = False
+
+    def append(self, spark, df, loc):
+        if not self.failed:
+            self.failed = True
+            raise RuntimeError("killed before the ledger append")
+        super().append(spark, df, loc)
+
+
+def test_resume_appends_lineage_lost_after_commit(spark, pages_df, tmp_path):
+    """The resume that skips a committed stage with no ledger rows appends
+    its lineage from the committed table: the stage's per-partition
+    [rows, checksum] equal a clean run's, and a later resume adds none."""
+
+    def build_a():
+        return pages_df.select("url", "warc_ts")
+
+    def run(root, io=None):
+        p = Pipeline(spark, root, io=io)
+        a = p.stage("a", build_a, ts_col="warc_ts")
+        p.stage("b", lambda: a.groupBy("url").count())
+        return p
+
+    def lineage(p, stage):
+        led = p.ledger().where(f"stage = '{stage}'")
+        return sorted(
+            tuple(r) for r in led.select("partition_id", "row_count", "checksum").collect()
+        )
+
+    killed = str(tmp_path / "killed")
+    with pytest.raises(RuntimeError, match="killed"):
+        run(killed, io=_AppendFailsOnce())
+    assert table_exists(os.path.join(killed, "a"))
+    resumed = run(killed)
+    clean = run(str(tmp_path / "clean"))
+    assert lineage(clean, "a")
+    assert lineage(resumed, "a") == lineage(clean, "a")
+    assert lineage(resumed, "b") == lineage(clean, "b")
+    assert lineage(run(killed), "a") == lineage(clean, "a")
+
+
 def test_ledger_contents(spark, pages_df, tmp_path):
     root = str(tmp_path / "run3")
     p = Pipeline(spark, root)

@@ -168,3 +168,40 @@ def test_trim_plan_no_nlj_semi_probe(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "LeftSemi" in plan
     assert "PythonUDF" not in plan and "ArrowEval" not in plan
+
+
+def test_text_builders_tokenize_once(spark):
+    """Each functions/text builder splits the text once in the optimized
+    plan: the staged token array is read as an attribute, never
+    re-derived per reference (interpreted HOFs have no subexpression
+    elimination)."""
+    from feature_engineering_spark.functions.text import text_scores
+    from feature_engineering_spark.operators.contamination import (
+        contamination_report,
+    )
+    from feature_engineering_spark.operators.dedup import minhash_banded
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    probes = docs.where(F.col("doc_id") < 5)
+    assert _optimized(minhash_banded(docs)).count("split(") == 1
+    # one split per side: the probe n-grams and the corpus n-grams
+    assert _optimized(contamination_report(docs, probes)).count("split(") == 2
+    # the lower-cased token array plus the raw single-space token count
+    scored = _optimized(text_scores(docs).select("quality", "lang_guess"))
+    assert scored.count("split(") <= 2
+    assert scored.count("lower(") == 1
+
+
+def test_lm_perplexity_tokenizes_once(spark):
+    """lm_perplexity's LM counts derive from its term-frequency frame, so
+    after execution AQE's final plan scans and tokenizes documents once
+    (stage reuse shares the rest). The plan string prints the final plan
+    first, then the initial one, so count only the final part."""
+    from feature_engineering_spark.plans.driver_queries import QUERIES
+
+    df = QUERIES["lm_perplexity"](spark, SF)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("Generate") == 1, final
+    assert final.count("FileScan") == 1, final

@@ -10,11 +10,10 @@ from pyspark.sql import functions as F
 
 from feature_engineering_spark.functions.text import (
     hamming64,
-    lang_id,
-    quality_score,
     rolling_hash,
-    simhash64,
-    word_shingles,
+    shingle_frame,
+    simhash_frame,
+    text_scores,
     ws_token_count,
 )
 from feature_engineering_spark.operators.dedup import (
@@ -56,15 +55,15 @@ def test_lang_id_hand_rows(spark):
         ("xyzzy qwerty plugh", "und"),
     ]
     df = spark.createDataFrame([(t,) for t, _ in rows], "text string")
-    got = [r[0] for r in df.select(lang_id(F.col("text"))).collect()]
+    got = [r[0] for r in text_scores(df).select("lang_guess").collect()]
     assert got == [lang for _, lang in rows]
 
 
 def test_quality_and_tokens_hand(spark):
     df = spark.createDataFrame([("the cat sat",)], "text string")
-    r = df.select(
+    r = text_scores(df).select(
         ws_token_count(F.col("text")).alias("n"),
-        F.round(quality_score(F.col("text")), 6).alias("q"),
+        F.round("quality", 6).alias("q"),
     ).collect()[0]
     assert r["n"] == 3
     # 0.4*min(1, 3/100) + 0.3*(1/3) + 0.15*1 + 0.15*1 = 0.012 + 0.1 + 0.3
@@ -87,7 +86,7 @@ def test_rolling_hash_matches_python(spark):
 
 def test_shingles(spark):
     df = spark.createDataFrame([("a b c d",), ("a b",)], "text string")
-    got = [r[0] for r in df.select(word_shingles(F.col("text"), 3)).collect()]
+    got = [r[0] for r in shingle_frame(df, "text", None, 3).collect()]
     assert sorted(got[0]) == ["a b c", "b c d"]
     assert got[1] == []
 
@@ -95,8 +94,8 @@ def test_shingles(spark):
 def test_simhash_similarity_structure(spark, near_dup_docs):
     """Near-identical docs have small simhash Hamming distance; unrelated
     docs (disjoint-ish vocab draws) have larger."""
-    s = near_dup_docs.select(
-        "doc_id", simhash64(F.col("text"), 60).alias("sh")
+    s = simhash_frame(near_dup_docs, "text", 60, "sh").select(
+        "doc_id", "sh"
     ).toPandas().set_index("doc_id")["sh"]
     ham = lambda a, b: bin(int(s[a]) ^ int(s[b])).count("1")  # noqa: E731
     near = [ham(3 * b, 3 * b + 1) for b in range(10)]   # one-word edits
