@@ -8,9 +8,9 @@ Usage:
 
 Prints one JSON line: {"sf_dir": ..., "load": [...], "queries": {name:
 [sec, ...]}}. --explain-dir writes <query>_<suffix>.txt with
-explain("formatted") for each selected query (no execution), normalized
-by ``_normalize_plan`` so dumps of two builds diff only where the plans
-differ.
+explain("formatted") for each selected query (no execution; default:
+every registry query), normalized by ``_normalize_plan`` so dumps of two
+builds diff only where the plans differ.
 """
 
 from __future__ import annotations
@@ -48,19 +48,23 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
     ap.add_argument("--queries", default=None,
-                    help="comma list; default = bench.py headline set")
+                    help="comma list; default = bench.py headline set "
+                    "(timing) or every registry query (--explain-dir)")
     ap.add_argument("--repeats", type=int, default=1)
     ap.add_argument("--explain-dir", default=None,
                     help="write explain('formatted') per query, skip timing")
     ap.add_argument("--suffix", default="before")
     args = ap.parse_args()
 
-    names = args.queries.split(",") if args.queries else DEFAULT
     load = tuple(float(x) for x in open("/proc/loadavg").read().split()[:3])
     spark = get_spark("fes-bench-extra")
 
     from feature_engineering_spark.plans.driver_queries import QUERIES
 
+    if args.queries:
+        names = args.queries.split(",")
+    else:
+        names = list(QUERIES) if args.explain_dir else DEFAULT
     if args.explain_dir:
         os.makedirs(args.explain_dir, exist_ok=True)
         for name in names:

@@ -29,9 +29,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_engineering_spark.functions.text import (
+    gram_frame,
     hamming64,
+    lines,
     shingle_frame,
     simhash_frame,
+    token_hash64,
+    word_ngrams,
+    ws_token_count,
+    ws_tokens,
 )
 from feature_engineering_spark.operators.similarity import _cosine, _dot
 
@@ -149,10 +155,7 @@ def _signatures_from_shingles(
     minhash_lsh_dedup tokenize the corpus ONCE and reuse the shingle arrays
     for both the signature pass and the exact-Jaccard verify join."""
     exploded = g.select("id", F.explode("sh").alias("shingle"))
-    x = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-        % F.lit(_MH_P)
-    )
+    x = token_hash64(F.col("shingle")) % F.lit(_MH_P)
     proj = exploded.select("id", x.alias("x"))
     mins = [
         F.min((F.col("x") * F.lit(a) + F.lit(b)) % F.lit(_MH_P)).alias(f"mh{i}")
@@ -169,17 +172,11 @@ def _band_signature(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame
     AQE reuses the exchange. Band key = md5-derived 60-bit hash of the
     comma-joined band values (cross-engine twin in DuckDB SQL, unlike
     Spark's hash())."""
-    band_exprs = []
+    band_keys = []
     for b in range(bands):
-        cols = ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
-        key = (
-            f"cast(conv(substring(md5(concat_ws(',', {cols})), 1, 15), 16, 10)"
-            " as bigint)"
-        )
-        band_exprs.append(f"{b}, {key}")
-    return sig.selectExpr(
-        "id", f"stack({bands}, {', '.join(band_exprs)}) as (band, bucket)"
-    )
+        cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
+        band_keys += [F.lit(b), token_hash64(F.concat_ws(",", *cols))]
+    return sig.select("id", F.stack(F.lit(bands), *band_keys).alias("band", "bucket"))
 
 
 def lsh_dropped_bucket_stats(
@@ -244,7 +241,16 @@ def _candidates_from_banded(
     banded: DataFrame, max_bucket_size: int | None = 64
 ) -> DataFrame:
     """Candidate pairs from an (id, band, bucket) frame: cap oversized
-    buckets, then self-join on (band, bucket)."""
+    buckets, then self-join on (band, bucket) — docs sharing ANY full
+    band become candidates; the band-key join is the only shuffle.
+
+    ``max_bucket_size`` guards the degenerate case: a bucket of B
+    near-identical docs emits B^2/2 candidate pairs, so ONE mega-cluster
+    of boilerplate makes the join quadratic. Buckets above the cap are
+    dropped entirely — their members are (near-)identical clusters that
+    the EXACT dedup pass upstream is responsible for (jobs/dedup_corpus.py
+    runs exact dedup first and EMITS the drop counts via
+    lsh_dropped_bucket_stats — no silent caps)."""
     banded = _cap_buckets(banded, max_bucket_size)
     l, r = banded.alias("l"), banded.alias("r")
     return (
@@ -306,32 +312,6 @@ def _verify_pairs(
     )
     return j.select("a", "b", score(F.col(ca), F.col(cb)).alias(name)).where(
         F.col(name) >= threshold
-    )
-
-
-def minhash_lsh_candidates(
-    sig: DataFrame,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    max_bucket_size: int | None = 64,
-) -> DataFrame:
-    """Band the signature (bands x rows_per_band) and self-join on band
-    buckets: docs sharing ANY full band become candidate pairs. The
-    band-key groupBy/join is the only shuffle; its fan-out is tuned by
-    (bands, rows_per_band) against the target similarity threshold
-    (s-curve: P(candidate) = 1-(1-j^r)^b).
-
-    ``max_bucket_size`` guards the degenerate case: a bucket of B
-    near-identical docs emits B^2/2 candidate pairs, so ONE mega-cluster
-    of boilerplate makes the join quadratic. Buckets above the cap are
-    dropped entirely — their members are (near-)identical clusters that
-    the EXACT dedup pass upstream is responsible for (jobs/dedup_corpus.py
-    runs exact dedup first; this cap makes that contract explicit instead
-    of an unguarded assumption, and the job EMITS the drop counts via
-    lsh_dropped_bucket_stats — no silent caps). The bucket count reuses
-    the join's own (band, bucket) hash partitioning — no extra shuffle."""
-    return _candidates_from_banded(
-        _band_signature(sig, bands, rows_per_band), max_bucket_size
     )
 
 
@@ -446,7 +426,7 @@ def minhash_lsh_incremental(
     Scale shape (10^12-doc corpus, 10^6-doc batch):
     - the batch's (band, bucket) probe set BROADCASTS into one scan of
       the index — the index is never shuffled;
-    - bucket caps mirror minhash_lsh_candidates and are computed on the
+    - bucket caps mirror _candidates_from_banded and are computed on the
       matched buckets only (a corpus bucket's population within the
       matched subset equals its full-index population, so this is
       exactly the full-index cap at a fraction of the cost);
@@ -626,7 +606,7 @@ def simhash_neardup_pairs(
 
     ``max_bucket_size`` drops degenerate buckets (near-identical clusters
     belong to the exact-dedup pass) — same guard and rationale as
-    minhash_lsh_candidates."""
+    _candidates_from_banded."""
     s = simhash_frame(df, text, nbits, "sh").select(F.col(id_col).alias("id"), "sh")
     s = s.withColumn("bucket", F.shiftright("sh", nbits - prefix_bits))
     s = _cap_buckets(s, max_bucket_size, ("bucket",))
@@ -688,47 +668,6 @@ def srp_hyperplanes(dim: int, nbits: int, seed: int = 7) -> list[list[float]]:
     ]
 
 
-def srp_signature_buckets(
-    df: DataFrame,
-    planes: list[list[float]],
-    bands: int,
-    emb: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, band, bucket) rows: bit j of the signature = [dot(v, h_j) > 0];
-    ``bands`` groups of nbits/bands consecutive bits form the bucket keys.
-
-    The dot products are left-associated sequential folds
-    (aggregate(zip_with(v, h, *), 0.0, +)) — the SAME IEEE operation
-    sequence as the literal add chain emitted in the DuckDB oracle, so the
-    sign bits match exactly. A literal chain was the first implementation;
-    at nbits x dim = 1024 terms it blew Janino's 64 KB per-method limit and
-    silently de-optimized the whole stage to interpreted eval (two
-    `Code grows beyond 64 KB` errors per contract run). The fold keeps the
-    per-bit expression O(1) in codegen size (the lambda body is tiny; only
-    the fold itself is interpreted) while the rest of the stage stays
-    whole-stage-compiled. All scan-side JVM projection — no Python, no
-    shuffle until the band-bucket join."""
-    v = F.col(emb).cast("array<double>")
-    nbits = len(planes)
-    if nbits % bands:
-        raise ValueError("nbits must be divisible by bands")
-    rows_per_band = nbits // bands
-    bit_exprs = []
-    for h in planes:
-        dot = _dot(v, F.array(*[F.lit(w) for w in h]))
-        bit_exprs.append(F.when(dot > 0, F.lit(1)).otherwise(F.lit(0)))
-    buckets = []
-    for b in range(bands):
-        expr = F.lit(0)
-        for r in range(rows_per_band):
-            expr = expr + bit_exprs[b * rows_per_band + r] * F.lit(2**r)
-        buckets.append(expr.alias(f"bucket{b}"))
-    sig = df.select(F.col(id_col).alias("id"), *buckets)
-    stack = ", ".join(f"{b}, bucket{b}" for b in range(bands))
-    return sig.selectExpr("id", f"stack({bands}, {stack}) as (band, bucket)")
-
-
 def embedding_neardup_lsh(
     df: DataFrame,
     dim: int,
@@ -778,9 +717,38 @@ def srp_banded(
     embedding twin of ``minhash_banded``: exposed so ingest jobs can
     PERSIST the banding of committed vectors as an index table and so
     callers can compute ``lsh_dropped_bucket_stats`` on exactly the
-    banding the dedup uses."""
-    planes = srp_hyperplanes(dim, nbits, seed)
-    return srp_signature_buckets(df, planes, bands, emb, id_col)
+    banding the dedup uses.
+
+    Bit j of the signature = [dot(v, h_j) > 0] over the ``nbits``
+    ``srp_hyperplanes``; ``bands`` groups of nbits/bands consecutive bits
+    form the bucket keys. The dot products are left-associated sequential
+    folds (aggregate(zip_with(v, h, *), 0.0, +)) — the SAME IEEE
+    operation sequence as the literal add chain emitted in the DuckDB
+    oracle, so the sign bits match exactly. A literal chain was the first
+    implementation; at nbits x dim = 1024 terms it blew Janino's 64 KB
+    per-method limit and silently de-optimized the whole stage to
+    interpreted eval (two `Code grows beyond 64 KB` errors per contract
+    run). The fold keeps the per-bit expression O(1) in codegen size (the
+    lambda body is tiny; only the fold itself is interpreted) while the
+    rest of the stage stays whole-stage-compiled. All scan-side JVM
+    projection — no Python, no shuffle until the band-bucket join."""
+    v = F.col(emb).cast("array<double>")
+    if nbits % bands:
+        raise ValueError("nbits must be divisible by bands")
+    rows_per_band = nbits // bands
+    bit_exprs = []
+    for h in srp_hyperplanes(dim, nbits, seed):
+        dot = _dot(v, F.array(*[F.lit(w) for w in h]))
+        bit_exprs.append(F.when(dot > 0, F.lit(1)).otherwise(F.lit(0)))
+    buckets = []
+    for b in range(bands):
+        expr = F.lit(0)
+        for r in range(rows_per_band):
+            expr = expr + bit_exprs[b * rows_per_band + r] * F.lit(2**r)
+        buckets.append(expr.alias(f"bucket{b}"))
+    sig = df.select(F.col(id_col).alias("id"), *buckets)
+    stack = ", ".join(f"{b}, bucket{b}" for b in range(bands))
+    return sig.selectExpr("id", f"stack({bands}, {stack}) as (band, bucket)")
 
 
 def embedding_lsh_incremental(
@@ -883,26 +851,21 @@ def line_corpus_dedup(
     Cross-engine: the ``line_dedup`` query's DuckDB oracle mirrors the
     split / count / anti-join / ordered string_agg exactly.
     """
-    lines = _split_lines(docs, text, id_col, sep)
+    rows = _split_lines(docs, text, id_col, sep)
     bad = (
         line_counts(docs, text=text, sep=sep)
         .where(F.col("c") >= min_count)
         .select("line")
     )
-    return _rebuild_docs(docs, lines, bad, text, id_col, sep)
+    return _rebuild_docs(docs, rows, bad, text, id_col, sep)
 
 
 def _split_lines(
     docs: DataFrame, text: str, id_col: str, sep: str
 ) -> DataFrame:
     """(id, pos, line) — one row per separator-delimited line."""
-    import re
-
     return docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text), re.escape(sep))).alias(
-            "pos", "line"
-        ),
+        F.col(id_col), F.posexplode(lines(F.col(text), sep)).alias("pos", "line")
     )
 
 
@@ -912,12 +875,8 @@ def line_counts(
     """(line, c) frequency table of NON-empty lines — the committable
     boilerplate index for incremental corpus-level line dedup (one
     map-side-combined groupBy bounded by distinct lines)."""
-    import re
-
     return (
-        docs.select(
-            F.explode(F.split(F.col(text), re.escape(sep))).alias("line")
-        )
+        docs.select(F.explode(lines(F.col(text), sep)).alias("line"))
         .where(F.length("line") > 0)
         .groupBy("line")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -926,18 +885,16 @@ def line_counts(
 
 def _rebuild_docs(
     docs: DataFrame,
-    lines: DataFrame,
+    rows: DataFrame,
     bad: DataFrame,
     text: str,
     id_col: str,
     sep: str,
 ) -> DataFrame:
-    """Drop ``bad`` lines from ``lines`` and reassemble documents in
-    original order; emits (id, text, n_lines_kept, n_lines_removed),
-    omitting docs whose every line was removed."""
-    import re
-
-    kept = lines.join(bad, "line", "left_anti")
+    """Drop ``bad`` lines from the (id, pos, line) ``rows`` and reassemble
+    documents in original order; emits (id, text, n_lines_kept,
+    n_lines_removed), omitting docs whose every line was removed."""
+    kept = rows.join(bad, "line", "left_anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("pos"), F.col("line")))
@@ -948,9 +905,7 @@ def _rebuild_docs(
         F.concat_ws(sep, F.transform("__ls", lambda s: s["line"])).alias(text),
         F.size("__ls").alias("n_lines_kept"),
     )
-    n_orig = docs.select(
-        F.col(id_col), F.size(F.split(F.col(text), re.escape(sep))).alias("__n0")
-    )
+    n_orig = docs.select(F.col(id_col), F.size(lines(F.col(text), sep)).alias("__n0"))
     return (
         out.join(n_orig, id_col)
         .select(
@@ -1004,8 +959,8 @@ def line_dedup_batch_against_index(
         )
         .select("line")
     )
-    lines = _split_lines(batch, text, id_col, sep)
-    return _rebuild_docs(batch, lines, bad, text, id_col, sep), counts_b
+    rows = _split_lines(batch, text, id_col, sep)
+    return _rebuild_docs(batch, rows, bad, text, id_col, sep), counts_b
 
 
 # ------------------------------------------------------- winnowing
@@ -1060,37 +1015,9 @@ def winnow_fingerprints(
     and are not cheap (same discipline as trim_contained_runs'
     intermediate materialization). Values are identical.
     """
-    if unit == "word":
-        toks = F.split(F.col(text), " ")
-        staged = df.select(F.col(id_col), toks.alias("__toks"))
-        m = F.size(F.col("__toks"))
-        grams = F.transform(
-            F.sequence(F.lit(0), m - k),
-            lambda i: F.concat_ws(" ", F.slice(F.col("__toks"), i + 1, k)),
-        )
-    elif unit == "char":
-        staged = df.select(F.col(id_col), F.col(text).alias("__t"))
-        t = F.col("__t")
-        m = F.length(t)
-        grams = F.transform(
-            F.sequence(F.lit(0), m - k),
-            lambda i: t.substr(i + 1, F.lit(k)),
-        )
-    else:
-        raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
-    hs = F.transform(
-        grams,
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-    )
-    # guard m < k HERE (the staged projection is unconditional, unlike the
-    # old lazily-branched CASE): sequence(0, m-k) would descend and feed
-    # slice a non-positive start on short docs
-    hashed = staged.select(
-        F.col(id_col),
-        m.alias("__m"),
-        F.when(m >= k, hs).otherwise(
-            F.array().cast("array<long>")
-        ).alias("__hs"),
+    g = gram_frame(df, text, [F.col(id_col)], k, unit)
+    hashed = g.select(
+        F.col(id_col), F.transform("__grams", token_hash64).alias("__hs")
     )
     hsa = F.col("__hs")
     few = F.array(F.array_min(hsa))  # G <= w: one degenerate window
@@ -1100,7 +1027,9 @@ def winnow_fingerprints(
             lambda j: F.array_min(F.slice(hsa, j, w)),
         )
     )
-    fps = F.when(F.col("__m") < k, F.array().cast("array<long>")).when(
+    # no gram (shorter than k units): no fingerprint, never array_min([])'s
+    # [null]
+    fps = F.when(F.size(hsa) == 0, F.array().cast("array<long>")).when(
         F.size(hsa) <= w, few
     ).otherwise(wins)
     return hashed.select(F.col(id_col), F.explode(fps).alias("fp"))
@@ -1273,26 +1202,11 @@ def trim_contained_runs(
     join it exists to avoid. All JVM: md5-derived gram hashes, one
     left-semi join on hash, one groupBy(doc) collect of matched
     positions, then a scan-side filter/transform rebuild."""
-    toks = F.split(F.col(text), " ")
-
-    def _gram_hash(ts, i):
-        return F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice(ts, i + 1, k))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-
+    toks = ws_tokens(F.col(text))
     # token arrays staged in their own projections (r6 root cause #4):
     # the gram builder references the split 3x (guard, sequence bound,
     # slice source) and interpreted HOFs recompute per reference
-    ta = F.col("__toks")
-    gram_arr = F.when(
-        F.size(ta) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(ta) - k),
-            lambda i: _gram_hash(ta, i),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
+    gram_arr = F.transform(word_ngrams(F.col("__toks"), k), token_hash64)
     src_hashes = (
         sources.select(toks.alias("__toks"))
         .select(F.explode(gram_arr).alias("h"))
@@ -1405,7 +1319,7 @@ def excise_overlaps(
     untouched = docs.join(b_ids, id_col, "left_anti").select(
         id_col,
         text,
-        F.size(F.split(F.col(text), " ")).cast("long").alias("n_tokens_kept"),
+        ws_token_count(F.col(text)).cast("long").alias("n_tokens_kept"),
         F.lit(0).cast("long").alias("n_tokens_removed"),
     )
     return trimmed.unionByName(untouched)

@@ -27,12 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_engineering_spark.functions.text import normalize_text
-
-
-def _tokens(docs: DataFrame, text: str, id_col: str) -> DataFrame:
-    tok = F.explode(F.split(normalize_text(F.col(text)), " ")).alias("term")
-    return docs.select(F.col(id_col), tok).where(F.col("term") != "")
+from feature_engineering_spark.functions.text import term_frame
 
 
 def unigram_nll(
@@ -55,7 +50,7 @@ def unigram_nll(
     per-term ln() values are order-summed per doc, so the raw double is
     not cross-engine stable; 6dp is (tfidf_terms precedent).
     """
-    dt = _tokens(docs, text, id_col)
+    dt = term_frame(docs, text, id_col)
     tf = dt.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     if reference is None:
         # Self-scoring (the common bootstrap): the LM counts are a pure
@@ -66,7 +61,7 @@ def unigram_nll(
         # this halves it (the shared tf subtree is one exchange, reused).
         lm = tf.groupBy("term").agg(F.sum("tf").alias("c"))
     else:
-        rt = _tokens(reference, text, id_col)
+        rt = term_frame(reference, text, id_col)
         lm = rt.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     totals = lm.agg(
         F.sum("c").alias("t_tok"), F.count(F.lit(1)).alias("v_size")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_engineering_spark.functions.text import token_hash64, ws_token_count
+
 
 def pack_chunks(
     docs: DataFrame,
@@ -40,13 +42,10 @@ def pack_chunks(
     Tokens are whitespace tokens (size of split — measured faster than
     any regex variant, see CLAUDE.md); empty docs count 1 token (the
     empty string), mirroring split semantics on both engines."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col))), 1, 15),
-        16, 10,
-    ).cast("long")
+    h = token_hash64(F.concat_ws(":", F.lit(salt), F.col(id_col)))
     base = docs.select(
         F.col(id_col),
-        F.size(F.split(F.col(text), " ")).cast("long").alias("n_tok"),
+        ws_token_count(F.col(text)).cast("long").alias("n_tok"),
         (h % F.lit(n_shards)).alias("shard"),
         h.alias("__ord"),
     )

@@ -34,19 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_engineering_spark.functions.text import ws_tokens
-
-
-def _ngrams_from_toks(toks, n: int):
-    """ALL word n-gram occurrences (multiset semantics) from a pre-split
-    token array — COUNTS matter here, unlike set-semantics shingles."""
-    m = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), m - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    # guard m < n: sequence(0, negative) would DESCEND, not be empty
-    return F.when(m >= n, grams).otherwise(F.array().cast("array<string>"))
+from feature_engineering_spark.functions.text import lines, word_ngrams, ws_tokens
 
 
 def repetition_signals(
@@ -58,7 +46,8 @@ def repetition_signals(
     t = F.col(text)
     toks = ws_tokens(t)
 
-    # one scan-side flatten of (n, gram) structs for every n — the gram
+    # one scan-side flatten of (n, gram) structs for every n (word_ngrams:
+    # ALL occurrences, multiset — counts matter here) — the gram
     # chain is shared across all n (one explode, one shuffle). NB: the
     # tag lambda must be UNARY — pyspark gives a 2-arg transform lambda
     # (element, index), which would silently shadow an `n=n` default.
@@ -77,7 +66,7 @@ def repetition_signals(
     )
     ta = F.col("__toks")
     tagged = F.flatten(
-        F.array(*[F.transform(_ngrams_from_toks(ta, n), _tag(n)) for n in ns])
+        F.array(*[F.transform(word_ngrams(ta, n), _tag(n)) for n in ns])
     )
     base = staged.select(
         F.col(id_col), ta, tagged.alias("__grams"), F.col("__nschars")
@@ -242,11 +231,8 @@ def line_repetition_signals(
     lines, then a map-side-combined groupBy(doc). Fractions are
     integer-quantized to millionths (cross-engine exact — the
     ``line_repetition`` query hash-verifies vs DuckDB)."""
-    import re
-
     occ = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text), re.escape(sep))).alias("line"),
+        F.col(id_col), F.explode(lines(F.col(text), sep)).alias("line")
     ).where(F.length("line") > 0)
     cnt = (
         occ.groupBy(id_col, "line")

@@ -4,8 +4,10 @@ feature-selection support layer (SURVEY.md O6, A7, P9, A10).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from feature_engineering_spark.functions.text import token_hash64
 
 
 def causal_split(
@@ -135,6 +137,12 @@ def drop_duplicate_columns(df: DataFrame, verify_values: bool = False) -> DataFr
     return renamed.drop(*drops)
 
 
+def _key_bucket(key: str, salt: str) -> Column:
+    """md5-60 hash of ``salt:key`` mod 10^6 — the content-addressed
+    membership bucket of both samplers (exact DuckDB twin)."""
+    return token_hash64(F.concat_ws(":", F.lit(salt), F.col(key))) % F.lit(1_000_000)
+
+
 def deterministic_sample(
     df: DataFrame,
     rate: float,
@@ -147,11 +155,7 @@ def deterministic_sample(
     engines (exact DuckDB twin), so a 1% corpus sample is reproducible
     and JOINABLE with itself downstream. Per-stratum rates compose by
     calling this per partition-of-interest with different rates."""
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col(key))), 1, 15),
-               16, 10).cast("long") % F.lit(1_000_000)
-    )
-    return df.where(bucket < int(rate * 1_000_000))
+    return df.where(_key_bucket(key, salt) < int(rate * 1_000_000))
 
 
 def domain_mix_sample(
@@ -199,12 +203,8 @@ def domain_mix_sample(
             * F.lit(1_000_000.0)
         ).alias("thr"),
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col(key))), 1, 15),
-               16, 10).cast("long") % F.lit(1_000_000)
-    )
     return (
-        df.withColumn("__b", bucket)
+        df.withColumn("__b", _key_bucket(key, salt))
         .join(F.broadcast(rates), domain_col)
         .where(F.col("__b") < F.col("thr"))
         .drop("__b", "thr")

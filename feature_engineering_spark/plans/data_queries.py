@@ -1386,10 +1386,8 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy + TakeOrdered — the word-count shape that stays one shuffle at
     any corpus size."""
     d = _spread(_t(spark, sf_dir, "documents"))
-    tok = F.explode(F.split(TX.normalize_text(F.col("text")), " ")).alias("token")
     return (
-        d.select(tok)
-        .where(F.col("token") != "")
+        TX.term_frame(d, id_col=None, name="token")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("token"))
@@ -1448,10 +1446,7 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dictionary turns out tiny. N (doc count) joins in lazily as a
     single-row broadcast cross join instead of a separate driver action."""
     d = _spread(_t(spark, sf_dir, "documents"))
-    tok = d.select(
-        "doc_id",
-        F.explode(F.split(TX.normalize_text(F.col("text")), " ")).alias("term"),
-    ).where(F.col("term") != "")
+    tok = TX.term_frame(d)
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tok.select("doc_id", "term").distinct().groupBy("term").agg(
         F.count(F.lit(1)).alias("df")

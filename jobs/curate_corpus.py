@@ -41,7 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from feature_engineering_spark.functions.text import text_scores  # noqa: E402
+from feature_engineering_spark.functions.text import text_scores, ws_token_count  # noqa: E402
 from feature_engineering_spark.operators.contamination import (  # noqa: E402
     contamination_report,
 )
@@ -282,9 +282,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         )
 
         pairs = winnow_overlap_pairs(decontam, min_shared=2)
-        nt = decontam.select(
-            "doc_id", F.size(F.split("text", " ")).alias("__nt")
-        )
+        nt = decontam.select("doc_id", ws_token_count(F.col("text")).alias("__nt"))
         p2 = pairs.join(
             nt.withColumnRenamed("doc_id", "a").withColumnRenamed("__nt", "na"),
             "a",

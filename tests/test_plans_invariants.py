@@ -179,11 +179,18 @@ def test_text_builders_tokenize_once(spark):
     from feature_engineering_spark.operators.contamination import (
         contamination_report,
     )
-    from feature_engineering_spark.operators.dedup import minhash_banded
+    from feature_engineering_spark.operators.dedup import (
+        minhash_banded,
+        winnow_fingerprints,
+    )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     probes = docs.where(F.col("doc_id") < 5)
     assert _optimized(minhash_banded(docs)).count("split(") == 1
+    # one split feeding the gram array, one md5 per gram
+    fps = _optimized(winnow_fingerprints(docs))
+    assert fps.count("split(") == 1
+    assert fps.count("md5(") == 1
     # one split per side: the probe n-grams and the corpus n-grams
     assert _optimized(contamination_report(docs, probes)).count("split(") == 2
     # the lower-cased token array plus the raw single-space token count

@@ -9,12 +9,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_engineering_spark.functions.text import (
+    bpe_ish_token_count,
     hamming64,
     rolling_hash,
     shingle_frame,
     simhash_frame,
     text_scores,
+    word_ngrams,
     ws_token_count,
+    ws_tokens,
 )
 from feature_engineering_spark.operators.dedup import (
     dedup_exact,
@@ -89,6 +92,27 @@ def test_shingles(spark):
     got = [r[0] for r in shingle_frame(df, "text", None, 3).collect()]
     assert sorted(got[0]) == ["a b c", "b c d"]
     assert got[1] == []
+
+    # word_ngrams keeps every occurrence in order; shingles are distinct
+    df = spark.createDataFrame([("a b a b",), ("a b",), ("a",)], "text string")
+    toks = df.select(ws_tokens(F.col("text")).alias("t"))
+    grams = [r[0] for r in toks.select(word_ngrams(F.col("t"), 2)).collect()]
+    assert grams == [["a b", "b a", "a b"], ["a b"], []]
+    got = [r[0] for r in shingle_frame(df, "text", None, 2).collect()]
+    assert [sorted(g) for g in got] == [["a b", "b a"], ["a b"], []]
+
+
+def test_bpe_ish_token_count_reads_its_argument(spark):
+    """The count is of the column passed in, not of a column named
+    ``text``: letter runs, single digits and single punctuation marks."""
+    body = spark.createDataFrame([("hi there",)], "body string")
+    assert body.select(bpe_ish_token_count(F.col("body"))).collect()[0][0] == 2
+    both = spark.createDataFrame([("hi!", "ab 12 c.")], "body string, text string")
+    r = both.select(
+        bpe_ish_token_count(F.col("body")).alias("b"),
+        bpe_ish_token_count(F.col("text")).alias("t"),
+    ).collect()[0]
+    assert (r["b"], r["t"]) == (2, 5)
 
 
 def test_simhash_similarity_structure(spark, near_dup_docs):
@@ -402,13 +426,20 @@ def test_repetition_signals_hand_rows(spark):
 
 
 def test_char_shingles_hand(spark):
-    from feature_engineering_spark.functions.text import char_shingles
+    from feature_engineering_spark.functions.text import char_ngrams
 
     df = spark.createDataFrame([("abcde",), ("aaaa",), ("ab",)], "text string")
-    got = [r[0] for r in df.select(char_shingles(F.col("text"), 3)).collect()]
+    got = [r[0] for r in shingle_frame(df, "text", None, 3, "char").collect()]
     assert sorted(got[0]) == ["abc", "bcd", "cde"]
     assert got[1] == ["aaa"]  # distinct: 2 occurrences collapse
     assert got[2] == []       # shorter than n -> empty, not descending seq
+
+    # char_ngrams keeps every occurrence in order; shingles are distinct
+    df = spark.createDataFrame([("abab",), ("ab",), ("a",)], "text string")
+    grams = [r[0] for r in df.select(char_ngrams(F.col("text"), 2)).collect()]
+    assert grams == [["ab", "ba", "ab"], ["ab"], []]
+    got = [r[0] for r in shingle_frame(df, "text", None, 2, "char").collect()]
+    assert [sorted(g) for g in got] == [["ab", "ba"], ["ab"], []]
 
 
 def test_minhash_char_unit_near_dups_short_docs(spark):
