@@ -19,6 +19,12 @@ for a Spark pipeline:
   id, row count, min/max event time, a value checksum — the north_rule's
   "per-partition lineage rows ... metrics emitted to a ledger table".
 
+A commit is one write plus one lineage pass, and nothing else: the plan
+carries an ``Observation`` that counts its rows inside the write job
+(``Pipeline.rows``), and the table is read back with the schema just
+written, so no footer job infers it again. The ledger's per-partition
+rows come from that read-back, so they describe the committed table.
+
 The ledger is itself a table through the same TableIO; checksums are
 order-insensitive (sum of per-row xxhash-style int64 hashes) so they are
 stable across shuffle nondeterminism.
@@ -31,8 +37,9 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _success(path: str) -> str:
@@ -61,13 +68,20 @@ class TableIO:
         raise NotImplementedError
 
     def write(self, spark: SparkSession, df: DataFrame, loc: str) -> None:
-        """Commit ``df`` as the table's new contents (overwrite)."""
+        """Commit ``df`` as the table's new contents (overwrite). Must
+        execute ``df`` itself, once: it carries the ``Observation`` that
+        counts the stage's rows, which completes only when ``df`` runs."""
         raise NotImplementedError
 
     def append(self, spark: SparkSession, df: DataFrame, loc: str) -> None:
         raise NotImplementedError
 
-    def read(self, spark: SparkSession, loc: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, loc: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """The committed table. ``schema``, when given, is the schema the
+        table was just written with; a format may use it instead of
+        reading it back from storage, or ignore it."""
         raise NotImplementedError
 
     def metrics_sink(self, root: str) -> str | None:
@@ -94,8 +108,12 @@ class ParquetTableIO(TableIO):
     def append(self, spark: SparkSession, df: DataFrame, loc: str) -> None:
         df.write.mode("append").parquet(loc)
 
-    def read(self, spark: SparkSession, loc: str) -> DataFrame:
-        return spark.read.parquet(loc)
+    def read(
+        self, spark: SparkSession, loc: str, schema: StructType | None = None
+    ) -> DataFrame:
+        # without a schema, Spark infers it from the footers in a job
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(loc)
 
     def metrics_sink(self, root: str) -> str | None:
         return os.path.join(root, "_metrics.jsonl")
@@ -168,14 +186,19 @@ class IcebergTableIO(TableIO):
                 pass
         df.writeTo(loc).append()
 
-    def read(self, spark: SparkSession, loc: str) -> DataFrame:
-        return spark.read.table(loc)
+    def read(
+        self, spark: SparkSession, loc: str, schema: StructType | None = None
+    ) -> DataFrame:
+        return spark.read.table(loc)  # the catalog holds the schema
 
 
 def _lineage_rows(df: DataFrame, stage: str, ts_col: str | None) -> DataFrame:
     """One row per output partition: counts, event-time bounds, checksum."""
-    # backtick-quote — feature names contain dots/spaces
-    h = F.xxhash64(*[F.col(f"`{c}`") for c in df.columns])
+    # backtick-quote — feature names contain dots/spaces. One SQL string,
+    # not one F.col per column: each F.col is a Py4J round trip, and the
+    # features stage has over a hundred columns
+    quoted = ", ".join("`" + c.replace("`", "``") + "`" for c in df.columns)
+    h = F.expr(f"xxhash64({quoted})")
     # Order-insensitive SUM of per-row hashes (not XOR: XOR cancels pairs,
     # so a whole duplicated table would leave the checksum unchanged).
     # Summed in decimal(38,0) then wrapped mod 2^63-1 to avoid overflow.
@@ -204,9 +227,12 @@ class Pipeline:
     >>> p = Pipeline(spark, root="/data/run1")
     >>> pages = p.stage("pages", lambda: load(...), ts_col="warc_ts")
     >>> feats = p.stage("features", lambda: build(pages), ts_col=None)
+    >>> p.rows("pages")
 
     Each ``stage`` returns a DataFrame reading the committed table; if the
     table exists the plan function is never invoked (resume path).
+    ``rows(name)`` is the stage's row count without a count job: observed
+    during the write on commit, the ledger's sum on resume.
     """
 
     def __init__(self, spark: SparkSession, root: str, io: TableIO | None = None):
@@ -216,6 +242,7 @@ class Pipeline:
         self.ledger_path = self.io.locate(root, "_ledger")
         self.metrics_path = self.io.metrics_sink(root)
         self.io.prepare_root(root)
+        self._rows: dict[str, int] = {}
 
     def _table(self, name: str) -> str:
         return self.io.locate(self.root, name)
@@ -229,32 +256,50 @@ class Pipeline:
         loc = self._table(name)
         if self.io.exists(self.spark, loc):
             out = self.io.read(self.spark, loc)
+            rows = self._ledger_rows(name)
             # a kill between the table commit and its ledger append leaves
             # a committed stage with no lineage: write it from the table
-            if not self._has_lineage(name):
+            if rows is None:
                 lineage = _lineage_rows(out, name, ts_col)
                 self.io.append(self.spark, lineage, self.ledger_path)
-            self._emit_metric(name, "skipped_existing", 0.0, None)
+                rows = self._ledger_rows(name) or 0  # an empty table has none
+            self._rows[name] = rows
+            self._emit_metric(name, "skipped_existing", secs=0.0, rows=rows)
             return out
         t0 = time.monotonic()
-        self.io.write(self.spark, fn(), loc)
-        out = self.io.read(self.spark, loc)
+        df = fn()
+        obs = Observation()
+        self.io.write(
+            self.spark, df.observe(obs, F.count(F.lit(1)).alias("rows")), loc
+        )
+        self._rows[name] = obs.get["rows"]
+        out = self.io.read(self.spark, loc, schema=df.schema)
         lineage = _lineage_rows(out, name, ts_col)
         self.io.append(self.spark, lineage, self.ledger_path)
-        n = out.count()
-        self._emit_metric(name, "committed", time.monotonic() - t0, n)
+        secs = round(time.monotonic() - t0, 3)
+        self._emit_metric(name, "committed", secs=secs, rows=self._rows[name])
         return out
 
-    def _has_lineage(self, name: str) -> bool:
-        if not self.io.exists(self.spark, self.ledger_path):
-            return False
-        return self.ledger().where(F.col("stage") == name).limit(1).count() > 0
+    def rows(self, name: str) -> int:
+        """Row count of a stage this pipeline committed or resumed."""
+        return self._rows[name]
 
-    def _emit_metric(self, stage: str, status: str, secs: float, rows: int | None):
+    def _ledger_rows(self, name: str) -> int | None:
+        """The stage's ``row_count`` sum, None when it has no lineage."""
+        if not self.io.exists(self.spark, self.ledger_path):
+            return None
+        led = self.ledger().where(F.col("stage") == name)
+        return led.agg(F.sum("row_count")).first()[0]
+
+    def event(self, stage: str, event: str, **fields) -> None:
+        """Record a guard-rail event (a cap that discarded rows, ...) in
+        the run's metrics, next to the stage records."""
+        self._emit_metric(stage, "event", event=event, **fields)
+
+    def _emit_metric(self, stage: str, status: str, **fields) -> None:
         if self.metrics_path is None:
             return
-        rec = {"stage": stage, "status": status, "secs": round(secs, 3),
-               "rows": rows, "wall": time.time()}
+        rec = {"stage": stage, "status": status, **fields, "wall": time.time()}
         with open(self.metrics_path, "a") as f:
             f.write(json.dumps(rec) + "\n")
 

@@ -165,7 +165,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
 
     pages = p.stage("pages", lambda: synth_input(spark, out_root, n_rows),
                     ts_col="warc_ts")
-    n0 = pages.count()
+    n0 = p.rows("pages")
 
     def build_scored():
         c = pii_counts(F.col("text"))
@@ -181,7 +181,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         lambda: scored.where(F.col("quality") >= min_quality),
         ts_col="warc_ts",
     )
-    n1 = quality_ok.count()
+    n1 = p.rows("quality_gate")
 
     def build_rep_gate():
         # word/n-gram family (Gopher per-n char-coverage + dup-word gates)
@@ -193,7 +193,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         return filter_repetitive_lines(kept)
 
     rep_ok = p.stage("repetition_gate", build_rep_gate, ts_col="warc_ts")
-    n2 = rep_ok.count()
+    n2 = p.rows("repetition_gate")
 
     # CCNet-style perplexity head: gibberish passes the surface-quality
     # heuristic (long, alpha-heavy) but its globally-unique tokens give
@@ -203,7 +203,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         lambda: filter_by_nll(rep_ok, max_nll=max_nll, id_col="doc_id"),
         ts_col="warc_ts",
     )
-    n2b = lm_ok.count()
+    n2b = p.rows("lm_gate")
 
     def build_exact():
         keep = dedup_exact(lm_ok, text="text", id_col="doc_id").select(
@@ -212,7 +212,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         return lm_ok.join(keep, "doc_id", "left_semi")
 
     exact = p.stage("exact_dedup", build_exact, ts_col="warc_ts")
-    n3 = exact.count()
+    n3 = p.rows("exact_dedup")
 
     lsh_parts: dict = {}
 
@@ -231,7 +231,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         return dedup_keep_canonical(exact, pairs, id_col="doc_id")
 
     deduped = p.stage("neardup_dedup", build_neardup, ts_col="warc_ts")
-    n4 = deduped.count()
+    n4 = p.rows("neardup_dedup")
 
     # no-silent-caps: what did the LSH bucket cap discard (fresh run
     # audits the banding actually used while its shingle cache is still
@@ -245,6 +245,8 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         drop_row = lsh_dropped_bucket_stats(
             lsh_parts["banded"], max_bucket_size=64
         ).collect()[0]
+        p.event("neardup_dedup", "lsh_bucket_cap", max_bucket_size=64,
+                **drop_row.asDict())
         for frame in lsh_parts["cached"]:
             frame.unpersist()
         lsh_dropped = {
@@ -261,7 +263,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         return deduped.join(bad.select("doc_id"), "doc_id", "left_anti")
 
     decontam = p.stage("decontaminated", build_decontam, ts_col="warc_ts")
-    n5 = decontam.count()
+    n5 = p.rows("decontaminated")
 
     # byte-identity audit of everything that SURVIVED, on ingest bytes,
     # immediately before the scrub legitimately rewrites them
@@ -324,7 +326,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         )
 
     published = p.stage("published", build_published, ts_col="warc_ts")
-    n6 = published.count()
+    n6 = p.rows("published")
     masked = published.where(F.col("n_pii") > 0).count()
     # the scrub must leave NOTHING matching the PII patterns
     c = pii_counts(F.col("text"))
@@ -341,7 +343,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
         ),
         ts_col="warc_ts",
     )
-    n7 = mixed.count()
+    n7 = p.rows("mixed")
 
     packed = p.stage(
         "packed",

@@ -68,7 +68,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
         ).drop("__dup_layer").withColumn("ingest_sha", F.sha2("text", 256))
 
     pages = p.stage("pages", load_pages, ts_col="warc_ts")
-    n0 = pages.count()
+    n0 = p.rows("pages")
 
     scored = p.stage(
         "scored",
@@ -81,7 +81,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
         lambda: scored.where(F.col("quality") >= min_quality),
         ts_col="warc_ts",
     )
-    n1 = filtered.count()
+    n1 = p.rows("filtered")
 
     def build_exact():
         keep = dedup_exact(filtered, text="text", id_col="doc_id").select(
@@ -90,7 +90,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
         return filtered.join(keep, "doc_id", "left_semi")
 
     exact = p.stage("exact_dedup", build_exact, ts_col="warc_ts")
-    n2 = exact.count()
+    n2 = p.rows("exact_dedup")
 
     lsh_parts: dict = {}
 
@@ -107,7 +107,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
         return dedup_keep_canonical(exact, pairs, id_col="doc_id")
 
     clean = p.stage("neardup_dedup", build_neardup, ts_col="warc_ts")
-    n3 = clean.count()
+    n3 = p.rows("neardup_dedup")
 
     # no-silent-caps: report what the LSH bucket cap discarded (oversized
     # buckets are assumed to be exact-dup boilerplate clusters already
@@ -133,6 +133,8 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
             minhash_banded(exact, text="text", id_col="doc_id"),
             max_bucket_size=64,
         ).collect()[0]
+    p.event("neardup_dedup", "lsh_bucket_cap", max_bucket_size=64,
+            **drop_row.asDict())
 
     corrupted = clean.where(F.sha2("text", 256) != F.col("ingest_sha")).count()
     stats = {

@@ -59,7 +59,7 @@ def run(spark, pages_path: str | None, out_root: str, n_rows: int,
         return spark.read.parquet(tmp)
 
     pages = p.stage("pages", load_pages, ts_col="warc_ts")
-    n_pages = pages.count()
+    n_pages = p.rows("pages")
 
     # row_key: deterministic unique-ish tiebreak derived from row CONTENT
     # (not monotonically_increasing_id, which depends on the physical
@@ -125,7 +125,7 @@ def run(spark, pages_path: str | None, out_root: str, n_rows: int,
             urldict,
         ),
     )
-    n_feat = features.count()
+    n_feat = p.rows("features")
     wall = time.monotonic() - t_start
     return {
         "pages": n_pages,

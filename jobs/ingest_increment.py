@@ -199,7 +199,7 @@ def run(spark, out_root: str, n_rows: int, n_batches: int = 2,
     )
     corpus_parts, index_parts, eindex_parts = [corpus0], [index0], [eindex0]
     lines_parts, windex_parts = [lines0], [windex0]
-    stats: dict = {"corpus_initial": corpus0.count(), "batches": []}
+    stats: dict = {"corpus_initial": p.rows("corpus_000"), "batches": []}
 
     # fresh rows: slots [60, 100) split into n_batches equal ranges —
     # works for ANY n_batches <= 40 (the old fixed-width 2-slot-of-10
@@ -356,14 +356,16 @@ def run(spark, out_root: str, n_rows: int, n_batches: int = 2,
         index_parts.append(index_k)
         eindex_parts.append(eindex_k)
 
-        b = {"batch": k, "arrivals": arrivals.count(),
-             "survivors": survivors.count()}
+        b = {"batch": k, "arrivals": p.rows(f"arrivals_{k:03d}"),
+             "survivors": p.rows(f"survivors_{k:03d}")}
         b["dropped_total"] = b["arrivals"] - b["survivors"]
         b["boiler_lines_removed"] = int(
             cleaned.agg(F.sum("n_lines_removed")).collect()[0][0] or 0
         )
-        b["docs_emptied_by_line_dedup"] = b["arrivals"] - cleaned.count()
-        b["overlap_pairs"] = overlap_k.count()
+        b["docs_emptied_by_line_dedup"] = (
+            b["arrivals"] - p.rows(f"cleaned_{k:03d}")
+        )
+        b["overlap_pairs"] = p.rows(f"overlap_{k:03d}")
         # cross pairs carry a = corpus id (a is NOT a batch survivor)
         b["overlap_pairs_cross"] = overlap_k.join(
             survivors.select(F.col("doc_id").alias("a")), "a", "left_anti"
@@ -395,6 +397,8 @@ def run(spark, out_root: str, n_rows: int, n_batches: int = 2,
                 row = lsh_dropped_bucket_stats(
                     frame, max_bucket_size=cap
                 ).collect()[0]
+                p.event(f"survivors_{k:03d}", "lsh_bucket_cap", frame=tag,
+                        max_bucket_size=cap, **row.asDict())
                 b[f"lsh_{tag}_dropped_buckets"] = int(
                     row["n_dropped_buckets"] or 0
                 )
@@ -405,7 +409,9 @@ def run(spark, out_root: str, n_rows: int, n_batches: int = 2,
             out["shingles"].unpersist()
         stats["batches"].append(b)
 
-    stats["corpus_final"] = _union(corpus_parts).count()
+    stats["corpus_final"] = stats["corpus_initial"] + sum(
+        b["survivors"] for b in stats["batches"]
+    )
     return stats
 
 

@@ -3,10 +3,11 @@ recomputes, and the final output + ledger are identical (SURVEY §5.6)."""
 
 from __future__ import annotations
 
+import json
 import os
 
-import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from feature_engineering_spark.plans.checkpoint import (
     IcebergTableIO,
@@ -16,6 +17,12 @@ from feature_engineering_spark.plans.checkpoint import (
     iceberg_available,
     table_exists,
 )
+
+
+def _ledger_rows(p, stage):
+    return p.ledger().where(F.col("stage") == stage).agg(
+        F.sum("row_count")
+    ).first()[0]
 
 
 def test_stage_commit_and_resume(spark, pages_df, tmp_path):
@@ -36,6 +43,9 @@ def test_stage_commit_and_resume(spark, pages_df, tmp_path):
     n_b = b.count()
     assert calls == {"a": 1, "b": 1}
     assert table_exists(os.path.join(root, "a"))
+    # rows: observed by the write, equal to the lineage it committed
+    assert p.rows("a") == pages_df.count() == _ledger_rows(p, "a")
+    assert p.rows("b") == n_b == _ledger_rows(p, "b")
 
     # resume: fresh Pipeline over the same root — nothing recomputes
     p2 = Pipeline(spark, root)
@@ -43,6 +53,50 @@ def test_stage_commit_and_resume(spark, pages_df, tmp_path):
     b2 = p2.stage("b", lambda: build_b(a2))
     assert calls == {"a": 1, "b": 1}
     assert b2.count() == n_b
+    assert (p2.rows("a"), p2.rows("b")) == (p.rows("a"), n_b)
+
+    # the metrics record of every stage carries its rows, both times
+    with open(os.path.join(root, "_metrics.jsonl")) as f:
+        events = [json.loads(line) for line in f]
+    assert [(e["stage"], e["status"], e["rows"]) for e in events] == [
+        ("a", "committed", p.rows("a")), ("b", "committed", n_b),
+        ("a", "skipped_existing", p.rows("a")), ("b", "skipped_existing", n_b),
+    ]
+
+
+def test_stage_commit_runs_one_write_and_one_lineage_pass(spark, pages_df, tmp_path):
+    """A commit of a flat plan launches exactly three Spark jobs: the
+    write (which also counts the rows), and the lineage's exchange and
+    append. No footer job infers the schema it just wrote, and no job
+    counts the table again."""
+    sc = spark.sparkContext
+    p = Pipeline(spark, str(tmp_path / "jobs"))
+    group = f"fes-commit-{id(p)}"
+    sc.setJobGroup(group, "one stage commit")
+    try:
+        p.stage("a", lambda: pages_df.select("url", "warc_ts"), ts_col="warc_ts")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert p.rows("a") == pages_df.count()
+
+
+def test_empty_stage_rows(spark, tmp_path):
+    """An empty stage commits, counts 0 (the observation completes with
+    no rows to see) and resumes at 0, though its lineage has no rows."""
+    root = str(tmp_path / "empty")
+    build = lambda: spark.createDataFrame([], "id long, warc_ts timestamp")  # noqa: E731
+    p = Pipeline(spark, root)
+    assert p.stage("e", build, ts_col="warc_ts").count() == 0
+    assert p.rows("e") == 0
+    # a plan that only turns out empty at run time, after a shuffle
+    gone = lambda: spark.range(100).groupBy("id").count().where("count > 1")  # noqa: E731
+    p.stage("g", gone)
+    assert p.rows("g") == 0
+    p2 = Pipeline(spark, root)
+    p2.stage("e", build, ts_col="warc_ts")
+    p2.stage("g", gone)
+    assert (p2.rows("e"), p2.rows("g")) == (0, 0)
 
 
 def test_partial_failure_resume(spark, pages_df, tmp_path):
@@ -114,7 +168,12 @@ def test_resume_appends_lineage_lost_after_commit(spark, pages_df, tmp_path):
     assert lineage(clean, "a")
     assert lineage(resumed, "a") == lineage(clean, "a")
     assert lineage(resumed, "b") == lineage(clean, "b")
-    assert lineage(run(killed), "a") == lineage(clean, "a")
+    # the resumed stage's rows come from the lineage it just wrote
+    for stage in ("a", "b"):
+        assert resumed.rows(stage) == clean.rows(stage) == _ledger_rows(clean, stage)
+    again = run(killed)
+    assert lineage(again, "a") == lineage(clean, "a")
+    assert again.rows("a") == clean.rows("a")
 
 
 def test_ledger_contents(spark, pages_df, tmp_path):
@@ -165,7 +224,7 @@ class _MemoryTableIO(TableIO):
         schema, rows = self.tables.get(loc, (df.schema, []))
         self.tables[loc] = (schema, rows + df.collect())
 
-    def read(self, spark, loc):
+    def read(self, spark, loc, schema=None):
         schema, rows = self.tables[loc]
         return spark.createDataFrame(rows, schema)
 
@@ -187,12 +246,15 @@ def test_pipeline_runs_through_tableio_seam(spark, pages_df, tmp_path):
     assert calls["a"] == 1 and n > 0
     assert "lake.db.a" in io.tables and "lake.db.ledger" in io.tables
     assert not os.path.exists("lake.db")  # nothing touched the filesystem
+    # the observation completed inside the double's own write
+    assert p.rows("a") == n == _ledger_rows(p, "a")
 
     p2 = Pipeline(spark, "lake.db", io=io)
     a2 = p2.stage("a", build_a, ts_col="warc_ts")
     assert calls["a"] == 1  # resume loaded the committed table
     assert a2.count() == n
     assert p2.ledger().count() > 0
+    assert p2.rows("a") == n
 
 
 def test_iceberg_tableio_guard(spark):

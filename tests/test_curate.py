@@ -76,6 +76,15 @@ def test_curate_end_to_end_and_resume(spark, tmp_path):
     skipped = [e for e in events if e["status"] == "skipped_existing"]
     # 12 stages built exactly once, then all 12 skipped on resume
     assert len(committed) == 12 and len(skipped) == 12
+    # a skipped stage reports the rows it committed
+    assert [e["rows"] for e in skipped] == [e["rows"] for e in committed]
+    # the fresh run's LSH bucket-cap audit is a guard-rail event
+    caps = [e for e in events if e["status"] == "event"]
+    assert [(e["stage"], e["event"]) for e in caps] == [
+        ("neardup_dedup", "lsh_bucket_cap")
+    ]
+    assert caps[0]["max_bucket_size"] == 64
+    assert caps[0]["n_dropped_rows"] == stats["lsh_dropped_rows"]
 
     # the mix respects the target ordering: en is the largest bucket
     mixed = spark.read.parquet(f"{root}/mixed")
