@@ -20,7 +20,8 @@ Scale design notes (the point of each operator is its shuffle shape):
   place each: ``_cap_buckets`` (the cap), ``_candidates_from_banded``
   (the band-bucket self-join), ``_probe_index`` (the incremental
   operators' broadcast probe of a committed index) and ``_verify_pairs``
-  (the exact verify, scored by ``_jaccard`` or similarity's ``_cosine``).
+  (the exact verify, scored by ``_jaccard_sql`` or similarity's
+  ``_cosine_sql``).
 """
 
 from __future__ import annotations
@@ -39,7 +40,11 @@ from feature_engineering_spark.functions.text import (
     ws_token_count,
     ws_tokens,
 )
-from feature_engineering_spark.operators.similarity import _cosine, _dot
+from feature_engineering_spark.operators.similarity import (
+    _cosine_sql,
+    _dot_sql,
+    _vector_sql,
+)
 
 
 def dedup_exact(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -71,11 +76,14 @@ def _guard_all_pairs(df: DataFrame, max_rows: int, op: str) -> None:
         )
 
 
-def _jaccard(a, b):
-    """Exact set Jaccard of two shingle arrays (0.0 when both are empty)."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+def _jaccard_sql(a: str, b: str) -> str:
+    """Exact set Jaccard of two shingle arrays, as SQL text over two SQL
+    operands (0.0 when both are empty)."""
+    union = f"size(array_union({a}, {b}))"
+    return (
+        f"CASE WHEN {union} > 0 THEN size(array_intersect({a}, {b})) / {union} "
+        "ELSE 0.0D END"
+    )
 
 
 def ngram_jaccard_pairs(
@@ -95,7 +103,7 @@ def ngram_jaccard_pairs(
     g = shingle_frame(df, text, id_col, n)
     a, b = g.alias("a"), g.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id"))
-    jac = _jaccard(F.col("a.sh"), F.col("b.sh"))
+    jac = F.expr(_jaccard_sql("a.sh", "b.sh"))
     return (
         pairs.select(
             F.col("a.id").alias("a"), F.col("b.id").alias("b"), jac.alias("jaccard")
@@ -303,14 +311,15 @@ def _verify_pairs(
 ) -> DataFrame:
     """The exact verify of every LSH operator: join each candidate (a, b)
     to its ``col`` payload in the (id, col) frames ``ga`` (a side) and
-    ``gb`` (b side), score the pair with ``score`` (``_jaccard`` or
-    ``_cosine``) and keep (a, b, name) rows scoring >= ``threshold``."""
+    ``gb`` (b side), score the pair with the SQL text builder ``score``
+    (``_jaccard_sql`` or ``_cosine_sql``) and keep (a, b, name) rows
+    scoring >= ``threshold``."""
     ca, cb = f"{col}a", f"{col}b"
     j = (
         cand.join(ga.withColumnRenamed("id", "a").withColumnRenamed(col, ca), "a")
         .join(gb.withColumnRenamed("id", "b").withColumnRenamed(col, cb), "b")
     )
-    return j.select("a", "b", score(F.col(ca), F.col(cb)).alias(name)).where(
+    return j.select("a", "b", F.expr(score(ca, cb)).alias(name)).where(
         F.col(name) >= threshold
     )
 
@@ -366,7 +375,7 @@ def minhash_lsh_dedup_parts(
         df.join(F.broadcast(ids), df[id_col] == ids["id"], "left_semi"),
         text, id_col, shingle_n, shingle_unit,
     )
-    pairs = _verify_pairs(cand, gc, gc, "sh", _jaccard, "jaccard", threshold)
+    pairs = _verify_pairs(cand, gc, gc, "sh", _jaccard_sql, "jaccard", threshold)
     return pairs, banded, [sig, cand]
 
 
@@ -469,9 +478,9 @@ def minhash_lsh_incremental(
     # in-batch pairs: banded_new is already capped, so no second cap pass
     batch_cand = _candidates_from_banded(banded_new, max_bucket_size=None)
     return _verify_pairs(
-        cross, g_corp, g_new, "sh", _jaccard, "jaccard", threshold
+        cross, g_corp, g_new, "sh", _jaccard_sql, "jaccard", threshold
     ).unionByName(
-        _verify_pairs(batch_cand, g_new, g_new, "sh", _jaccard, "jaccard", threshold)
+        _verify_pairs(batch_cand, g_new, g_new, "sh", _jaccard_sql, "jaccard", threshold)
     )
 
 
@@ -643,7 +652,7 @@ def embedding_neardup_pairs(
     )
     a, b = v.alias("a"), v.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id"))
-    cos = _cosine(F.col("a.v"), F.col("b.v"))
+    cos = F.expr(_cosine_sql("a.v", "b.v"))
     return pairs.select(
         F.col("a.id").alias("a"), F.col("b.id").alias("b"), cos.alias("cosine")
     ).where(F.col("cosine") >= threshold)
@@ -701,7 +710,7 @@ def embedding_neardup_lsh(
     vv = df.select(
         F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
     )
-    return _verify_pairs(cand, vv, vv, "v", _cosine, "cosine", threshold)
+    return _verify_pairs(cand, vv, vv, "v", _cosine_sql, "cosine", threshold)
 
 
 def srp_banded(
@@ -731,22 +740,26 @@ def srp_banded(
     run). The fold keeps the per-bit expression O(1) in codegen size (the
     lambda body is tiny; only the fold itself is interpreted) while the
     rest of the stage stays whole-stage-compiled. All scan-side JVM
-    projection — no Python, no shuffle until the band-bucket join."""
-    v = F.col(emb).cast("array<double>")
+    projection — no Python, no shuffle until the band-bucket join.
+
+    The bits and bucket sums are built as SQL text and reach Spark in one
+    ``selectExpr``: built as Columns, the nbits x dim hyperplane literals
+    cost ~6,500 Py4J round trips per call at dim 64, nbits 16."""
     if nbits % bands:
         raise ValueError("nbits must be divisible by bands")
     rows_per_band = nbits // bands
-    bit_exprs = []
-    for h in srp_hyperplanes(dim, nbits, seed):
-        dot = _dot(v, F.array(*[F.lit(w) for w in h]))
-        bit_exprs.append(F.when(dot > 0, F.lit(1)).otherwise(F.lit(0)))
+    v = f"CAST({emb} AS ARRAY<DOUBLE>)"
+    bits = [
+        f"CASE WHEN {_dot_sql(v, _vector_sql(h))} > 0 THEN 1 ELSE 0 END"
+        for h in srp_hyperplanes(dim, nbits, seed)
+    ]
     buckets = []
     for b in range(bands):
-        expr = F.lit(0)
+        expr = "0"
         for r in range(rows_per_band):
-            expr = expr + bit_exprs[b * rows_per_band + r] * F.lit(2**r)
-        buckets.append(expr.alias(f"bucket{b}"))
-    sig = df.select(F.col(id_col).alias("id"), *buckets)
+            expr = f"({expr} + ({bits[b * rows_per_band + r]}) * {2**r})"
+        buckets.append(f"{expr} AS bucket{b}")
+    sig = df.selectExpr(f"{id_col} AS id", *buckets)
     stack = ", ".join(f"{b}, bucket{b}" for b in range(bands))
     return sig.selectExpr("id", f"stack({bands}, {stack}) as (band, bucket)")
 
@@ -815,9 +828,9 @@ def embedding_lsh_incremental(
     # in-batch pairs: banded_new is already capped, so no second cap pass
     batch_cand = _candidates_from_banded(banded_new, max_bucket_size=None)
     return _verify_pairs(
-        cross, v_corp, v_new, "v", _cosine, "cosine", threshold
+        cross, v_corp, v_new, "v", _cosine_sql, "cosine", threshold
     ).unionByName(
-        _verify_pairs(batch_cand, v_new, v_new, "v", _cosine, "cosine", threshold)
+        _verify_pairs(batch_cand, v_new, v_new, "v", _cosine_sql, "cosine", threshold)
     )
 
 

@@ -8,34 +8,60 @@ path; recall at scale hinges on centroid quality) or deterministic
 first-C-by-id (kept as the DuckDB-oracle fixture: k-means isn't
 SQL-replicable). Either way the operator's shuffle shape is the same:
 one broadcast of centroids, one bucket-pruned scan.
+
+The cosine fold (``_cosine_sql``, also the dedup operators' verify and
+``_dot_sql`` their SRP signature) and the vector literals are built as
+SQL text that Spark parses in one call. Through the Column API every
+literal and operator costs 3-16 Py4J round trips and every higher-order
+lambda 40-50, which made a 64-dim, 16-bit SRP signature ~6,500 round
+trips per query build. The lambda parameters are named x and y, the
+names PySpark gives them, so the plans are the ones the Column API
+built.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+def _double_sql(x) -> str:
+    """One double as a SQL literal. ``repr`` round-trips every finite
+    double exactly; the ``D`` suffix keeps it a DOUBLE (a bare ``0.5`` is
+    a DECIMAL). NaN and the infinities have no numeric literal."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
 
 
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def _vector_sql(vec) -> str:
+    """A numeric vector as an array<double> SQL literal."""
+    return f"array({', '.join(_double_sql(w) for w in vec)})"
 
 
-def _cosine(a, b):
-    """THE cosine fold every similarity/dedup operator uses: left-
-    associated sequential sums, so values are bit-stable across callers."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (x, y) -> x + y)"
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0.0D, (x, y) -> x + y * y))"
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    """THE cosine fold every similarity/dedup operator uses, over two SQL
+    array<double> operands: left-associated sequential sums, so values
+    are bit-stable across callers."""
+    return f"({_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}))"
 
 
 def cosine_to_query(df: DataFrame, query: list[float], emb: str = "embedding") -> DataFrame:
-    q = F.array(*[F.lit(float(x)) for x in query])
-    v = F.col(emb).cast("array<double>")
-    return df.withColumn("cosine", _cosine(v, q))
+    cos = _cosine_sql(f"CAST({emb} AS ARRAY<DOUBLE>)", _vector_sql(query))
+    return df.withColumn("cosine", F.expr(cos))
 
 
 def brute_force_topk(
@@ -110,22 +136,15 @@ def ivf_assign(
     max(struct(score, cid)) aggregate: highest score, then highest cid.
     The per-element lambda keeps codegen size O(1) regardless of C x dim
     (an all-literal when-chain blows up Catalyst's expression tree)."""
-    v = F.col(emb).cast("array<double>")
-    carr = F.array(*[
-        F.struct(
-            F.lit(int(cid)).cast("int").alias("cid"),
-            F.array(*[F.lit(float(x)) for x in vec]).alias("cvec"),
-        )
+    cents = ", ".join(
+        f"struct(CAST({int(cid)} AS INT) AS cid, {_vector_sql(vec)} AS cvec)"
         for cid, vec in centroids
-    ])
-    scored = F.transform(
-        carr,
-        lambda c: F.struct(
-            _cosine(v, c["cvec"]).alias("s"),
-            c["cid"].alias("cid"),
-        ),
     )
-    return df.withColumn("centroid_id", F.array_max(scored)["cid"])
+    # the outer lambda is x as PySpark would name it; the folds' own (x, y)
+    # shadow it, and x.cvec is only read outside their bodies
+    cos = _cosine_sql(f"CAST({emb} AS ARRAY<DOUBLE>)", "x.cvec")
+    scored = f"transform(array({cents}), x -> struct({cos} AS s, x.cid AS cid))"
+    return df.withColumn("centroid_id", F.expr(f"array_max({scored}).cid"))
 
 
 def ivf_topk(

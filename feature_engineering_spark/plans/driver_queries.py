@@ -584,30 +584,32 @@ def q_window_features_35(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_tiebreak="event_id",
     )
 
-    n = F.col("n_points").cast("double")
-    energy = F.col("`value-0_Absolute energy`")
+    # the 35 emissions are SQL text in one selectExpr: built as Columns
+    # they cost ~2,000 Py4J round trips per query build
+    n = "CAST(n_points AS DOUBLE)"
+    energy = "`value-0_Absolute energy`"
     # exact recovery of the integer window sum from the kernel's mean:
-    # |round(mean*n) - S| < n*ulp(S) << 0.5, so F.round lands exactly on S
-    s_exact = F.round(F.col("`value-0_Mean`") * n, 0)
-    var_scaled = (n * energy - s_exact * s_exact) / (n * n)
+    # |round(mean*n) - S| < n*ulp(S) << 0.5, so round lands exactly on S
+    s_exact = f"round(`value-0_Mean` * {n}, 0)"
+    var_scaled = f"(({n} * {energy} - {s_exact} * {s_exact}) / ({n} * {n}))"
 
-    def emit(name: str, alias: str, _rnd: bool):
-        raw = F.col(f"`value-0_{name}`")
+    def emit(name: str, alias: str, _rnd: bool) -> str:
+        raw = f"`value-0_{name}`"
         if alias == "f_var":
-            out = var_scaled / F.lit(1e4)
+            out = f"{var_scaled} / 10000.0D"
         elif alias == "f_std":
-            out = F.sqrt(var_scaled) / F.lit(1e2)
+            out = f"sqrt({var_scaled}) / 100.0D"
         elif alias == "f_signal_dist":
-            out = F.round(raw, 4)
+            out = f"round({raw}, 4)"
         else:
             k = _F35_SCALE_POW[alias]
-            out = raw / F.lit(float(100 ** k)) if k else raw
-        return F.when(F.isnan(raw), F.lit(None)).otherwise(out).alias(alias)
+            out = f"{raw} / {float(100 ** k)!r}D" if k else raw
+        return f"CASE WHEN isnan({raw}) THEN NULL ELSE {out} END AS {alias}"
 
-    return w.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("win_start"),
-        F.col("n_points"),
+    return w.selectExpr(
+        "CAST(user_id AS BIGINT) AS user_id",
+        "win_start",
+        "n_points",
         *[emit(name, alias, rnd) for name, alias, rnd in _F35_ALIASES],
     )
 

@@ -71,9 +71,10 @@ def read_jdbc(
     At scale the partition options matter as much as pushdown: without
     ``partition_column``/bounds/``num_partitions`` the whole table streams
     through ONE task. With them, Spark issues ``num_partitions`` range
-    queries in parallel. (No database driver ships in this sandbox — the
-    subquery builder above is unit-tested; this wiring is exercised the
-    first time a JDBC jar + live DB exist.)"""
+    queries in parallel. Tested against Derby's embedded driver, which
+    ships in pyspark's jars, with an in-memory database
+    (``jdbc:derby:memory:<name>;create=true``): the pushdown subquery and a
+    range-partitioned read (tests/test_sources.py)."""
     reader = (
         spark.read.format("jdbc")
         .option("url", url)

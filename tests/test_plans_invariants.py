@@ -4,6 +4,8 @@ north-rule invariants: byte-identical text, zero leakage in rolling stats.
 
 from __future__ import annotations
 
+import threading
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -212,3 +214,41 @@ def test_lm_perplexity_tokenizes_once(spark):
     assert "isFinalPlan=true" in final
     assert final.count("Generate") == 1, final
     assert final.count("FileScan") == 1, final
+
+
+def _round_trips(monkeypatch, build) -> int:
+    """Py4J commands this thread sends while ``build()`` runs. Py4J's
+    finalizer thread deletes the proxies earlier tests freed on its own
+    schedule, so commands from other threads are not counted."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    me, sent = threading.get_ident(), [0]
+    for conn in (ClientServerConnection, GatewayConnection):
+        def counted(self, command, *args, _send=conn.send_command, **kwargs):
+            sent[0] += threading.get_ident() == me
+            return _send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(conn, "send_command", counted)
+    build()
+    return sent[0]
+
+
+def test_query_builds_stay_within_round_trip_budget(spark, monkeypatch):
+    """Loop-generated expressions reach Spark as SQL text: a Column-API
+    build pays 3-16 Py4J round trips per literal and operator. Built as
+    Columns, the SRP signature (16 planes x 64 literals) took ~6,400
+    round trips and a window_features_35 build ~2,400."""
+    from feature_engineering_spark.operators.dedup import srp_banded
+    from feature_engineering_spark.plans.driver_queries import QUERIES
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    srp = _round_trips(
+        monkeypatch, lambda: srp_banded(emb, dim=64, nbits=16, bands=4)
+    )
+    assert srp <= 50, srp
+    QUERIES["window_features_35"](spark, SF)  # first build lists the files
+    wf = _round_trips(
+        monkeypatch, lambda: QUERIES["window_features_35"](spark, SF)
+    )
+    assert wf <= 500, wf

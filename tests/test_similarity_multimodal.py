@@ -3,6 +3,9 @@ multimodal plumbing (fake-container decode, frame sampling, metadata)."""
 
 from __future__ import annotations
 
+import math
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +16,9 @@ from feature_engineering_spark.operators.multimodal import (
     synthesize_media,
 )
 from feature_engineering_spark.operators.similarity import (
+    _vector_sql,
     brute_force_topk,
+    cosine_to_query,
     ivf_topk,
 )
 
@@ -44,6 +49,61 @@ def test_brute_force_topk_matches_numpy(spark, emb, emb_np):
         emb.where(F.col("vec_id") != 0), list(q), k=10
     ).toPandas()["vec_id"].tolist()
     assert got == exp
+
+
+def _same_double(a: float, b: float) -> bool:
+    """Bit-identical, with every NaN equal to every NaN."""
+    if math.isnan(a) or math.isnan(b):
+        return math.isnan(a) and math.isnan(b)
+    return struct.pack("<d", a) == struct.pack("<d", b)
+
+
+def _fold_cosine(v, q) -> float:
+    """The operators' cosine fold in Python: left-to-right IEEE sums from
+    0.0, then dot / (|v| * |q|)."""
+    dot = nv = nq = 0.0
+    for x, y in zip(v, q):
+        dot += x * y
+    for x in v:
+        nv += x * x
+    for y in q:
+        nq += y * y
+    with np.errstate(all="ignore"):
+        return float(np.float64(dot) / (np.float64(math.sqrt(nv)) * math.sqrt(nq)))
+
+
+def test_vector_literal_round_trips_every_double(spark):
+    """A query vector reaches the plan as SQL literal text: every double,
+    signed zero, subnormal and extreme included, must come back with the
+    same bits, and NaN and the infinities must parse at all."""
+    vals = [3, 0, -0.0, 0.0, 1e-300, 5e-324, 0.1, -2.5, 1.7976931348623157e308,
+            -1.7976931348623157e308, float("nan"), float("inf"), float("-inf")]
+    got = spark.range(1).selectExpr(f"{_vector_sql(vals)} AS v").first()["v"]
+    assert len(got) == len(vals)
+    assert all(_same_double(g, float(x)) for g, x in zip(got, vals)), got
+
+
+@pytest.mark.parametrize("query", [
+    [3, -0.0, 1e-300, 0.25, 2],
+    [float("nan"), 1.0, 0.0, 2.0, 1.0],
+    [float("inf"), 1.0, 0.0, 2.0, 1.0],
+    [1.0, float("-inf"), 0, -2.0, 1e-300],
+], ids=["finite-edges", "nan", "inf", "-inf"])
+def test_cosine_to_query_edge_literals(spark, query):
+    """cosine_to_query builds for queries holding ints, -0.0, a value whose
+    square underflows, NaN and the infinities, and every row's cosine is
+    the Python fold's, bit for bit."""
+    rows = [
+        (0, [1.0, 2.0, 3.0, 4.0, 5.0]),
+        (1, [1e-150, 0.0, -0.0, 0.0, 0.5]),
+        (2, [-1e-300, 0.5, -0.0, 7.25, -3.0]),
+        (3, [2.0, -1.0, 1e300, 0.0, 1.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {r.vec_id: r.cosine for r in cosine_to_query(df, query).collect()}
+    for vid, v in rows:
+        exp = _fold_cosine(v, [float(x) for x in query])
+        assert _same_double(got[vid], exp), (vid, got[vid], exp)
 
 
 def test_ivf_recall(spark, emb, emb_np):

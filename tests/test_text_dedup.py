@@ -212,6 +212,39 @@ def test_minhash_bucket_guard_caps_mega_cluster(spark):
     assert set(map(tuple, ungated[["a", "b"]].to_numpy())) == {(0, 1)}
 
 
+def test_srp_banded_matches_sequential_fold(spark):
+    """srp_banded's bucket of each band equals a numpy left-to-right fold
+    over srp_hyperplanes: bit j = [cumsum(v * h_j)[-1] > 0], bucket = sum
+    of the band's bits times 2**r. A zero vector has no positive dot
+    product, so it lands in bucket 0 of every band."""
+    from feature_engineering_spark.operators.dedup import srp_banded, srp_hyperplanes
+
+    dim, nbits, bands = 64, 16, 4
+    rng = np.random.default_rng(3)
+    M = rng.normal(size=(40, dim))
+    M[0] = 0.0
+    df = spark.createDataFrame(
+        [(i, M[i].tolist()) for i in range(len(M))],
+        "vec_id long, embedding array<double>",
+    )
+    got = {
+        (r.id, r.band): r.bucket
+        for r in srp_banded(df, dim, nbits=nbits, bands=bands).collect()
+    }
+    H = np.asarray(srp_hyperplanes(dim, nbits, 7))
+    # cumsum accumulates in order (np.sum would sum pairwise)
+    bits = np.cumsum(M[:, None, :] * H[None, :, :], axis=2)[:, :, -1] > 0
+    rpb = nbits // bands
+    exp = {
+        (i, b): sum(int(bits[i, b * rpb + r]) << r for r in range(rpb))
+        for i in range(len(M))
+        for b in range(bands)
+    }
+    assert got == exp
+    assert [got[(0, b)] for b in range(bands)] == [0] * bands
+    assert len(set(got.values())) > 4  # the fixture spreads over buckets
+
+
 def test_embedding_lsh_recall_vs_allpairs(spark):
     """SRP-LSH pairs vs the all-pairs exactness baseline: the verify step
     admits no false positives, and recall >= 0.9 on a near-dup fixture."""
