@@ -55,8 +55,14 @@ def _norm_sql(a: str) -> str:
 def _cosine_sql(a: str, b: str) -> str:
     """THE cosine fold every similarity/dedup operator uses, over two SQL
     array<double> operands: left-associated sequential sums, so values
-    are bit-stable across callers."""
-    return f"({_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}))"
+    are bit-stable across callers. A zero norm product (an all-zero
+    vector, or one whose squares underflow) scores NULL: with ANSI on a
+    division by zero fails the whole query. NULL passes no threshold and
+    ranks last. ``try_divide`` rather than a divide by ``nullif(...)``:
+    Spark rewrites ``nullif`` into a common expression that a join
+    condition inlines twice, so the verify would fold both norms twice
+    per candidate pair."""
+    return f"try_divide({_dot_sql(a, b)}, {_norm_sql(a)} * {_norm_sql(b)})"
 
 
 def cosine_to_query(df: DataFrame, query: list[float], emb: str = "embedding") -> DataFrame:
@@ -133,7 +139,8 @@ def ivf_assign(
     the argmax with a groupBy, i.e. a C-fold row inflation plus a full
     hash shuffle of the table for work that is per-row. array_max on
     (score, cid) structs keeps the exact tie-break of the old
-    max(struct(score, cid)) aggregate: highest score, then highest cid.
+    max(struct(score, cid)) aggregate: highest score, then highest cid
+    (a zero-norm vector scores NULL everywhere and takes the highest cid).
     The per-element lambda keeps codegen size O(1) regardless of C x dim
     (an all-literal when-chain blows up Catalyst's expression tree)."""
     cents = ", ".join(
@@ -158,12 +165,12 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF search: rank centroids against the query driver-side, scan only
     the nprobe nearest buckets, exact cosine within them. Approximate —
-    recall vs brute force is property-tested (tests/test_similarity.py)."""
-    import math
-
+    recall vs brute force is property-tested
+    (tests/test_similarity_multimodal.py)."""
     def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
+        # a zero norm product ranks last, as _cosine_sql's NULL does
+        n = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
+        return sum(x * y for x, y in zip(a, b)) / n if n else -math.inf
 
     probe = [cid for cid, cvec in sorted(
         centroids, key=lambda c: -cos(query, c[1])

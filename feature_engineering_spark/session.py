@@ -1,8 +1,15 @@
 """SparkSession factory with scale-aware defaults.
 
-Local-mode testing uses ``local[N]``; the same confs are what we would
-submit to a real cluster (AQE, Arrow, skew-join). Keep every tunable in
-one place so bench runs can report the exact config.
+``get_spark`` applies one conf table, calls ``getOrCreate`` and sets the
+shuffle partition count; it runs no Spark job. Local-mode testing uses
+``local[N]``; the same confs are what we would submit to a real cluster
+(AQE, Arrow, skew-join). Keep every tunable in one place so bench runs
+can report the exact config.
+
+There is no session warmup: at 4 cores a synthetic JIT warmup pipeline
+cost more at start (~7 s) than it saved on the first operation (~5 s).
+Without it, perfbench's setup + cold op median (5 interleaved pairs)
+went 27.2 -> 22.5 s on queries and 32.0 -> 31.8 s on extract.
 """
 
 from __future__ import annotations
@@ -78,67 +85,6 @@ _BASE_CONFS = {
 }
 
 
-def _warmup(spark: SparkSession) -> None:
-    """Pre-JIT the engine's hot framework paths at session start.
-
-    A fresh JVM runs Catalyst, janino, the shuffle writers, UnsafeRow
-    serde and the codegen'd operator loops in the bytecode INTERPRETER
-    until HotSpot's C2 thresholds trip — measured (JFR, r6): the first
-    queries of a fresh session spend 60+ CPU-seconds of compiler-thread
-    time on *generic* Spark/janino/java.io methods, none of it specific
-    to the query being timed, all of it landing in that query's wall
-    time. Long-lived clusters amortize this across jobs; a short-lived
-    local session pays it inside the first few queries unless the
-    session factory warms the paths first. This runs a ~2-4s synthetic
-    pipeline over ``spark.range`` data touching shuffle + hash
-    aggregate + window + broadcast and sort-merge join + explode, which
-    interleaved A/B (r6, sf0.1) showed cuts the first-run time of the
-    window/join queries 20-33% with zero effect on steady state. Pure
-    JIT/codegen warmup: no input data is read, nothing is cached, no
-    query result is precomputed. Opt out with SPARK_GRAFT_WARMUP=0
-    (e.g. for micro-harnesses that do their own warmup accounting).
-    """
-    from pyspark.sql import Window, functions as F
-
-    # Row count scales with parallelism: enough per-core iterations to
-    # cross C2's invocation thresholds without making local[1] crawl.
-    n = min(2_000_000, 50_000 * spark.sparkContext.defaultParallelism)
-    df = spark.range(0, n).select(
-        F.col("id"),
-        (F.col("id") % 997).alias("k"),
-        (F.col("id") % 31).alias("g"),
-        (F.rand(7) * 100).alias("v"),
-        F.concat(F.lit("tok_"), (F.col("id") % 50).cast("string")).alias("s"),
-    )
-    agg = df.groupBy("k").agg(
-        F.sum("v").alias("sv"), F.min("id").alias("mi"),
-        F.max("v").alias("mx"), F.count("*").alias("c"),
-        F.avg("v").alias("av"),
-    )
-    w = Window.partitionBy("g").orderBy("id")
-    win = (
-        df.withColumn("rn", F.row_number().over(w))
-        .withColumn("lg", F.lag("v").over(w))
-        .withColumn("rs", F.sum("v").over(w.rowsBetween(-10, 0)))
-    )
-    dim = spark.range(0, 997).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("kk"))
-    j1 = (agg.join(F.broadcast(dim), "k")
-          .select(F.sum(F.col("sv") + F.col("kk")).alias("x")))
-    agg2 = agg.select(F.col("k").alias("k2"), F.col("sv").alias("sv2"))
-    j2 = (win.join(agg2, win.g == agg2.k2, "left")
-          .select(F.sum("rs").alias("y")))
-    arr = (df.select(F.split(F.col("s"), "_").alias("a"), "v")
-           .select(F.explode(F.col("a")).alias("e"), "v")
-           .groupBy("e").agg(F.sum("v").alias("sv")))
-    spark.sparkContext.setJobDescription("session-warmup (JIT)")
-    try:
-        for q in (j1, j2, arr):
-            q.write.format("noop").mode("overwrite").save()
-    finally:
-        spark.sparkContext.setJobDescription(None)
-
-
 def get_spark(
     app_name: str = "feature_engineering_spark",
     master: str | None = None,
@@ -148,20 +94,17 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count — on a real
-    cluster pass ~2-3x total cores and let AQE coalesce.
+    ``shuffle_partitions`` defaults to the session's default parallelism
+    (N for ``local[N]`` and ``local[N,F]``, the core count for
+    ``local[*]``); on a real cluster pass ~2-3x total cores and let AQE
+    coalesce.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else int(n)
-
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in _BASE_CONFS.items():
@@ -170,15 +113,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if getattr(spark, "_fes_warmed", False):
-        return spark
-    # marked once per session, even on getOrCreate reuse or when opted out
-    spark._fes_warmed = True
-    if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
-        try:
-            _warmup(spark)
-        except Exception as exc:  # never block session creation on warmup
-            import warnings
-
-            warnings.warn(f"session warmup skipped: {exc}")
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark

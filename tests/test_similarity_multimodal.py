@@ -106,6 +106,35 @@ def test_cosine_to_query_edge_literals(spark, query):
         assert _same_double(got[vid], exp), (vid, got[vid], exp)
 
 
+def test_zero_norm_vectors_score_null(spark):
+    """An all-zero vector and one whose squares underflow have a zero
+    norm: every cosine operator scores them NULL (never passes a verify
+    threshold, ranks last) instead of failing the query on an ANSI
+    division by zero, and the nonzero rows keep the fold's bits."""
+    from feature_engineering_spark.operators.dedup import embedding_neardup_lsh
+    from feature_engineering_spark.operators.similarity import ivf_assign
+
+    v, zero, tiny = [1.0, 2.0, 3.0, 4.0], [0.0] * 4, [1e-200] * 4
+    rows = [(0, zero), (1, tiny), (2, v), (3, v), (4, zero)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = [4.0, 3.0, 2.0, 1.0]
+    got = {r.vec_id: r.cosine for r in cosine_to_query(df, q).collect()}
+    assert got[0] is None and got[1] is None and got[4] is None
+    assert _same_double(got[2], _fold_cosine(v, q)) and got[3] == got[2]
+    assert all(r.cosine is None for r in cosine_to_query(df, zero).collect())
+    top = brute_force_topk(df, q, k=5).collect()
+    assert [r.vec_id for r in top] == [2, 3, 0, 1, 4]
+    cents = [(0, zero), (1, [1.0] * 4), (2, [-1.0] * 4)]
+    cid = {r.vec_id: r.centroid_id for r in ivf_assign(df, cents).collect()}
+    assert cid[2] == cid[3] == 1  # the zero centroid never wins
+    assert cid[0] == cid[1] == cid[4] == 2  # all-NULL scores tie: highest cid
+    top = ivf_topk(df, q, cents, k=5, nprobe=1).collect()
+    assert [r.vec_id for r in top] == [2, 3]
+    # the two zero rows share every SRP bucket, so they reach the verify
+    pairs = embedding_neardup_lsh(df, dim=4, threshold=0.5).collect()
+    assert [(r.a, r.b) for r in pairs] == [(2, 3)]
+
+
 def test_ivf_recall(spark, emb, emb_np):
     ids, M = emb_np
     q = M[ids == 0][0].astype("float64")
