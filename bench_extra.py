@@ -24,14 +24,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402
 from feature_engineering_spark.session import get_spark  # noqa: E402
-
-DEFAULT = [
-    "asof_join_events", "backfill_interp", "sessionize_events",
-    "rolling_causal_stats", "lag_lead_delta", "sliding_window_agg",
-    "window_features_35", "group_topstats", "join_orders_customer",
-    "text_quality", "dedup_exact", "minhash_lsh_dedup", "ann_topk",
-]
 
 
 def _normalize_plan(plan: str) -> str:
@@ -64,7 +58,7 @@ def main() -> None:
     if args.queries:
         names = args.queries.split(",")
     else:
-        names = list(QUERIES) if args.explain_dir else DEFAULT
+        names = list(QUERIES) if args.explain_dir else HEADLINE
     if args.explain_dir:
         os.makedirs(args.explain_dir, exist_ok=True)
         for name in names:

@@ -176,14 +176,15 @@ def token_hash64(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 
 
-def rolling_hash(text: Column, base: int = 31, mod: int = 2147483647) -> Column:
+def rolling_hash(text: Column) -> Column:
     """Polynomial rolling hash over character codes (Rabin-Karp shape):
-    acc = (acc * base + ascii(ch)) % mod. aggregate() keeps it JVM-side."""
+    acc = (acc * 31 + ascii(ch)) % (2^31 - 1). aggregate() keeps it
+    JVM-side."""
     chars = F.split(text, "")
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
+        lambda acc, ch: (acc * 31 + F.ascii(ch)) % 2147483647,
     )
 
 

@@ -1056,34 +1056,34 @@ def winnow_overlap_pairs(
     w: int = 4,
     min_shared: int = 2,
     fp_doc_cap: int = 64,
-    stats: dict | None = None,
     unit: str = "word",
 ) -> DataFrame:
     """(a, b, n_shared) — unordered document pairs sharing at least
     ``min_shared`` winnowed fingerprints (a < b).
 
-    Scale shape: the ONLY shuffle is the equi-join on fingerprint value
-    (fingerprints ARE the buckets, same as LSH banding). Fingerprints
-    shared by more than ``fp_doc_cap`` documents are boilerplate k-gram
-    runs (nav bars, licence blocks — corpus-level line dedup's business)
-    and would quadratically blow the self-join, so they are dropped with
-    accounting in ``stats`` (``fp_hot``, ``fp_hot_docrows``) — the same
-    no-silent-caps contract as the LSH bucket cap."""
+    Scale shape: fingerprints ARE the buckets, same as LSH banding, and
+    the one hash exchange on fingerprint value serves both the cap's
+    window count and the self-join. Fingerprints shared by more than
+    ``fp_doc_cap`` documents are boilerplate k-gram runs (nav bars,
+    licence blocks — corpus-level line dedup's business) and would
+    quadratically blow the self-join, so ``_cap_buckets`` drops them;
+    ``lsh_dropped_bucket_stats(winnow_fingerprints(...), fp_doc_cap,
+    ("fp",))`` accounts for what it dropped — the same no-silent-caps
+    contract as the LSH bucket cap."""
     fps = winnow_fingerprints(
         df, text=text, id_col=id_col, k=k, w=w, unit=unit
     )
-    counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("n_docs"))
-    hot = counts.where(F.col("n_docs") > fp_doc_cap)
-    if stats is not None:
-        row = hot.agg(
-            F.count(F.lit(1)).alias("h"),
-            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("r"),
-        ).collect()[0]
-        stats["fp_hot"] = row["h"]
-        stats["fp_hot_docrows"] = int(row["r"])
-    cold = fps.join(hot.select("fp"), "fp", "left_anti")
-    a = cold.select(F.col("fp"), F.col(id_col).alias("a"))
-    b = cold.select(F.col("fp"), F.col(id_col).alias("b"))
+    return _shared_fp_pairs(
+        _cap_buckets(fps, fp_doc_cap, ("fp",)), id_col, min_shared
+    )
+
+
+def _shared_fp_pairs(fps: DataFrame, id_col: str, min_shared: int) -> DataFrame:
+    """(a, b, n_shared), a < b, for documents of one (id_col, fp) frame
+    sharing at least ``min_shared`` fingerprints: the fingerprint
+    self-join and its per-pair count."""
+    a = fps.select(F.col("fp"), F.col(id_col).alias("a"))
+    b = fps.select(F.col("fp"), F.col(id_col).alias("b"))
     return (
         a.join(b, "fp")
         .where(F.col("a") < F.col("b"))
@@ -1102,8 +1102,6 @@ def winnow_overlap_incremental(
     w: int = 4,
     min_shared: int = 2,
     fp_doc_cap: int = 64,
-    stats: dict | None = None,
-    unit: str = "word",
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental winnowing overlap: (pairs, batch_fps) of an arriving
     batch against a committed corpus fingerprint index — the fourth
@@ -1135,9 +1133,7 @@ def winnow_overlap_incremental(
     The caller commits ``batch_fps`` alongside the batch's surviving
     rows so the NEXT batch probes them too (grow-the-index contract of
     jobs/ingest_increment.py)."""
-    fps_b = winnow_fingerprints(
-        batch, text=text, id_col=id_col, k=k, w=w, unit=unit
-    )
+    fps_b = winnow_fingerprints(batch, text=text, id_col=id_col, k=k, w=w)
     probe = fps_b.select("fp").distinct()
     hit = fp_index.join(F.broadcast(probe), "fp").select(
         F.col(id_col).alias("a"), "fp"
@@ -1151,8 +1147,6 @@ def winnow_overlap_incremental(
         )
         .select("fp")
     )
-    if stats is not None:
-        stats["fp_hot"] = hot.count()
     cold_b = fps_b.join(hot, "fp", "left_anti")
     cold_hit = hit.join(hot, "fp", "left_anti")
     cross = (
@@ -1161,15 +1155,7 @@ def winnow_overlap_incremental(
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
-    l = cold_b.select("fp", F.col(id_col).alias("a"))
-    r = cold_b.select("fp", F.col(id_col).alias("b"))
-    within = (
-        l.join(r, "fp")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
+    within = _shared_fp_pairs(cold_b, id_col, min_shared)
     return cross.unionByName(within), fps_b
 
 
@@ -1309,7 +1295,7 @@ def trim_contained_runs(
 
 def excise_overlaps(
     docs: DataFrame,
-    corpus: DataFrame,
+    sources: DataFrame,
     pairs: DataFrame,
     text: str = "text",
     id_col: str = "doc_id",
@@ -1317,17 +1303,16 @@ def excise_overlaps(
 ) -> DataFrame:
     """Publish-ready ``docs`` after partial-overlap excision: each b-side
     doc of the (a, b) overlap ``pairs`` has its quoted runs trimmed
-    (``trim_contained_runs``) against its partners — (corpus ∪ docs)
-    semi-joined on ``overlap_partner_ids``, so a doc that is itself
-    trimmed never serves as a source. Docs no pair flags pass through
-    untouched with ``n_tokens_removed`` 0. Same output columns as
-    ``trim_contained_runs``. Shared by the ingest job's trimmed stage and
-    the streaming overlap trim."""
+    (``trim_contained_runs``) against its partners — the ``sources`` rows
+    (every frame an a side can come from, e.g. corpus ∪ docs) semi-joined
+    on ``overlap_partner_ids``, so a doc that is itself trimmed never
+    serves as a source. Docs no pair flags pass through untouched with
+    ``n_tokens_removed`` 0. Same output columns as
+    ``trim_contained_runs``. Shared by the curation and ingest jobs'
+    trimmed stages and the streaming overlap trim."""
     b_ids = pairs.select(F.col("b").alias(id_col)).distinct()
     flagged = docs.join(b_ids, id_col, "left_semi")
-    partners = corpus.unionByName(docs.select(*corpus.columns)).join(
-        overlap_partner_ids(pairs, id_col), id_col, "left_semi"
-    )
+    partners = sources.join(overlap_partner_ids(pairs, id_col), id_col, "left_semi")
     trimmed = trim_contained_runs(flagged, partners, text=text, id_col=id_col, k=k)
     untouched = docs.join(b_ids, id_col, "left_anti").select(
         id_col,

@@ -46,23 +46,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Return (id, component) for every node appearing in ``edges``;
-    ``component`` is the MIN node id reachable from ``id`` (deterministic
-    canonical label). Edges are treated as undirected; isolated nodes
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+    """Return (id, component) for every node appearing in the (a, b)
+    ``edges``; ``component`` is the MIN node id reachable from ``id``
+    (deterministic canonical label). Edges are treated as undirected; isolated nodes
     don't appear (callers union them in as singletons if needed).
 
     ``max_iter`` bounds rounds; with pointer jumping the requirement is
     O(log2(diameter)), so 50 covers any physically storable graph — the
     terminal raise is a safety net, not an expected path."""
     sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
+        .union(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
         .distinct()
         .localCheckpoint()
     )
@@ -112,16 +107,12 @@ def connected_components(
     return labels.select(F.col("u").alias("id"), "comp")
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-) -> DataFrame:
-    """(doc_id, canonical_id) for every doc in the near-dup pair list;
-    canonical_id = min doc id of the doc's transitive cluster. Docs to
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
+    """(doc_id, canonical_id) for every doc in the (a, b) near-dup pair
+    list; canonical_id = min doc id of the doc's transitive cluster. Docs to
     DROP are exactly the rows with doc_id != canonical_id; the keep-set
     is obtained by anti-joining those against the corpus."""
-    cc = connected_components(pairs, src, dst)
+    cc = connected_components(pairs)
     return cc.select(F.col("id").alias("doc_id"), F.col("comp").alias("canonical_id"))
 
 
@@ -129,13 +120,11 @@ def dedup_keep_canonical(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    src: str = "a",
-    dst: str = "b",
 ) -> DataFrame:
     """Corpus minus non-canonical cluster members: one anti-join against
     the (small) drop-list. Exactly one survivor per near-dup cluster;
     rows never mentioned in ``pairs`` pass through untouched."""
-    drops = dedup_clusters(pairs, src, dst).where("doc_id != canonical_id")
+    drops = dedup_clusters(pairs).where("doc_id != canonical_id")
     return df.join(
         drops.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"
     )

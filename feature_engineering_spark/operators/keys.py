@@ -81,11 +81,9 @@ def decode_key(
     out: DataFrame,
     dictionary: DataFrame,
     key_col: str = "url_key",
-    drop_key: bool = True,
 ) -> DataFrame:
     """Re-attach the string key to a keyed output frame. Plain equi-join:
     AQE broadcasts the dictionary when it is small; at dictionary sizes
     beyond broadcast this is ONE wide shuffle at the end instead of
     carrying the string through every intermediate shuffle."""
-    j = out.join(dictionary, key_col, "left")
-    return j.drop(key_col) if drop_key else j
+    return out.join(dictionary, key_col, "left").drop(key_col)

@@ -40,6 +40,14 @@ def pii_counts(text: Column) -> dict[str, Column]:
     return {name: F.regexp_count(text, F.lit(pat)) for name, pat, _ in _PATTERNS}
 
 
+def pii_total(text: Column) -> Column:
+    """Matches of every pattern in one text column (email + ipv4 +
+    phone): the per-doc PII count the curation ledger and its
+    residual check read."""
+    c = pii_counts(text)
+    return c["email"] + c["ipv4"] + c["phone"]
+
+
 def pii_signals(
     docs: DataFrame, text: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -47,11 +55,10 @@ def pii_signals(
     curation-ledger side of the scrub (what fraction of the corpus
     carries PII, which docs to audit)."""
     c = pii_counts(F.col(text))
-    total = c["email"] + c["ipv4"] + c["phone"]
     return docs.select(
         F.col(id_col),
         *[cnt.alias(f"n_{name}") for name, cnt in c.items()],
-        (total > 0).alias("has_pii"),
+        (pii_total(F.col(text)) > 0).alias("has_pii"),
     )
 
 
@@ -64,9 +71,7 @@ def scrub_text(text: Column) -> Column:
     return out
 
 
-def scrub_pii(
-    docs: DataFrame, text: str = "text", id_col: str | None = None
-) -> DataFrame:
+def scrub_pii(docs: DataFrame, text: str = "text") -> DataFrame:
     """The corpus with ``text`` masked in place — schema otherwise
     unchanged, so the scrub drops into any point of a pipeline."""
     return docs.withColumn(text, scrub_text(F.col(text)))

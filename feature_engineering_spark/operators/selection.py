@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from feature_engineering_spark.operators.split import (
+    causal_split,
     clean_nan_columns,
     variance_prune,
 )
@@ -34,24 +35,24 @@ def _r2(pred: DataFrame, label: str = "y", p: str = "prediction") -> float:
     return 1.0 - row["ss_res"] / ss_tot if ss_tot else 0.0
 
 
-def causal_three_way(
-    df: DataFrame, key: str, ts: str, fracs=(0.6, 0.8)
-) -> DataFrame:
-    """Positional per-key split: first 60% train, next 20% valid (the
-    reference's last-25%-of-trainvalid holdout, get_features.py:339-346),
-    last 20% test."""
-    from pyspark.sql import Window
+def _fit_r2(
+    fit_on: DataFrame, score_on: DataFrame, cols: list[str], model: str,
+    label: str,
+) -> float:
+    """Fit the one regressor every selection step uses on ``fit_on`` over
+    ``cols`` and return its R^2 on ``score_on``: a 50-tree depth-5 random
+    forest (seed 42) for ``model='rf'``, else a ridge-regularized linear
+    fit."""
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.regression import LinearRegression, RandomForestRegressor
 
-    w = Window.partitionBy(key).orderBy(ts)
-    wc = Window.partitionBy(key)
-    rn = F.row_number().over(w)
-    n = F.count(F.lit(1)).over(wc)
-    return df.withColumn(
-        "split",
-        F.when(rn <= F.floor(n * fracs[0]), "train")
-        .when(rn <= F.floor(n * fracs[1]), "valid")
-        .otherwise("test"),
+    va = VectorAssembler(inputCols=cols, outputCol="features")
+    est = (
+        RandomForestRegressor(labelCol=label, numTrees=50, maxDepth=5, seed=42)
+        if model == "rf" else LinearRegression(labelCol=label, regParam=0.01)
     )
+    fitted = est.fit(va.transform(fit_on))
+    return _r2(fitted.transform(va.transform(score_on)), label)
 
 
 def preselect_by_correlation(
@@ -71,37 +72,24 @@ def forward_select(
     label: str = "y",
     fmax: int = 5,
     model: str = "lr",
-    num_trees: int = 50,
-    seed: int = 42,
 ) -> tuple[list[str], list[dict]]:
     """Greedy forward selection: at each step add the candidate that
     maximizes holdout R^2; stop at fmax or when nothing improves.
     Returns (selected, per-step metric history)."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import LinearRegression, RandomForestRegressor
-
     train = df.where(F.col("split") == "train")
     valid = df.where(F.col("split") == "valid")
     train.cache().count()
     valid.cache().count()
-
-    def fit_score(cols: list[str]) -> float:
-        va = VectorAssembler(inputCols=cols, outputCol="features")
-        if model == "rf":
-            est = RandomForestRegressor(
-                labelCol=label, numTrees=num_trees, maxDepth=5, seed=seed
-            )
-        else:
-            est = LinearRegression(labelCol=label, regParam=0.01)
-        m = est.fit(va.transform(train))
-        return _r2(m.transform(va.transform(valid)), label)
 
     selected: list[str] = []
     history: list[dict] = []
     best_r2 = float("-inf")
     pool = list(feature_cols)
     while pool and len(selected) < fmax:
-        scores = [(fit_score(selected + [c]), c) for c in pool]
+        scores = [
+            (_fit_r2(train, valid, selected + [c], model, label), c)
+            for c in pool
+        ]
         step_r2, step_c = max(scores)
         if step_r2 <= best_r2 + 1e-9:
             break
@@ -132,22 +120,16 @@ def select_features_pipeline(
     remaining = [c for c in feature_cols if c not in nan_dropped]
     m, var_dropped = variance_prune(m, remaining)
     remaining = [c for c in remaining if c not in var_dropped]
-    m = causal_three_way(m, key, ts).withColumnRenamed(label, "y")
+    m = causal_split(m, key, ts, fracs=(0.6, 0.8)).withColumnRenamed(label, "y")
     pool = preselect_by_correlation(
         m.where(F.col("split") == "train"), remaining, "y", top_pool
     )
     selected, history = forward_select(m, pool, "y", fmax, model)
 
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import LinearRegression, RandomForestRegressor
-
-    va = VectorAssembler(inputCols=selected, outputCol="features")
-    est = (
-        RandomForestRegressor(labelCol="y", numTrees=50, maxDepth=5, seed=42)
-        if model == "rf" else LinearRegression(labelCol="y", regParam=0.01)
+    test_r2 = _fit_r2(
+        m.where(F.col("split") != "test"), m.where(F.col("split") == "test"),
+        selected, model, "y",
     )
-    fitted = est.fit(va.transform(m.where(F.col("split") != "test")))
-    test_r2 = _r2(fitted.transform(va.transform(m.where(F.col("split") == "test"))), "y")
     return {
         "selected": selected,
         "history": history,

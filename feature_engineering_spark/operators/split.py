@@ -14,25 +14,25 @@ def causal_split(
     df: DataFrame,
     key: str = "url",
     ts: str = "warc_ts",
-    train_frac: float = 0.8,
+    fracs: tuple[float, ...] = (0.8,),
     tiebreak: str | None = None,
-    split_col: str = "split",
 ) -> DataFrame:
-    """Strictly causal train/test split per key: the chronologically first
-    ``train_frac`` of each key's rows are train, the rest test — later
-    rows NEVER inform earlier ones (reference: positional 80/20 split,
-    /root/reference/get_features.py:252-264)."""
+    """Strictly causal positional split per key into a ``split`` column,
+    rows ordered by (ts, tiebreak). One cut ``(f,)``: the first
+    floor(n*f) of each key's n rows are train, the rest test (reference:
+    positional 80/20 split, /root/reference/get_features.py:252-264).
+    Two cuts ``(f1, f2)``: the first floor(n*f1) are train, the rows up
+    to floor(n*f2) valid, the rest test (the reference's holdout of the
+    train+valid tail, get_features.py:339-346). Later rows NEVER inform
+    earlier ones."""
+    labels = {1: ("train", "test"), 2: ("train", "valid", "test")}[len(fracs)]
     order = [ts] + ([tiebreak] if tiebreak else [])
-    w = Window.partitionBy(key).orderBy(*order)
-    wc = Window.partitionBy(key)
-    rn = F.row_number().over(w)
-    n = F.count(F.lit(1)).over(wc)
-    return df.withColumn(
-        split_col,
-        F.when(rn <= F.floor(n * F.lit(train_frac)), F.lit("train")).otherwise(
-            F.lit("test")
-        ),
-    )
+    rn = F.row_number().over(Window.partitionBy(key).orderBy(*order))
+    n = F.count(F.lit(1)).over(Window.partitionBy(key))
+    label = F.when(rn <= F.floor(n * F.lit(fracs[0])), F.lit(labels[0]))
+    for frac, name in zip(fracs[1:], labels[1:]):
+        label = label.when(rn <= F.floor(n * F.lit(frac)), F.lit(name))
+    return df.withColumn("split", label.otherwise(F.lit(labels[-1])))
 
 
 def variance_prune(df: DataFrame, cols: list[str]) -> tuple[DataFrame, list[str]]:

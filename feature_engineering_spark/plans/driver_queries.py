@@ -23,6 +23,7 @@ from feature_engineering_spark.operators.lagging import (
     rolling_causal_stats,
 )
 from feature_engineering_spark.operators.sessionize import sessionize
+from feature_engineering_spark.operators.split import causal_split
 from feature_engineering_spark.plans.data_queries import _t
 
 
@@ -207,16 +208,7 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 # ---------------------------------------------------------------- O6
 def q_causal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wc = Window.partitionBy("user_id")
-    out = ev.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n_user", F.count(F.lit(1)).over(wc)
-    )
-    out = out.withColumn(
-        "split",
-        F.when(F.col("rn") <= F.floor(F.col("n_user") * 0.8), F.lit("train"))
-        .otherwise(F.lit("test")),
-    )
+    out = causal_split(ev, key="user_id", ts="ts", tiebreak="event_id")
     return out.groupBy("user_id", "split").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("event_id").alias("min_eid"),

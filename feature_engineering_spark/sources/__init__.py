@@ -1,6 +1,5 @@
 from feature_engineering_spark.sources.pages import (  # noqa: F401
     generate_labels,
     generate_pages,
-    write_labels_parquet,
-    write_pages_parquet,
+    stage_input,
 )

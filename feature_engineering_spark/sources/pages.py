@@ -141,8 +141,16 @@ def _write_parquet(pdf: pd.DataFrame, path: str) -> str:
     return path
 
 
-def write_pages_parquet(path: str, n_rows: int, seed: int = 42) -> str:
-    return _write_parquet(generate_pages(n_rows, seed), path)
+def stage_input(root: str, table: str, n_rows: int) -> str:
+    """Path of ``<root>/_input/<table>.parquet`` (``table`` is "pages" or
+    "labels"), written from the generator (``n_rows``, seed 42) only when
+    no file is there yet: a re-run, or a harness that placed its own
+    pre-written inputs there, reads the existing file as it is."""
+    path = os.path.join(root, "_input", f"{table}.parquet")
+    if not os.path.exists(path):
+        generate = {"pages": generate_pages, "labels": generate_labels}[table]
+        _write_parquet(generate(n_rows, seed=42), path)
+    return path
 
 
 def url_plan(n_rows: int, seed: int = 42, n_urls: int | None = None) -> pd.DataFrame:
@@ -182,7 +190,3 @@ def pages_distributed(spark, n_rows: int, seed: int = 42, n_urls: int | None = N
         "url string, warc_ts timestamp_ntz, html binary, text string, lang string"
     )
     return plan_df.mapInPandas(plan_mapper(seed), schema=schema)
-
-
-def write_labels_parquet(path: str, n_rows: int, seed: int = 42) -> str:
-    return _write_parquet(generate_labels(n_rows, seed), path)

@@ -332,8 +332,9 @@ def streaming_overlap_trim(
                 batch_df, fp_index, text=text, id_col=id_col, k=k, w=w,
                 min_shared=min_shared,
             )
+            sources = corpus.unionByName(batch_df.select(*corpus.columns))
             trimmed = excise_overlaps(
-                batch_df, corpus, pairs, text=text, id_col=id_col, k=k
+                batch_df, sources, pairs, text=text, id_col=id_col, k=k
             )
             sink_fn(trimmed, pairs, fps_b, batch_id)
 

@@ -42,16 +42,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from feature_engineering_spark.functions.text import text_scores, ws_token_count  # noqa: E402
-from feature_engineering_spark.operators.contamination import (  # noqa: E402
-    contamination_report,
+from feature_engineering_spark.operators.contamination import decontaminate  # noqa: E402
+from feature_engineering_spark.operators.dedup import (  # noqa: E402
+    dedup_exact,
+    excise_overlaps,
+    lsh_dropped_bucket_stats,
+    minhash_lsh_dedup_parts,
+    winnow_overlap_pairs,
 )
-from feature_engineering_spark.operators.dedup import dedup_exact  # noqa: E402
+from feature_engineering_spark.operators.graph import dedup_keep_canonical  # noqa: E402
 from feature_engineering_spark.operators.lm_score import filter_by_nll  # noqa: E402
 from feature_engineering_spark.operators.packing import pack_chunks  # noqa: E402
-from feature_engineering_spark.operators.pii import (  # noqa: E402
-    pii_counts,
-    scrub_text,
-)
+from feature_engineering_spark.operators.pii import pii_total, scrub_pii  # noqa: E402
 from feature_engineering_spark.operators.repetition import (  # noqa: E402
     filter_repetitive,
     filter_repetitive_lines,
@@ -59,6 +61,7 @@ from feature_engineering_spark.operators.repetition import (  # noqa: E402
 from feature_engineering_spark.operators.split import domain_mix_sample  # noqa: E402
 from feature_engineering_spark.plans.checkpoint import Pipeline  # noqa: E402
 from feature_engineering_spark.session import get_spark  # noqa: E402
+from feature_engineering_spark.sources.pages import stage_input  # noqa: E402
 
 # Benchmark probe sentences (stand-in for a real eval set's documents).
 # Deliberately multi-word so 3-gram probes are specific, not boilerplate.
@@ -84,12 +87,9 @@ def synth_input(spark, out_root: str, n_rows: int):
                           (passes EVERY drop gate by construction ->
                           winnow substring pass must excise the quote)
     """
-    from feature_engineering_spark.sources.pages import write_pages_parquet
-
-    path = os.path.join(out_root, "_input", "pages.parquet")
-    if not os.path.exists(path):
-        write_pages_parquet(path, n_rows, seed=42)
-    df = spark.read.parquet(path).select("url", "warc_ts", "text", "lang")
+    df = spark.read.parquet(stage_input(out_root, "pages", n_rows)).select(
+        "url", "warc_ts", "text", "lang"
+    )
     h = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(100))
 
     base = df.withColumn("__layer", F.lit(0))
@@ -168,10 +168,9 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
     n0 = p.rows("pages")
 
     def build_scored():
-        c = pii_counts(F.col("text"))
         return text_scores(pages).select(
             *pages.columns, "quality", "lang_guess",
-            (c["email"] + c["ipv4"] + c["phone"]).alias("n_pii"),
+            pii_total(F.col("text")).alias("n_pii"),
         )
 
     scored = p.stage("scored", build_scored, ts_col="warc_ts")
@@ -217,13 +216,6 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
     lsh_parts: dict = {}
 
     def build_neardup():
-        from feature_engineering_spark.operators.dedup import (
-            minhash_lsh_dedup_parts,
-        )
-        from feature_engineering_spark.operators.graph import (
-            dedup_keep_canonical,
-        )
-
         pairs, banded, cached = minhash_lsh_dedup_parts(
             exact, text="text", id_col="doc_id", threshold=jaccard
         )
@@ -237,10 +229,6 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
     # audits the banding actually used while its shingle cache is still
     # warm, then releases it; a resume skipped the stage, so nothing to
     # audit — the committed run already reported it)
-    from feature_engineering_spark.operators.dedup import (
-        lsh_dropped_bucket_stats,
-    )
-
     if lsh_parts:
         drop_row = lsh_dropped_bucket_stats(
             lsh_parts["banded"], max_bucket_size=64
@@ -256,13 +244,11 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
     else:
         lsh_dropped = {}
 
-    def build_decontam():
-        bad = contamination_report(
-            deduped, probes, text="text", id_col="doc_id", n=3, min_hits=2
-        )
-        return deduped.join(bad.select("doc_id"), "doc_id", "left_anti")
-
-    decontam = p.stage("decontaminated", build_decontam, ts_col="warc_ts")
+    decontam = p.stage(
+        "decontaminated",
+        lambda: decontaminate(deduped, probes, n=3, min_hits=2),
+        ts_col="warc_ts",
+    )
     n5 = p.rows("decontaminated")
 
     # byte-identity audit of everything that SURVIVED, on ingest bytes,
@@ -275,14 +261,10 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
     # trimming legitimately rewrites text, same as the scrub below. Per
     # pair, the LONGER doc is trimmed (it embeds the shared span amid
     # its own content; the shorter is closer to the canonical source),
-    # tie -> the larger id. Sources are the kept side of the flagged
-    # pairs only — targeted slivers, never corpus x corpus.
+    # tie -> the larger id: each pair is oriented so that b is the side
+    # to trim, and excise_overlaps trims every b against the pairs'
+    # untrimmed a sides — targeted slivers, never corpus x corpus.
     def build_trimmed():
-        from feature_engineering_spark.operators.dedup import (
-            trim_contained_runs,
-            winnow_overlap_pairs,
-        )
-
         pairs = winnow_overlap_pairs(decontam, min_shared=2)
         nt = decontam.select("doc_id", ws_token_count(F.col("text")).alias("__nt"))
         p2 = pairs.join(
@@ -292,25 +274,15 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
             nt.withColumnRenamed("doc_id", "b").withColumnRenamed("__nt", "nb"),
             "b",
         )
-        trim_ids = p2.select(
-            F.when(F.col("na") > F.col("nb"), F.col("a"))
-            .otherwise(F.col("b"))
-            .alias("doc_id")
-        ).distinct()
-        both = pairs.select(F.col("a").alias("doc_id")).unionByName(
-            pairs.select(F.col("b").alias("doc_id"))
-        ).distinct()
-        keep_ids = both.join(trim_ids, "doc_id", "left_anti")
-        flagged = decontam.join(trim_ids, "doc_id", "left_semi")
-        partners = decontam.join(keep_ids, "doc_id", "left_semi")
-        t = trim_contained_runs(flagged, partners)
-        replaced = decontam.drop("text").join(
-            t.select("doc_id", "text", "n_tokens_removed"), "doc_id"
+        longer = F.col("na") > F.col("nb")
+        oriented = p2.select(
+            F.when(longer, F.col("b")).otherwise(F.col("a")).alias("a"),
+            F.when(longer, F.col("a")).otherwise(F.col("b")).alias("b"),
         )
-        untouched = decontam.join(trim_ids, "doc_id", "left_anti").withColumn(
-            "n_tokens_removed", F.lit(0).cast("long")
-        )
-        return untouched.unionByName(replaced)
+        trimmed = excise_overlaps(decontam, decontam, oriented)
+        return decontam.drop("text").join(
+            trimmed.select("doc_id", "text", "n_tokens_removed"), "doc_id"
+        ).select(*decontam.columns, "n_tokens_removed")
 
     trimmed = p.stage("substring_trimmed", build_trimmed, ts_col="warc_ts")
     docs_trimmed = trimmed.where(F.col("n_tokens_removed") > 0).count()
@@ -320,7 +292,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
 
     def build_published():
         return (
-            trimmed.withColumn("text", scrub_text(F.col("text")))
+            scrub_pii(trimmed)
             .withColumn("published_sha", F.sha2("text", 256))
             .drop("ingest_sha", "n_tokens_removed")
         )
@@ -329,8 +301,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
     n6 = p.rows("published")
     masked = published.where(F.col("n_pii") > 0).count()
     # the scrub must leave NOTHING matching the PII patterns
-    c = pii_counts(F.col("text"))
-    residual = published.where((c["email"] + c["ipv4"] + c["phone"]) > 0).count()
+    residual = published.where(pii_total(F.col("text")) > 0).count()
 
     # domain reweighting to the target language mix (largest feasible
     # size), then fixed-token-budget packing — the tokenizer-facing

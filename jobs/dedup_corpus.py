@@ -30,6 +30,7 @@ from feature_engineering_spark.operators.dedup import (  # noqa: E402
 )
 from feature_engineering_spark.plans.checkpoint import Pipeline  # noqa: E402
 from feature_engineering_spark.session import get_spark  # noqa: E402
+from feature_engineering_spark.sources.pages import stage_input  # noqa: E402
 
 
 def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
@@ -37,12 +38,7 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
     p = Pipeline(spark, out_root)
 
     def load_pages():
-        from feature_engineering_spark.sources.pages import write_pages_parquet
-
-        path = os.path.join(out_root, "_input", "pages.parquet")
-        if not os.path.exists(path):
-            write_pages_parquet(path, n_rows, seed=42)
-        df = spark.read.parquet(path)
+        df = spark.read.parquet(stage_input(out_root, "pages", n_rows))
         # the synthetic fixture has no duplicates — inject a deterministic
         # dup layer so the dedup stages demonstrably remove rows: ~5% exact
         # copies and ~5% near-copies (one appended token)

@@ -39,6 +39,7 @@ from feature_engineering_spark.operators.skew import salted_window_features  # n
 from feature_engineering_spark.operators.windows import derive_text_signals  # noqa: E402
 from feature_engineering_spark.plans.checkpoint import Pipeline  # noqa: E402
 from feature_engineering_spark.session import get_spark  # noqa: E402
+from feature_engineering_spark.sources.pages import stage_input  # noqa: E402
 
 
 def run(spark, pages_path: str | None, out_root: str, n_rows: int,
@@ -47,16 +48,9 @@ def run(spark, pages_path: str | None, out_root: str, n_rows: int,
     t_start = time.monotonic()
 
     def load_pages():
-        if pages_path:
-            return spark.read.parquet(pages_path)
-        import tempfile
-
-        from feature_engineering_spark.sources.pages import write_pages_parquet
-
-        tmp = os.path.join(out_root, "_input", "pages.parquet")
-        if not os.path.exists(tmp):
-            write_pages_parquet(tmp, n_rows, seed=42)
-        return spark.read.parquet(tmp)
+        return spark.read.parquet(
+            pages_path or stage_input(out_root, "pages", n_rows)
+        )
 
     pages = p.stage("pages", load_pages, ts_col="warc_ts")
     n_pages = p.rows("pages")
@@ -93,12 +87,9 @@ def run(spark, pages_path: str | None, out_root: str, n_rows: int,
     # sessions->labeled order, with one fewer 8M-row shuffle and one fewer
     # checkpoint materialization.
     def build_enriched():
-        from feature_engineering_spark.sources.pages import write_labels_parquet
-
-        lab_path = os.path.join(out_root, "_input", "labels.parquet")
-        if not os.path.exists(lab_path):
-            write_labels_parquet(lab_path, n_rows, seed=42)
-        labels = spark.read.parquet(lab_path).withColumn(
+        labels = spark.read.parquet(
+            stage_input(out_root, "labels", n_rows)
+        ).withColumn(
             "lab_key", F.xxhash64("url", "label_ts", "iri")
         )
         lab = asof_join(

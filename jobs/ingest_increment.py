@@ -83,6 +83,7 @@ BOILER = "follow us on social media today"
 EMB_DIM = 16
 from feature_engineering_spark.plans.checkpoint import Pipeline  # noqa: E402
 from feature_engineering_spark.session import get_spark  # noqa: E402
+from feature_engineering_spark.sources.pages import stage_input  # noqa: E402
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -166,15 +167,9 @@ def run(spark, out_root: str, n_rows: int, n_batches: int = 2,
         threshold: float = 0.6) -> dict:
     p = Pipeline(spark, out_root)
 
-    def load_pages():
-        from feature_engineering_spark.sources.pages import write_pages_parquet
-
-        path = os.path.join(out_root, "_input", "pages.parquet")
-        if not os.path.exists(path):
-            write_pages_parquet(path, n_rows, seed=42)
-        return spark.read.parquet(path)
-
-    pages = _with_embedding(load_pages())
+    pages = _with_embedding(
+        spark.read.parquet(stage_input(out_root, "pages", n_rows))
+    )
     # one 100-way hash split drives the corpus/batch partition: slots
     # [0, 60) are the initial corpus, [60, 100) arrive in batches
     slot = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(100))
@@ -347,7 +342,7 @@ def run(spark, out_root: str, n_rows: int, n_batches: int = 2,
         trimmed_k = p.stage(
             f"trimmed_{k:03d}",
             lambda s=survivors, pairs=overlap_k, corpus=corpus: excise_overlaps(
-                s, corpus, pairs
+                s, corpus.unionByName(s.select(*corpus.columns)), pairs
             ),
             ts_col=None,
         )

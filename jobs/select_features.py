@@ -16,8 +16,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from feature_engineering_spark.functions.features import feature_columns  # noqa: E402
 from feature_engineering_spark.operators.asof import asof_join  # noqa: E402
 from feature_engineering_spark.operators.selection import (  # noqa: E402
@@ -26,6 +24,7 @@ from feature_engineering_spark.operators.selection import (  # noqa: E402
 from feature_engineering_spark.operators.skew import salted_window_features  # noqa: E402
 from feature_engineering_spark.operators.windows import derive_text_signals  # noqa: E402
 from feature_engineering_spark.session import get_spark  # noqa: E402
+from feature_engineering_spark.sources.pages import stage_input  # noqa: E402
 
 
 def main():
@@ -38,21 +37,8 @@ def main():
     args = ap.parse_args()
     spark = get_spark("select_features", master=args.master)
 
-    import tempfile
-
-    from feature_engineering_spark.sources.pages import (
-        write_labels_parquet,
-        write_pages_parquet,
-    )
-
-    os.makedirs(args.out, exist_ok=True)
-    ppath = os.path.join(args.out, "pages.parquet")
-    lpath = os.path.join(args.out, "labels.parquet")
-    if not os.path.exists(ppath):
-        write_pages_parquet(ppath, args.rows, seed=42)
-        write_labels_parquet(lpath, args.rows, seed=42)
-    pages = spark.read.parquet(ppath)
-    labels = spark.read.parquet(lpath)
+    pages = spark.read.parquet(stage_input(args.out, "pages", args.rows))
+    labels = spark.read.parquet(stage_input(args.out, "labels", args.rows))
 
     sig = derive_text_signals(pages).select(
         "url", "warc_ts", "n_chars", "n_tokens", "digit_ratio"

@@ -818,7 +818,11 @@ def test_winnow_overlap_guarantee_and_cap(spark):
     """A shared token run of >= w+k-1 tokens guarantees a shared
     fingerprint (pair detected); a k-gram run shared by more docs than
     fp_doc_cap is dropped with accounting and creates no pairs."""
-    from feature_engineering_spark.operators.dedup import winnow_overlap_pairs
+    from feature_engineering_spark.operators.dedup import (
+        lsh_dropped_bucket_stats,
+        winnow_fingerprints,
+        winnow_overlap_pairs,
+    )
 
     shared = "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10"  # 10 >= w+k-1 = 8
     rows = [
@@ -836,15 +840,17 @@ def test_winnow_overlap_guarantee_and_cap(spark):
     rows += [(100 + i, boiler) for i in range(8)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    stats: dict = {}
     pairs = {
         (r["a"], r["b"]): r["n_shared"]
         for r in winnow_overlap_pairs(
-            docs, k=5, w=4, min_shared=1, fp_doc_cap=4, stats=stats
+            docs, k=5, w=4, min_shared=1, fp_doc_cap=4
         ).collect()
     }
     assert (1, 2) in pairs  # the guarantee
-    assert stats["fp_hot"] > 0 and stats["fp_hot_docrows"] >= 8
+    stats = lsh_dropped_bucket_stats(
+        winnow_fingerprints(docs, k=5, w=4), 4, ("fp",)
+    ).collect()[0]
+    assert stats["n_dropped_buckets"] > 0 and stats["n_dropped_rows"] >= 8
     # no boilerplate-only pair survived the cap
     assert not any(a >= 100 and b >= 100 for a, b in pairs)
     assert 3 not in {x for p in pairs for x in p}

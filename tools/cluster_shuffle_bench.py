@@ -35,27 +35,19 @@ CHILD = r"""
 import json, sys, time, urllib.request
 sys.path.insert(0, {repo!r})
 master, sf_dir, workload = sys.argv[1], sys.argv[2], sys.argv[3]
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+from feature_engineering_spark.session import get_spark
 
-builder = (SparkSession.builder.appName(f"csb-{{workload}}")
-    .master(master)
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.ui.enabled", "true")          # REST API = metrics source
-    .config("spark.ui.port", "4049")
-    .config("spark.local.dir", "/dev/shm/spark-local")
-    .config("spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .config("spark.sql.codegen.methodSplitThreshold", "256"))
+# the REST API is the metrics source
+extra = {{"spark.ui.enabled": "true", "spark.ui.port": "4049"}}
 if master.startswith("local-cluster"):
     # separate executor JVMs spawn their own Python workers: the repo
     # must be importable there too (local[N] inherits the driver's
     # sys.path; a real cluster ships the package or sets this env)
-    builder = (builder.config("spark.executor.memory", "3g")
-               .config("spark.executorEnv.PYTHONPATH", {repo!r}))
-spark = builder.getOrCreate()
+    extra.update({{"spark.executor.memory": "3g",
+                   "spark.executorEnv.PYTHONPATH": {repo!r}}})
+spark = get_spark(f"csb-{{workload}}", master, shuffle_partitions=8,
+                  extra_confs=extra)
 spark.sparkContext.setLogLevel("ERROR")
 
 ev = spark.read.parquet(f"{{sf_dir}}/events.parquet")

@@ -174,11 +174,10 @@ def main() -> None:
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH", "BASELINE.md"))
     args = ap.parse_args()
 
-    from feature_engineering_spark.sources.pages import write_labels_parquet
+    from feature_engineering_spark.sources.pages import stage_input
 
     base = "/tmp/fes_scaling"
     pages = os.path.join(base, f"pages_{args.rows}.parquet")
-    labels = os.path.join(base, f"labels_{args.rows}.parquet")
     if not os.path.exists(os.path.join(pages, "_SUCCESS")):
         gen = (
             "import sys; sys.path.insert(0, {repo!r});"
@@ -188,8 +187,8 @@ def main() -> None:
             "pages_distributed(s, {rows}).write.mode('overwrite').parquet({out!r})"
         ).format(repo=REPO, rows=args.rows, out=pages)
         subprocess.run([sys.executable, "-c", gen], check=True, timeout=1200)
-    if not os.path.exists(labels):
-        write_labels_parquet(labels, args.rows, seed=42)
+    labels = stage_input(os.path.join(base, f"rows_{args.rows}"), "labels",
+                         args.rows)
 
     # The sandbox host is shared (external tenants routinely push loadavg
     # past 10, flattening any scaling curve). Strategy: several attempts,
