@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from feature_engineering_spark.functions.timeutil import epoch_seconds
@@ -44,6 +44,11 @@ from feature_engineering_spark.functions.timeutil import epoch_seconds
 
 def _as_list(x: str | Iterable[str]) -> list[str]:
     return [x] if isinstance(x, str) else list(x)
+
+
+def _quote(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def asof_join(
@@ -97,16 +102,21 @@ def _asof_union(
     # forward wants it AFTER (visible in the leading frame).
     ltag, rtag = (1, 0) if backward else (0, 1)
 
-    payload = F.struct(
-        F.col(rts).cast("timestamp").alias("__rts"),
-        *([F.col(right_tiebreak).alias("__tb")] if right_tiebreak else []),
-        *[F.col(c).alias(f"v{i}") for i, c in enumerate(right_cols)],
-    )
-    r2 = right.select(
-        *[F.col(k) for k in keys],
-        F.col(rts).cast("timestamp").alias("__ts"),
-        F.lit(rtag).alias("__tag"),
-        payload.alias("__r"),
+    # The projections and the window are SQL text, one selectExpr each:
+    # every Column builder is a Py4J round trip or several (see
+    # operators/similarity), and these projections grow with the schemas.
+    # The other side's payload is an untyped NULL; the union widens it to
+    # that payload's type.
+    q = _quote
+    ts = f"CAST({q(rts)} AS TIMESTAMP)"
+    payload = ", ".join([
+        f"{ts} AS __rts",
+        *([f"{q(right_tiebreak)} AS __tb"] if right_tiebreak else []),
+        *[f"{q(c)} AS v{i}" for i, c in enumerate(right_cols)],
+    ])
+    r2 = right.selectExpr(
+        *map(q, keys), f"{ts} AS __ts", f"{rtag} AS __tag",
+        f"struct({payload}) AS __r", "NULL AS __l",
     )
     # Left payload: ONE nullable struct of the non-key left columns (keys
     # stay top-level for the hash partitioning). An UnsafeRow reserves a
@@ -115,15 +125,11 @@ def _asof_union(
     # schema| of dead weight through the union's shuffle; a null struct
     # costs one slot.
     lcols = [c for c in left.columns if c not in keys]
-    lstruct = F.struct(*[F.col(f"`{c}`").alias(c) for c in lcols])
-    l2 = left.select(
-        *[F.col(k) for k in keys],
-        F.col(lts).cast("timestamp").alias("__ts"),
-        F.lit(ltag).alias("__tag"),
-        F.lit(None).cast(r2.schema["__r"].dataType).alias("__r"),
-        lstruct.alias("__l"),
+    lstruct = ", ".join(f"{q(c)} AS {q(c)}" for c in lcols)
+    l2 = left.selectExpr(
+        *map(q, keys), f"CAST({q(lts)} AS TIMESTAMP) AS __ts",
+        f"{ltag} AS __tag", "NULL AS __r", f"struct({lstruct}) AS __l",
     )
-    r2 = r2.withColumn("__l", F.lit(None).cast(l2.schema["__l"].dataType))
     u = l2.unionByName(r2)
 
     # Duplicate right timestamps: without a tiebreak, "which right row
@@ -131,29 +137,29 @@ def _asof_union(
     # pass right_tiebreak (carried inside the payload struct) to pin it.
     order = ["__ts", "__tag"]
     if right_tiebreak is not None:
-        u = u.withColumn("__tb", F.col("__r").getField("__tb"))
+        u = u.selectExpr("*", "__r.__tb AS __tb")
         order.append("__tb")
-    w = Window.partitionBy(*keys).orderBy(*order)
+    over = f"PARTITION BY {', '.join(map(q, keys))} ORDER BY {', '.join(order)}"
     if backward:
-        frame = w.rowsBetween(Window.unboundedPreceding, 0)
-        matched: Column = F.last("__r", ignorenulls=True).over(frame)
+        frame = "UNBOUNDED PRECEDING AND CURRENT ROW"
+        matched = f"last(__r, true) OVER ({over} ROWS BETWEEN {frame})"
     else:
-        frame = w.rowsBetween(0, Window.unboundedFollowing)
-        matched = F.first("__r", ignorenulls=True).over(frame)
+        frame = "CURRENT ROW AND UNBOUNDED FOLLOWING"
+        matched = f"first(__r, true) OVER ({over} ROWS BETWEEN {frame})"
 
-    res = u.withColumn("__m", matched).where(F.col("__tag") == ltag)
+    res = u.selectExpr("*", f"{matched} AS __m").where(f"__tag = {ltag}")
     if tol is not None:
         dt = epoch_seconds(F.col("__ts")) - epoch_seconds(F.col("__m.__rts"))
         in_tol = (F.abs(dt) <= F.lit(float(tol)))
         res = res.withColumn("__m", F.when(in_tol, F.col("__m")))
     out_left = [
-        F.col(c).alias(c) if c in keys else F.col("__l").getField(c).alias(c)
+        f"{q(c)} AS {q(c)}" if c in keys else f"__l.{q(c)} AS {q(c)}"
         for c in left.columns
     ]
-    return res.select(
+    return res.selectExpr(
         *out_left,
-        F.col("__m.__rts").alias("matched_ts"),
-        *[F.col(f"__m.v{i}").alias(n) for i, n in enumerate(out_names)],
+        "__m.__rts AS matched_ts",
+        *[f"__m.v{i} AS {q(n)}" for i, n in enumerate(out_names)],
     )
 
 

@@ -11,17 +11,21 @@ Scale design notes (the point of each operator is its shuffle shape):
 - simhash: signature scan-side; bucketing by signature prefix bounds the
   candidate join the same way.
 - embedding near-dup: signed-random-projection LSH (embedding_neardup_lsh)
-  is the scale path — hyperplane sign bits scan-side, band-bucket join,
-  exact in-bucket cosine verify; the all-pairs operator is the recall
-  oracle for tests only.
+  is the scale path — hyperplane sign bits scan-side, the band rows carry
+  their vectors through one (band, bucket) exchange, and a grouped-map
+  numpy verify scores each bucket's pairs exactly (bit-identical to the
+  JVM cosine fold); the all-pairs operator is the recall oracle for tests
+  only.
 - all LSH candidate generators cap bucket sizes: near-identical
   mega-clusters are the exact-dedup pass's responsibility, never a
   quadratic join. The shared LSH guard and pair machinery live in one
   place each: ``_cap_buckets`` (the cap), ``_candidates_from_banded``
-  (the band-bucket self-join), ``_probe_index`` (the incremental
-  operators' broadcast probe of a committed index) and ``_verify_pairs``
-  (the exact verify, scored by ``_jaccard_sql`` or similarity's
-  ``_cosine_sql``).
+  (the MinHash band-bucket self-join), ``_probe_index`` (the incremental
+  operators' broadcast probe of a committed index), ``_verify_pairs``
+  (the exact verify of joined candidates, scored by ``_jaccard_sql`` or
+  similarity's ``_cosine_sql``) and ``_srp_bucket_pairs`` (the SRP
+  within-bucket verify, embedding_neardup_lsh and the in-batch arm of
+  embedding_lsh_incremental).
 """
 
 from __future__ import annotations
@@ -690,9 +694,13 @@ def embedding_neardup_lsh(
 ) -> DataFrame:
     """Embedding near-dup PAIRS at scale: signed-random-projection LSH.
 
-    Shuffle shape: signatures are a scan-side projection; the only shuffle
-    is the (band, bucket) self-join; candidates get an exact in-bucket
-    cosine verify >= threshold. Never an all-pairs product — this replaces
+    Shuffle shape: one scan-side projection signs each vector once; its
+    band rows carry the vector through ONE hash exchange on (band,
+    bucket), which both the bucket cap's window and the grouped verify
+    (``_srp_bucket_pairs``) read; a second, small exchange takes the
+    ``distinct`` of the VERIFIED pairs (a pair colliding in several bands
+    is verified once per band). No candidate self-join, no join back to
+    the vectors. Never an all-pairs product — this replaces
     ``embedding_neardup_pairs`` (kept as the recall oracle in tests;
     property-tested recall >= 0.9 on near-dup fixtures).
 
@@ -700,33 +708,28 @@ def embedding_neardup_lsh(
     choose r ≈ log2(N / target_bucket_size) (e.g. 10^9 vectors, 1k-row
     buckets → r=20, bands=4 → nbits=80) and keep the recall budget via more
     bands. ``max_bucket_size`` drops degenerate buckets (identical-vector
-    clusters belong to exact dedup) — same guard as the text LSH operators.
+    clusters belong to exact dedup) — same guard as the text LSH operators,
+    and the bound on a verify group's size.
 
     P(bit agree) = 1 - angle/pi (Goemans-Williamson); P(candidate) =
     1 - (1 - p^r)^bands.
     """
-    banded = srp_banded(df, dim, emb, id_col, nbits, bands, seed)
-    cand = _candidates_from_banded(banded, max_bucket_size)
-    vv = df.select(
-        F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
-    )
-    return _verify_pairs(cand, vv, vv, "v", _cosine_sql, "cosine", threshold)
+    sig = _srp_signature(df, dim, emb, id_col, nbits, bands, seed)
+    banded = _cap_buckets(_stack_bands(sig, bands, "v"), max_bucket_size)
+    return _srp_bucket_pairs(banded, threshold)
 
 
-def srp_banded(
+def _srp_signature(
     df: DataFrame,
     dim: int,
-    emb: str = "embedding",
-    id_col: str = "vec_id",
-    nbits: int = 16,
-    bands: int = 4,
-    seed: int = 7,
+    emb: str,
+    id_col: str,
+    nbits: int,
+    bands: int,
+    seed: int,
 ) -> DataFrame:
-    """(id, band, bucket) SRP-LSH index rows for an embedding frame — the
-    embedding twin of ``minhash_banded``: exposed so ingest jobs can
-    PERSIST the banding of committed vectors as an index table and so
-    callers can compute ``lsh_dropped_bucket_stats`` on exactly the
-    banding the dedup uses.
+    """(id, v, bucket0..bucket{bands-1}): the SRP signature of each vector,
+    computed once, next to the vector ``v`` as array<double>.
 
     Bit j of the signature = [dot(v, h_j) > 0] over the ``nbits``
     ``srp_hyperplanes``; ``bands`` groups of nbits/bands consecutive bits
@@ -740,7 +743,12 @@ def srp_banded(
     run). The fold keeps the per-bit expression O(1) in codegen size (the
     lambda body is tiny; only the fold itself is interpreted) while the
     rest of the stage stays whole-stage-compiled. All scan-side JVM
-    projection — no Python, no shuffle until the band-bucket join.
+    projection — no Python.
+
+    ``v`` is NULL when a component is NULL: the cosine fold of such a
+    vector is NULL and never passes a threshold, but Arrow hands the
+    verify a NULL component as NaN, which would. Callers that do not
+    read ``v`` never evaluate it (column pruning).
 
     The bits and bucket sums are built as SQL text and reach Spark in one
     ``selectExpr``: built as Columns, the nbits x dim hyperplane literals
@@ -759,9 +767,69 @@ def srp_banded(
         for r in range(rows_per_band):
             expr = f"({expr} + ({bits[b * rows_per_band + r]}) * {2**r})"
         buckets.append(f"{expr} AS bucket{b}")
-    sig = df.selectExpr(f"{id_col} AS id", *buckets)
+    return df.selectExpr(
+        f"{id_col} AS id",
+        f"CASE WHEN exists({v}, x -> x IS NULL) THEN NULL ELSE {v} END AS v",
+        *buckets,
+    )
+
+
+def _stack_bands(sig: DataFrame, bands: int, *carry: str) -> DataFrame:
+    """(id, *carry, band, bucket): one row per band of an SRP signature."""
     stack = ", ".join(f"{b}, bucket{b}" for b in range(bands))
-    return sig.selectExpr("id", f"stack({bands}, {stack}) as (band, bucket)")
+    return sig.selectExpr(
+        "id", *carry, f"stack({bands}, {stack}) as (band, bucket)"
+    )
+
+
+def _srp_bucket_pairs(banded: DataFrame, threshold: float) -> DataFrame:
+    """Distinct verified (a, b, cosine) pairs, a < b, of an (id, v, band,
+    bucket) frame: every pair sharing a bucket with cosine >= threshold.
+
+    One ``applyInPandas`` per (band, bucket) scores the bucket's upper
+    triangle in numpy (``functions/cosine_kernel.bucket_verifier``, values
+    bit-identical to ``similarity._cosine_sql``). Its
+    ClusteredDistribution(band, bucket) is what the bucket cap's window
+    exchange already produced, so the verify adds no exchange. A
+    candidate self-join instead materializes every candidate row, joins
+    it back to both vectors, and takes any filter on the cosine into its
+    join condition, which folds the cosine once per conjunct. Rows with
+    a NULL id or vector never pair and are dropped after the cap counted
+    them."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from feature_engineering_spark.functions.cosine_kernel import bucket_verifier
+
+    id_type = banded.schema["id"].dataType
+    schema = StructType([
+        StructField("a", id_type), StructField("b", id_type),
+        StructField("cosine", DoubleType()),
+    ])
+    return (
+        banded.where("id IS NOT NULL AND v IS NOT NULL")
+        .groupBy("band", "bucket")
+        .applyInPandas(bucket_verifier(float(threshold)), schema)
+        .distinct()
+    )
+
+
+def srp_banded(
+    df: DataFrame,
+    dim: int,
+    emb: str = "embedding",
+    id_col: str = "vec_id",
+    nbits: int = 16,
+    bands: int = 4,
+    seed: int = 7,
+) -> DataFrame:
+    """(id, band, bucket) SRP-LSH index rows for an embedding frame — the
+    embedding twin of ``minhash_banded``: exposed so ingest jobs can
+    PERSIST the banding of committed vectors as an index table and so
+    callers can compute ``lsh_dropped_bucket_stats`` on exactly the
+    banding the dedup uses. The signature is ``_srp_signature``'s."""
+    return _stack_bands(
+        _srp_signature(df, dim, emb, id_col, nbits, bands, seed), bands
+    )
 
 
 def embedding_lsh_incremental(
@@ -798,10 +866,14 @@ def embedding_lsh_incremental(
       matched index rows only (a corpus bucket's population within the
       matched subset equals its full-index population — exactly the
       full-index cap at a fraction of the cost);
-    - exact-cosine verification fetches corpus vectors for candidate ids
-      only. The batch is scanned twice (signature pass + verify arm) —
-      for a typical arriving batch that is cheaper than managing a
-      persisted cache; persist upstream if the batch itself is huge.
+    - the cross verify (``_verify_pairs``) fetches corpus vectors for
+      candidate ids only: the committed index holds no vectors. The batch
+      is scanned twice (signature pass + cross verify arm) — for a
+      typical arriving batch that is cheaper than managing a persisted
+      cache; persist upstream if the batch itself is huge;
+    - in-batch pairs take ``embedding_neardup_lsh``'s grouped verify
+      (``_srp_bucket_pairs``) over the capped batch banding, whose rows
+      carry their vectors.
 
     ``intermediates``: optional dict filled with ``banded_new`` (batch
     banding BEFORE its cap) and ``hit`` (matched corpus index rows BEFORE
@@ -810,9 +882,11 @@ def embedding_lsh_incremental(
     Without this operator a continuously-ingested corpus accumulates
     embedding-near duplicates that the batch ``embedding_neardup_lsh``
     would have caught (round-4 verdict, "What's missing" #2)."""
-    banded_new = srp_banded(new_vecs, dim, emb, id_col, nbits, bands, seed)
+    banded_new = _stack_bands(
+        _srp_signature(new_vecs, dim, emb, id_col, nbits, bands, seed), bands, "v"
+    )
     if intermediates is not None:
-        intermediates["banded_new"] = banded_new
+        intermediates["banded_new"] = banded_new.drop("v")
     banded_new = _cap_buckets(banded_new, max_bucket_size)
     cross = _probe_index(banded_new, corpus_banded, max_bucket_size, intermediates)
 
@@ -826,12 +900,9 @@ def embedding_lsh_incremental(
         F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
     )
     # in-batch pairs: banded_new is already capped, so no second cap pass
-    batch_cand = _candidates_from_banded(banded_new, max_bucket_size=None)
     return _verify_pairs(
         cross, v_corp, v_new, "v", _cosine_sql, "cosine", threshold
-    ).unionByName(
-        _verify_pairs(batch_cand, v_new, v_new, "v", _cosine_sql, "cosine", threshold)
-    )
+    ).unionByName(_srp_bucket_pairs(banded_new, threshold))
 
 
 def line_corpus_dedup(

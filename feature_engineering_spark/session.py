@@ -48,8 +48,10 @@ _BASE_CONFS = {
     # admission, not a codegen-size license: C2 still silently bails on
     # far larger FUSED methods (a 3x64-term chain inside a join stage
     # stayed uncompiled and ran 5x slower than the interpreted HOF fold
-    # — which is why the LSH verifies deliberately keep their folds; see
-    # OPTIMIZATION_r06.md "negative results"). Per-JVM, data-independent;
+    # — which is why the joined LSH verifies keep their folds, and the
+    # within-bucket SRP verify left the JVM for a grouped-map numpy fold
+    # rather than a wider chain; see OPTIMIZATION_r06.md "negative
+    # results" and operators/dedup._srp_bucket_pairs). Per-JVM, data-independent;
     # a real cluster wants it on executors too (below; ignored by
     # local[N] where executor == driver JVM).
     "spark.driver.extraJavaOptions":

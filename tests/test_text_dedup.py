@@ -283,6 +283,120 @@ def test_embedding_lsh_bucket_guard(spark):
     assert (500, 501) in pairs
 
 
+def _joined_srp_lsh(df, dim, threshold, max_bucket_size):
+    """The candidate-join SRP pipeline: band-bucket self-join, distinct,
+    join back to both vectors, ``_cosine_sql`` fold per pair — the
+    reference the grouped verify must reproduce bit for bit."""
+    from feature_engineering_spark.operators.dedup import (
+        _candidates_from_banded,
+        _verify_pairs,
+        srp_banded,
+    )
+    from feature_engineering_spark.operators.similarity import _cosine_sql
+
+    cand = _candidates_from_banded(
+        srp_banded(df, dim, nbits=16, bands=4), max_bucket_size
+    )
+    vv = df.select(
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
+    )
+    return _verify_pairs(cand, vv, vv, "v", _cosine_sql, "cosine", threshold)
+
+
+def _pair_bits(df) -> dict:
+    """{(a, b): cosine bits}, every NaN one key; each pair exactly once."""
+    import struct
+
+    rows = df.collect()
+    out = {
+        (r.a, r.b): "nan" if r.cosine != r.cosine else struct.pack("<d", r.cosine)
+        for r in rows
+    }
+    assert len(out) == len(rows), "a pair was emitted twice"
+    return out
+
+
+@pytest.mark.parametrize("threshold", [-1.0, 0.9])
+@pytest.mark.parametrize("max_bucket_size", [4096, 8])
+def test_embedding_lsh_grouped_verify_matches_joined_verify(
+    spark, threshold, max_bucket_size
+):
+    """The grouped numpy verify emits exactly the candidate join's rows
+    with the same float bits: random vectors and near-dups, a zero row
+    and a 1e-200 row (zero norm product: no row), a NaN component (NaN
+    cosine passes every threshold), a NULL component and a NULL vector
+    (never pair), two 3-dim vectors (pair with each other only),
+    identical vectors colliding in all 4 bands (one row), and a 10-vector
+    identical cluster that a cap of 8 drops."""
+    dim = 16
+    rng = np.random.default_rng(23)
+    base = rng.normal(size=(60, dim))
+    rows = [(i, base[i].tolist()) for i in range(60)]
+    rows += [(100 + i, (base[i] + rng.normal(scale=0.05, size=dim)).tolist())
+             for i in range(15)]
+    twin = rng.normal(size=dim).tolist()
+    rows += [(200, twin), (201, twin)]
+    cluster = rng.normal(size=dim).tolist()
+    rows += [(300 + i, cluster) for i in range(10)]
+    nan_row = base[0].tolist()
+    nan_row[3] = float("nan")
+    null_row = base[1].tolist()
+    null_row[5] = None
+    rows += [
+        (400, [0.0] * dim), (401, [1e-200] * dim), (402, nan_row),
+        (403, null_row), (404, None), (405, [1.0, 2.0, 3.0]),
+        (406, [1.0, 2.0, 3.5]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = _pair_bits(embedding_neardup_lsh(
+        df, dim=dim, threshold=threshold, nbits=16, bands=4,
+        max_bucket_size=max_bucket_size,
+    ))
+    exp = _pair_bits(_joined_srp_lsh(df, dim, threshold, max_bucket_size))
+    assert got == exp
+    assert not any(403 in p or 404 in p for p in got)
+    # a zero norm product scores NULL, but 0 * NaN is NaN: the zero-norm
+    # rows pair only with the NaN row, and every NaN-row pair scores NaN
+    assert all(402 in p for p in got if 400 in p or 401 in p)
+    assert all(got[p] == "nan" for p in got if 402 in p)
+    if max_bucket_size == 4096:
+        assert any(402 in p for p in got)
+        assert (200, 201) in got and (300, 301) in got
+        assert (405, 406) in got and not any(405 in p for p in got if p != (405, 406))
+    else:
+        assert (200, 201) in got and not any(300 <= p[0] < 310 for p in got)
+    if threshold == -1.0:
+        assert len(got) > 100
+
+
+def test_cosine_kernel_blocks_leave_output_unchanged(monkeypatch):
+    """Scoring the triangle in blocks of BLOCK_ROWS rows emits the same
+    (i, j, cosine) rows as one block, and each cosine is the left fold
+    over the dimensions."""
+    from feature_engineering_spark.functions import cosine_kernel
+
+    rng = np.random.default_rng(7)
+    m = rng.normal(size=(37, 5))
+    m[4] = 0.0
+    m[9, 2] = np.nan
+    whole = cosine_kernel.cosine_upper_pairs(m, 0.1)
+    for block in (1, 3, 8, 36):
+        monkeypatch.setattr(cosine_kernel, "BLOCK_ROWS", block)
+        got = cosine_kernel.cosine_upper_pairs(m, 0.1)
+        for g, w in zip(got, whole):
+            np.testing.assert_array_equal(g, w)
+    i, j, cos = whole
+    assert (np.diff(i * len(m) + j) > 0).all() and (i < j).all()
+    assert set(j[i == 4]) | set(i[j == 4]) == {9}  # zero norm: NaN pairs only
+    assert np.isnan(cos[(i == 9) | (j == 9)]).all()
+    for a, b, c in zip(i, j, cos):
+        dot = na = nb = 0.0
+        for x, y in zip(m[a], m[b]):
+            dot, na, nb = dot + x * y, na + x * x, nb + y * y
+        exp = dot / (np.sqrt(na) * np.sqrt(nb))
+        assert c == exp or (np.isnan(c) and np.isnan(exp))
+
+
 def test_lsh_dropped_bucket_stats_reports_cap(spark):
     """No-silent-caps: the drop-stats companion reports exactly what the
     mega-cluster guard discards (and zero when nothing exceeds the cap)."""
