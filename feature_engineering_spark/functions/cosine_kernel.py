@@ -25,12 +25,14 @@ BLOCK_ROWS = 256
 
 
 def cosine_upper_pairs(
-    m: np.ndarray, threshold: float
+    m: np.ndarray, threshold: float, first: int = 0
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(i, j, cosine) for every row pair i < j of the (n, d) matrix ``m``,
-    n >= 2, whose cosine passes ``threshold``, row-major in (i, j). The
-    triangle is scored in blocks of BLOCK_ROWS rows against every later
-    row."""
+    n >= 2, with j >= ``first``, whose cosine passes ``threshold``,
+    row-major in (i, j). Rows before ``first`` are old and the rest new,
+    so old x old pairs are never scored; ``first=0`` is the whole upper
+    triangle. Rows are scored in blocks of BLOCK_ROWS against every
+    later new row."""
     n, d = m.shape
     mt = np.ascontiguousarray(m.T)
     sq = np.zeros(n)
@@ -39,7 +41,7 @@ def cosine_upper_pairs(
     norm = np.sqrt(sq)
     parts = []
     for r0 in range(0, n - 1, BLOCK_ROWS):
-        r1, c0 = min(r0 + BLOCK_ROWS, n - 1), r0 + 1
+        r1, c0 = min(r0 + BLOCK_ROWS, n - 1), max(r0 + 1, first)
         dot = np.zeros((r1 - r0, n - c0))
         prod = np.empty_like(dot)
         for k in range(d):
@@ -48,9 +50,7 @@ def cosine_upper_pairs(
         den = norm[r0:r1, None] * norm[None, c0:]
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = dot / den
-        # block column c is row c0 + c, so it lies above the diagonal of
-        # block row r (row r0 + r) when c >= r
-        upper = np.arange(n - c0)[None, :] >= np.arange(r1 - r0)[:, None]
+        upper = np.arange(c0, n)[None, :] > np.arange(r0, r1)[:, None]
         keep = upper & (den != 0) & (np.isnan(cos) | (cos >= threshold))
         i, j = np.nonzero(keep)
         parts.append((i + r0, j + c0, cos[i, j]))
@@ -58,27 +58,31 @@ def cosine_upper_pairs(
 
 
 def bucket_verifier(threshold: float):
-    """The applyInPandas function of one SRP-LSH bucket: (id, v) rows in,
-    (a, b, cosine) rows out for every pair a < b whose cosine passes
-    ``threshold``. Vectors of different lengths never pair (Spark's
-    ``zip_with`` pads the shorter with NULL). Rows with a NULL id or
-    vector must be filtered out before."""
+    """The applyInPandas function of one SRP-LSH bucket: (id, v, __new)
+    rows in, (a, b, cosine) rows out for every pair whose cosine passes
+    ``threshold``, where b is new and a is old or new with a < b (the
+    pair rule of ``operators/dedup._key_pairs``). Vectors of different
+    lengths never pair (Spark's ``zip_with`` pads the shorter with NULL).
+    Rows with a NULL id or vector must be filtered out before."""
 
     def verify(pdf):
-        pdf = pdf.sort_values("id", kind="stable")
+        # old rows first, so each length group's new rows start at `first`
+        pdf = pdf.sort_values(["__new", "id"], kind="stable")
         ids = pdf["id"].to_numpy()
+        new = pdf["__new"].to_numpy(bool)
         vecs = pdf["v"].to_numpy()
         lens = np.fromiter(map(len, vecs), np.int64, len(vecs))
         out = []
         for d in np.unique(lens):
             sel = np.flatnonzero(lens == d)
-            if len(sel) < 2:
+            first = len(sel) - int(new[sel].sum())
+            if len(sel) < 2 or first == len(sel):
                 continue
             i, j, cos = cosine_upper_pairs(
-                np.stack(vecs[sel]).reshape(len(sel), d), threshold
+                np.stack(vecs[sel]).reshape(len(sel), d), threshold, first
             )
             a, b = ids[sel[i]], ids[sel[j]]
-            ne = a != b  # pairs are strictly a < b: equal ids never pair
+            ne = a != b  # a pair joins two distinct ids
             out.append((a[ne], b[ne], cos[ne]))
         a, b, cos = (
             (np.concatenate(c) for c in zip(*out)) if out

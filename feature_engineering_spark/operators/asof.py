@@ -78,24 +78,6 @@ def asof_join(
         right_cols = [c for c in right.columns if c not in keys and c != rts]
     out_names = [c + suffix if c in left.columns else c for c in right_cols]
 
-    return _asof_union(
-        left, right, keys, left_ts, rts, direction,
-        tolerance_seconds, right_cols, out_names, right_tiebreak,
-    )
-
-
-def _asof_union(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    lts: str,
-    rts: str,
-    direction: str,
-    tol: float | None,
-    right_cols: list[str],
-    out_names: list[str],
-    right_tiebreak: str | None = None,
-) -> DataFrame:
     backward = direction == "backward"
     # Tag order at equal ts: backward wants the right row to sort BEFORE the
     # left row (so an exact-ts match is visible in the trailing frame);
@@ -127,7 +109,7 @@ def _asof_union(
     lcols = [c for c in left.columns if c not in keys]
     lstruct = ", ".join(f"{q(c)} AS {q(c)}" for c in lcols)
     l2 = left.selectExpr(
-        *map(q, keys), f"CAST({q(lts)} AS TIMESTAMP) AS __ts",
+        *map(q, keys), f"CAST({q(left_ts)} AS TIMESTAMP) AS __ts",
         f"{ltag} AS __tag", "NULL AS __r", f"struct({lstruct}) AS __l",
     )
     u = l2.unionByName(r2)
@@ -148,9 +130,9 @@ def _asof_union(
         matched = f"first(__r, true) OVER ({over} ROWS BETWEEN {frame})"
 
     res = u.selectExpr("*", f"{matched} AS __m").where(f"__tag = {ltag}")
-    if tol is not None:
+    if tolerance_seconds is not None:
         dt = epoch_seconds(F.col("__ts")) - epoch_seconds(F.col("__m.__rts"))
-        in_tol = (F.abs(dt) <= F.lit(float(tol)))
+        in_tol = (F.abs(dt) <= F.lit(float(tolerance_seconds)))
         res = res.withColumn("__m", F.when(in_tol, F.col("__m")))
     out_left = [
         f"{q(c)} AS {q(c)}" if c in keys else f"__l.{q(c)} AS {q(c)}"

@@ -19,13 +19,19 @@ Scale design notes (the point of each operator is its shuffle shape):
 - all LSH candidate generators cap bucket sizes: near-identical
   mega-clusters are the exact-dedup pass's responsibility, never a
   quadratic join. The shared LSH guard and pair machinery live in one
-  place each: ``_cap_buckets`` (the cap), ``_candidates_from_banded``
-  (the MinHash band-bucket self-join), ``_probe_index`` (the incremental
-  operators' broadcast probe of a committed index), ``_verify_pairs``
+  place each: ``_cap_buckets`` (the cap), ``_key_pairs`` (the one pair
+  rule over a flagged (id, *keys, __new) frame: b new, a old or new with
+  a < b — every batch row is new, an incremental operator's hit index
+  rows are old; used by ``_candidates_from_banded``, the MinHash and
+  winnow operators), ``_probe_index`` (the incremental operators'
+  broadcast probe of a committed index and its cap), ``_verify_pairs``
   (the exact verify of joined candidates, scored by ``_jaccard_sql`` or
   similarity's ``_cosine_sql``) and ``_srp_bucket_pairs`` (the SRP
-  within-bucket verify, embedding_neardup_lsh and the in-batch arm of
-  embedding_lsh_incremental).
+  within-bucket verify under the same pair rule, for
+  embedding_neardup_lsh and embedding_lsh_incremental). An incremental
+  operator finds its index-vs-batch and in-batch pairs in one step (a
+  ``_key_pairs`` self-join or the SRP grouped verify), verifies once and
+  unions no arms.
 """
 
 from __future__ import annotations
@@ -249,6 +255,29 @@ def _cap_buckets(
     )
 
 
+def _flag(df: DataFrame, new: bool) -> DataFrame:
+    """``df`` plus the constant ``__new`` flag that ``_key_pairs`` reads."""
+    return df.withColumn("__new", F.lit(new))
+
+
+def _key_pairs(flagged: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """THE pair rule of the MinHash and winnow operators: (a, b) for every
+    two rows of an (id, *keys, __new) frame that share ``keys``, where b
+    is new and a is either old or new with a < b — one row per shared key
+    (callers take ``distinct`` or count them). Batch operators flag every
+    row new, and the literal folds out of the join condition, leaving
+    ``l.id < r.id``; incremental operators flag the index rows their batch
+    hit old, so one self-join gives the index-vs-batch (a = index id) and
+    the in-batch pairs. ``cosine_kernel.cosine_upper_pairs`` applies the
+    same rule inside an SRP bucket; ``simhash_neardup_pairs`` keeps its
+    own self-join, whose verify reads both signatures inside the join."""
+    l, r = flagged.alias("l"), flagged.alias("r")
+    rule = F.col("r.__new") & (~F.col("l.__new") | (F.col("l.id") < F.col("r.id")))
+    return l.join(
+        r, [*(F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys), rule]
+    ).select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
+
+
 def _candidates_from_banded(
     banded: DataFrame, max_bucket_size: int | None = 64
 ) -> DataFrame:
@@ -263,45 +292,29 @@ def _candidates_from_banded(
     the EXACT dedup pass upstream is responsible for (jobs/dedup_corpus.py
     runs exact dedup first and EMITS the drop counts via
     lsh_dropped_bucket_stats — no silent caps)."""
-    banded = _cap_buckets(banded, max_bucket_size)
-    l, r = banded.alias("l"), banded.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .distinct()
-    )
+    banded = _flag(_cap_buckets(banded, max_bucket_size), True)
+    return _key_pairs(banded, ("band", "bucket")).distinct()
 
 
 def _probe_index(
-    banded_new: DataFrame,
-    corpus_banded: DataFrame,
-    max_bucket_size: int | None,
-    intermediates: dict | None,
+    new: DataFrame,
+    index: DataFrame,
+    keys: tuple[str, ...],
+    max_bucket_size: int | None = None,
+    intermediates: dict | None = None,
 ) -> DataFrame:
-    """Cross candidates (a = corpus id, b = batch id) of an already-capped
-    batch banding against a committed (id, band, bucket) index — the
-    broadcast probe and matched-row cap both incremental operators share
-    (scale argument in ``minhash_lsh_incremental``). Fills
-    ``intermediates['hit']`` with the matched index rows BEFORE their cap."""
-    probe = banded_new.select("band", "bucket").distinct()
-    hit = corpus_banded.join(F.broadcast(probe), ["band", "bucket"])
+    """The rows of a committed ``index`` that share ``keys`` with the
+    batch frame ``new``, capped: the batch's distinct keys broadcast into
+    one scan of the index (never shuffled), then ``_cap_buckets`` on the
+    matched rows only — a bucket's population within the matched subset
+    equals its full-index population, so this is exactly the full-index
+    cap. Fills ``intermediates['hit']`` with the matched rows BEFORE
+    their cap."""
+    probe = new.select(*keys).distinct()
+    hit = index.join(F.broadcast(probe), list(keys))
     if intermediates is not None:
         intermediates["hit"] = hit
-    hit = _cap_buckets(hit, max_bucket_size)
-    return (
-        hit.select("band", "bucket", F.col("id").alias("a"))
-        .join(
-            banded_new.select("band", "bucket", F.col("id").alias("b")),
-            ["band", "bucket"],
-        )
-        .select("a", "b")
-        .distinct()
-    )
+    return _cap_buckets(hit, max_bucket_size, keys)
 
 
 def _verify_pairs(
@@ -437,17 +450,16 @@ def minhash_lsh_incremental(
     text is re-read only for the candidate ids (semi-join pruned).
 
     Scale shape (10^12-doc corpus, 10^6-doc batch):
-    - the batch's (band, bucket) probe set BROADCASTS into one scan of
-      the index — the index is never shuffled;
-    - bucket caps mirror _candidates_from_banded and are computed on the
-      matched buckets only (a corpus bucket's population within the
-      matched subset equals its full-index population, so this is
-      exactly the full-index cap at a fraction of the cost);
-    - exact-Jaccard verification shingles the batch plus the candidate
-      corpus rows only.
+    - ``_probe_index`` broadcasts the batch's (band, bucket) probe set
+      into one scan of the index — the index is never shuffled — and
+      caps the matched rows; the batch banding keeps its own cap;
+    - one ``_key_pairs`` self-join over hit (old) ∪ batch (new) rows
+      gives the cross and the in-batch candidates, and one
+      ``_verify_pairs`` scores them all: its a side is the hit corpus
+      rows' shingles ∪ the batch's, its b side the batch's.
 
     The batch shingle frame is persisted for reuse across the signature
-    pass and both verify arms; single-consumption callers can leave it to
+    pass and the verify; single-consumption callers can leave it to
     session cleanup (see minhash_lsh_dedup's caching note).
 
     ``intermediates``: optional dict the operator fills with
@@ -468,23 +480,25 @@ def minhash_lsh_incremental(
     if intermediates is not None:
         intermediates["banded_new"] = banded_new
         intermediates["shingles"] = g_new
+    keys = ("band", "bucket")
     banded_new = _cap_buckets(banded_new, max_bucket_size)
-    cross = _probe_index(banded_new, corpus_banded, max_bucket_size, intermediates)
+    hit = _probe_index(banded_new, corpus_banded, keys, max_bucket_size, intermediates)
+    cand = _key_pairs(
+        _flag(hit.select("id", *keys), False).unionByName(_flag(banded_new, True)),
+        keys,
+    ).distinct()
 
-    # --- exact verify: shingle ONLY the candidate corpus rows
+    # --- exact verify: shingle ONLY the hit corpus rows; each shares a
+    # bucket with a capped batch row, so each is the a side of a candidate
     g_corp = shingle_frame(
         corpus.join(
-            cross.select(F.col("a").alias(id_col)).distinct(),
-            id_col, "left_semi",
+            hit.select(F.col("id").alias(id_col)).distinct(), id_col, "left_semi"
         ),
         text, id_col, shingle_n, shingle_unit,
     )
-    # in-batch pairs: banded_new is already capped, so no second cap pass
-    batch_cand = _candidates_from_banded(banded_new, max_bucket_size=None)
     return _verify_pairs(
-        cross, g_corp, g_new, "sh", _jaccard_sql, "jaccard", threshold
-    ).unionByName(
-        _verify_pairs(batch_cand, g_new, g_new, "sh", _jaccard_sql, "jaccard", threshold)
+        cand, g_corp.unionByName(g_new), g_new, "sh", _jaccard_sql, "jaccard",
+        threshold,
     )
 
 
@@ -716,7 +730,7 @@ def embedding_neardup_lsh(
     """
     sig = _srp_signature(df, dim, emb, id_col, nbits, bands, seed)
     banded = _cap_buckets(_stack_bands(sig, bands, "v"), max_bucket_size)
-    return _srp_bucket_pairs(banded, threshold)
+    return _srp_bucket_pairs(_flag(banded, True), threshold)
 
 
 def _srp_signature(
@@ -783,19 +797,20 @@ def _stack_bands(sig: DataFrame, bands: int, *carry: str) -> DataFrame:
 
 
 def _srp_bucket_pairs(banded: DataFrame, threshold: float) -> DataFrame:
-    """Distinct verified (a, b, cosine) pairs, a < b, of an (id, v, band,
-    bucket) frame: every pair sharing a bucket with cosine >= threshold.
+    """Distinct verified (a, b, cosine) pairs of an (id, v, band, bucket,
+    __new) frame: every pair sharing a bucket under ``_key_pairs``' rule
+    (b new, a old or new with a < b) with cosine >= threshold.
 
-    One ``applyInPandas`` per (band, bucket) scores the bucket's upper
-    triangle in numpy (``functions/cosine_kernel.bucket_verifier``, values
-    bit-identical to ``similarity._cosine_sql``). Its
-    ClusteredDistribution(band, bucket) is what the bucket cap's window
-    exchange already produced, so the verify adds no exchange. A
-    candidate self-join instead materializes every candidate row, joins
-    it back to both vectors, and takes any filter on the cosine into its
-    join condition, which folds the cosine once per conjunct. Rows with
-    a NULL id or vector never pair and are dropped after the cap counted
-    them."""
+    One ``applyInPandas`` per (band, bucket) scores the bucket's pairs in
+    numpy (``functions/cosine_kernel.bucket_verifier``, values
+    bit-identical to ``similarity._cosine_sql``); old x old pairs are
+    never scored. On a frame the bucket cap's window produced, its
+    ClusteredDistribution(band, bucket) is already there, so the verify
+    adds no exchange. A candidate self-join instead materializes every
+    candidate row, joins it back to both vectors, and takes any filter on
+    the cosine into its join condition, which folds the cosine once per
+    conjunct. Rows with a NULL id or vector never pair and are dropped
+    after the cap counted them."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from feature_engineering_spark.functions.cosine_kernel import bucket_verifier
@@ -856,24 +871,19 @@ def embedding_lsh_incremental(
     Only the batch is signed. The corpus contributes ``corpus_banded`` —
     its committed (id, band, bucket) SRP index (``srp_banded`` output,
     persisted as a table by the ingest job; MUST use the same
-    dim/nbits/bands/seed) — and its vectors are re-read only for the
-    candidate ids (semi-join pruned).
+    dim/nbits/bands/seed) — and its vectors are read only for the hit
+    index rows.
 
     Scale shape (10^9-vector corpus, 10^6-vector batch):
-    - the batch's distinct (band, bucket) probe set BROADCASTS into one
-      scan of the index — the index is never shuffled;
-    - bucket caps mirror ``embedding_neardup_lsh`` and are computed on the
-      matched index rows only (a corpus bucket's population within the
-      matched subset equals its full-index population — exactly the
-      full-index cap at a fraction of the cost);
-    - the cross verify (``_verify_pairs``) fetches corpus vectors for
-      candidate ids only: the committed index holds no vectors. The batch
-      is scanned twice (signature pass + cross verify arm) — for a
-      typical arriving batch that is cheaper than managing a persisted
-      cache; persist upstream if the batch itself is huge;
-    - in-batch pairs take ``embedding_neardup_lsh``'s grouped verify
-      (``_srp_bucket_pairs``) over the capped batch banding, whose rows
-      carry their vectors.
+    - ``_probe_index`` broadcasts the batch's distinct (band, bucket)
+      probe set into one scan of the index — the index is never
+      shuffled — and caps the matched rows; the batch banding keeps its
+      own cap, as in ``embedding_neardup_lsh``;
+    - the capped hit rows (old) take their vectors from one join to the
+      corpus (the committed index holds no vectors; ``_srp_signature``'s
+      NULL rule applies), the capped batch band rows (new) carry theirs,
+      and ``_srp_bucket_pairs`` verifies both in one grouped pass: the
+      batch is scanned once.
 
     ``intermediates``: optional dict filled with ``banded_new`` (batch
     banding BEFORE its cap) and ``hit`` (matched corpus index rows BEFORE
@@ -887,22 +897,14 @@ def embedding_lsh_incremental(
     )
     if intermediates is not None:
         intermediates["banded_new"] = banded_new.drop("v")
+    keys = ("band", "bucket")
     banded_new = _cap_buckets(banded_new, max_bucket_size)
-    cross = _probe_index(banded_new, corpus_banded, max_bucket_size, intermediates)
-
-    # --- exact verify: fetch ONLY the candidate corpus vectors
-    v_new = new_vecs.select(
-        F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
+    hit = _probe_index(banded_new, corpus_banded, keys, max_bucket_size, intermediates)
+    v_corp = _srp_signature(corpus, dim, emb, id_col, nbits, bands, seed)
+    old = hit.select("id", *keys).join(v_corp.select("id", "v"), "id")
+    return _srp_bucket_pairs(
+        _flag(old, False).unionByName(_flag(banded_new, True)), threshold
     )
-    v_corp = corpus.join(
-        cross.select(F.col("a").alias(id_col)).distinct(), id_col, "left_semi"
-    ).select(
-        F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
-    )
-    # in-batch pairs: banded_new is already capped, so no second cap pass
-    return _verify_pairs(
-        cross, v_corp, v_new, "v", _cosine_sql, "cosine", threshold
-    ).unionByName(_srp_bucket_pairs(banded_new, threshold))
 
 
 def line_corpus_dedup(
@@ -1145,19 +1147,16 @@ def winnow_overlap_pairs(
         df, text=text, id_col=id_col, k=k, w=w, unit=unit
     )
     return _shared_fp_pairs(
-        _cap_buckets(fps, fp_doc_cap, ("fp",)), id_col, min_shared
+        _cap_buckets(_flag(fps, True), fp_doc_cap, ("fp",)), id_col, min_shared
     )
 
 
 def _shared_fp_pairs(fps: DataFrame, id_col: str, min_shared: int) -> DataFrame:
-    """(a, b, n_shared), a < b, for documents of one (id_col, fp) frame
-    sharing at least ``min_shared`` fingerprints: the fingerprint
-    self-join and its per-pair count."""
-    a = fps.select(F.col("fp"), F.col(id_col).alias("a"))
-    b = fps.select(F.col("fp"), F.col(id_col).alias("b"))
+    """(a, b, n_shared) for the documents of a flagged (id_col, fp, __new)
+    frame that ``_key_pairs`` pairs on at least ``min_shared``
+    fingerprints: the fingerprint self-join and its per-pair count."""
     return (
-        a.join(b, "fp")
-        .where(F.col("a") < F.col("b"))
+        _key_pairs(fps.withColumnRenamed(id_col, "id"), ("fp",))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
@@ -1192,42 +1191,26 @@ def winnow_overlap_incremental(
     (probe, commit, probe) and the property test covers multi-part
     arrivals via the grow-the-index path.
 
-    The hot-fingerprint cap is exact, not approximate: a corpus
-    fingerprint's population within the probed subset equals its full-
-    index population (the probe is a semi-join on fp), so corpus-hits +
-    batch occurrences reproduce the full-run cap for every fingerprint
-    the batch can touch. Fingerprints absent from the batch cannot form
-    batch-touching pairs, so the restriction loses nothing — the
-    property test pins incremental == full winnow_overlap_pairs
-    restricted to batch-touching pairs.
+    The hot-fingerprint cap is exact, not approximate: one
+    ``_cap_buckets`` over hit index rows ∪ batch fingerprints counts, per
+    fingerprint, its corpus population (the probe is a semi-join on fp,
+    so a fingerprint's population within the probed subset equals its
+    full-index population) plus its batch occurrences — the full-run cap
+    for every fingerprint the batch can touch. Fingerprints absent from
+    the batch cannot form batch-touching pairs, so the restriction loses
+    nothing — the property test pins incremental == full
+    winnow_overlap_pairs restricted to batch-touching pairs. One
+    ``_key_pairs`` self-join over the capped rows (hit rows old, batch
+    rows new) gives the cross and the in-batch pairs.
 
     The caller commits ``batch_fps`` alongside the batch's surviving
     rows so the NEXT batch probes them too (grow-the-index contract of
     jobs/ingest_increment.py)."""
     fps_b = winnow_fingerprints(batch, text=text, id_col=id_col, k=k, w=w)
-    probe = fps_b.select("fp").distinct()
-    hit = fp_index.join(F.broadcast(probe), "fp").select(
-        F.col(id_col).alias("a"), "fp"
-    )
-    n_corp = hit.groupBy("fp").agg(F.count(F.lit(1)).alias("nc"))
-    n_batch = fps_b.groupBy("fp").agg(F.count(F.lit(1)).alias("nb"))
-    hot = (
-        n_batch.join(n_corp, "fp", "left")
-        .where(
-            F.coalesce(F.col("nc"), F.lit(0)) + F.col("nb") > fp_doc_cap
-        )
-        .select("fp")
-    )
-    cold_b = fps_b.join(hot, "fp", "left_anti")
-    cold_hit = hit.join(hot, "fp", "left_anti")
-    cross = (
-        cold_hit.join(cold_b.withColumnRenamed(id_col, "b"), "fp")
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
-    within = _shared_fp_pairs(cold_b, id_col, min_shared)
-    return cross.unionByName(within), fps_b
+    hit = _probe_index(fps_b, fp_index, ("fp",)).select(id_col, "fp")
+    flagged = _flag(hit, False).unionByName(_flag(fps_b, True))
+    capped = _cap_buckets(flagged, fp_doc_cap, ("fp",))
+    return _shared_fp_pairs(capped, id_col, min_shared), fps_b
 
 
 def overlap_partner_ids(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

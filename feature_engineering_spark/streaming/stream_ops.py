@@ -43,7 +43,6 @@ def streaming_sessionize(
 def streaming_running_stats(
     events: DataFrame,
     key: str = "url",
-    ts: str = "warc_ts",
     value: str = "n_chars",
     timeout: str = "NoTimeout",
 ) -> DataFrame:
@@ -111,7 +110,6 @@ def streaming_window_stats(
 
 
 def streaming_asof_enrich(
-    stream: DataFrame,
     static_right: DataFrame,
     on: str = "url",
     left_ts: str = "warc_ts",
@@ -155,7 +153,6 @@ def streaming_asof_enrich(
 
 
 def streaming_neardup_filter(
-    stream: DataFrame,
     corpus: DataFrame,
     corpus_banded: DataFrame,
     text: str = "text",
@@ -213,7 +210,6 @@ def streaming_neardup_filter(
 
 
 def streaming_contamination_filter(
-    stream: DataFrame,
     probes: DataFrame,
     text: str = "text",
     id_col: str = "doc_id",
@@ -255,7 +251,6 @@ def streaming_contamination_filter(
 
 
 def streaming_line_dedup_filter(
-    stream: DataFrame,
     line_index: DataFrame,
     text: str = "text",
     id_col: str = "doc_id",
@@ -297,7 +292,6 @@ def streaming_line_dedup_filter(
 
 
 def streaming_overlap_trim(
-    stream: DataFrame,
     corpus: DataFrame,
     fp_index: DataFrame,
     text: str = "text",

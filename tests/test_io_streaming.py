@@ -70,7 +70,7 @@ def test_streaming_stateful_running_stats(spark, pages_df, tmp_path):
         .parquet(src + "/b*")
     )
     q = (
-        streaming_running_stats(stream, key="url", ts="warc_ts", value="n_chars")
+        streaming_running_stats(stream, key="url", value="n_chars")
         .writeStream.outputMode("update")
         .format("memory").queryName("state_out")
         .start()
@@ -148,7 +148,7 @@ def test_streaming_asof_enrich(spark, tmp_path):
     stream = spark.readStream.schema(ldf.schema).parquet(src)
     collected = []
     feb = streaming_asof_enrich(
-        stream, rdf, on="url", left_ts="warc_ts", right_ts="label_ts",
+        rdf, on="url", left_ts="warc_ts", right_ts="label_ts",
         right_cols=["iri"],
     )(lambda df, bid: collected.append(df.toPandas()))
     q = stream.writeStream.foreachBatch(feb).trigger(availableNow=True).start()
@@ -227,7 +227,7 @@ def test_streaming_neardup_filter(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
 
     kept, dropped = [], []
-    feb = streaming_neardup_filter(stream, corpus, index, threshold=0.5)(
+    feb = streaming_neardup_filter(corpus, index, threshold=0.5)(
         lambda s, d, bid: (kept.append(s.toPandas()), dropped.append(d.toPandas()))
     )
     q = stream.writeStream.foreachBatch(feb).trigger(availableNow=True).start()
@@ -268,7 +268,7 @@ def test_streaming_contamination_filter(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
 
     kept, reports = [], []
-    feb = streaming_contamination_filter(stream, probes, n=3, min_hits=2)(
+    feb = streaming_contamination_filter(probes, n=3, min_hits=2)(
         lambda c, r, bid: (kept.append(c.toPandas()), reports.append(r.toPandas()))
     )
     q = stream.writeStream.foreachBatch(feb).trigger(availableNow=True).start()
@@ -312,7 +312,7 @@ def test_streaming_line_dedup_filter(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
 
     cleaned, counts = [], []
-    feb = streaming_line_dedup_filter(stream, index, min_count=3)(
+    feb = streaming_line_dedup_filter(index, min_count=3)(
         lambda c, cb, bid: (cleaned.append(c.toPandas()), counts.append(cb.toPandas()))
     )
     q = stream.writeStream.foreachBatch(feb).trigger(availableNow=True).start()
@@ -357,7 +357,7 @@ def test_streaming_overlap_trim(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, text string").parquet(srcdir)
 
     outs, reports, fps = [], [], []
-    feb = streaming_overlap_trim(stream, corpus, index, min_shared=2)(
+    feb = streaming_overlap_trim(corpus, index, min_shared=2)(
         lambda t, p, f, bid: (
             outs.append(t.toPandas()),
             reports.append(p.toPandas()),

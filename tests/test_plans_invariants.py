@@ -161,6 +161,60 @@ def test_embed_neardup_lsh_plan_no_nlj(spark):
     assert plan.count("FileScan") == 1, plan
 
 
+def _node_counts(df) -> dict:
+    """Node-name counts of the formatted physical plan."""
+    import collections
+    import re
+
+    s = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    return collections.Counter(re.findall(r"^\(\d+\) (\w+)", s, re.M))
+
+
+@pytest.mark.parametrize("op, generate, scans, joins", [
+    ("winnow", 4, 6, 3),
+    ("minhash", 8, 10, 6),
+    ("embed", 2, 4, 2),
+])
+def test_incremental_plan_shape(spark, tmp_path, op, generate, scans, joins):
+    """Each incremental operator finds its index-vs-batch and in-batch
+    pairs in one step over hit ∪ batch rows: Generate, scan and join
+    counts on a parquet-committed index (as the ingest job reads it) are
+    pinned. The two-arm plans they replace had 12/17/15 (winnow),
+    12/13/10 (minhash) and 5/9/7 (embed)."""
+    from feature_engineering_spark.operators import dedup as D
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    corpus, batch = docs.where("doc_id % 2 = 0"), docs.where("doc_id % 2 = 1")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    ecorp, ebatch = emb.where("vec_id % 2 = 0"), emb.where("vec_id % 2 = 1")
+
+    def commit(df):
+        df.write.parquet(str(tmp_path / "index"))
+        return spark.read.parquet(str(tmp_path / "index"))
+
+    if op == "winnow":
+        index = commit(D.winnow_fingerprints(corpus))
+        out = D.winnow_overlap_incremental(batch, index)[0]
+    elif op == "minhash":
+        index = commit(D.minhash_banded(corpus))
+        out = D.minhash_lsh_incremental(batch, corpus, index)
+    else:
+        index = commit(D.srp_banded(ecorp, 64))
+        out = D.embedding_lsh_incremental(ebatch, ecorp, index, dim=64)
+    c = _node_counts(out)
+    got = (
+        c["Generate"],
+        sum(n for k, n in c.items() if "Scan" in k),
+        sum(n for k, n in c.items() if k.endswith("Join")),
+    )
+    assert got == (generate, scans, joins), c
+    if op == "embed":
+        assert c["FlatMapGroupsInPandas"] == 1, c
+        assert c["BroadcastNestedLoopJoin"] == c["CartesianProduct"] == 0, c
+
+
 def test_trim_plan_no_nlj_semi_probe(spark):
     """Excision's source probe is a (broadcast) hash semi-join on the
     gram hash — no nested loops, no Python."""

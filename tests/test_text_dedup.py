@@ -370,31 +370,36 @@ def test_embedding_lsh_grouped_verify_matches_joined_verify(
 
 
 def test_cosine_kernel_blocks_leave_output_unchanged(monkeypatch):
-    """Scoring the triangle in blocks of BLOCK_ROWS rows emits the same
-    (i, j, cosine) rows as one block, and each cosine is the left fold
-    over the dimensions."""
+    """Scoring in blocks of BLOCK_ROWS rows emits, for every ``first``
+    (the first new row), exactly the brute-force old x new pairs plus the
+    new-row triangle, in row-major order, and each cosine is the left
+    fold over the dimensions."""
     from feature_engineering_spark.functions import cosine_kernel
 
     rng = np.random.default_rng(7)
     m = rng.normal(size=(37, 5))
     m[4] = 0.0
     m[9, 2] = np.nan
-    whole = cosine_kernel.cosine_upper_pairs(m, 0.1)
-    for block in (1, 3, 8, 36):
-        monkeypatch.setattr(cosine_kernel, "BLOCK_ROWS", block)
-        got = cosine_kernel.cosine_upper_pairs(m, 0.1)
-        for g, w in zip(got, whole):
-            np.testing.assert_array_equal(g, w)
-    i, j, cos = whole
-    assert (np.diff(i * len(m) + j) > 0).all() and (i < j).all()
+    n = len(m)
+    ref = {}
+    for a in range(n):
+        for b in range(a + 1, n):
+            dot = na = nb = 0.0
+            for x, y in zip(m[a], m[b]):
+                dot, na, nb = dot + x * y, na + x * x, nb + y * y
+            den = np.sqrt(na) * np.sqrt(nb)
+            if den != 0 and (np.isnan(dot / den) or dot / den >= 0.1):
+                ref[(a, b)] = dot / den
+    for first in (0, 1, n // 2, n - 1, n):
+        exp = [(a, b, c) for (a, b), c in sorted(ref.items()) if b >= first]
+        for block in (1, 3, 8, 36, 256):
+            monkeypatch.setattr(cosine_kernel, "BLOCK_ROWS", block)
+            i, j, cos = cosine_kernel.cosine_upper_pairs(m, 0.1, first)
+            assert list(zip(i.tolist(), j.tolist())) == [(a, b) for a, b, _ in exp]
+            np.testing.assert_array_equal(cos, [c for _, _, c in exp])
+    i, j, cos = cosine_kernel.cosine_upper_pairs(m, 0.1)
     assert set(j[i == 4]) | set(i[j == 4]) == {9}  # zero norm: NaN pairs only
     assert np.isnan(cos[(i == 9) | (j == 9)]).all()
-    for a, b, c in zip(i, j, cos):
-        dot = na = nb = 0.0
-        for x, y in zip(m[a], m[b]):
-            dot, na, nb = dot + x * y, na + x * x, nb + y * y
-        exp = dot / (np.sqrt(na) * np.sqrt(nb))
-        assert c == exp or (np.isnan(c) and np.isnan(exp))
 
 
 def test_lsh_dropped_bucket_stats_reports_cap(spark):
@@ -698,6 +703,131 @@ def test_embed_incremental_matches_full_lsh(spark):
     assert len(cross) >= 10  # 12 planted corpus near-dups, SRP recall high
     in_batch = {(a, b) for (a, b) in got if a in batch_ids}
     assert len(in_batch) >= 3  # 4 planted in-batch pairs
+
+
+def _joined_srp_incremental(batch, corpus, index, dim, threshold, cap):
+    """The two-arm candidate-join incremental SRP pipeline: per-side caps
+    on the batch banding and the hit index rows, a cross join (a = index
+    id, b = batch id) and an in-batch self-join (a < b), each joined back
+    to its vectors and scored by ``_cosine_sql``."""
+    from feature_engineering_spark.operators.dedup import (
+        _cap_buckets,
+        _verify_pairs,
+        srp_banded,
+    )
+    from feature_engineering_spark.operators.similarity import _cosine_sql
+
+    keys = ["band", "bucket"]
+    nb = _cap_buckets(srp_banded(batch, dim), cap)
+    hit = _cap_buckets(
+        index.join(F.broadcast(nb.select(*keys).distinct()), keys), cap
+    )
+    cross = (
+        hit.select(*keys, F.col("id").alias("a"))
+        .join(nb.select(*keys, F.col("id").alias("b")), keys)
+        .select("a", "b")
+        .distinct()
+    )
+    l, r = nb.alias("l"), nb.alias("r")
+    within = (
+        l.join(r, (F.col("l.band") == F.col("r.band"))
+               & (F.col("l.bucket") == F.col("r.bucket"))
+               & (F.col("l.id") < F.col("r.id")))
+        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
+        .distinct()
+    )
+
+    def vecs(df):
+        return df.select(
+            F.col("vec_id").alias("id"),
+            F.col("embedding").cast("array<double>").alias("v"),
+        )
+
+    vc, vb = vecs(corpus), vecs(batch)
+    return _verify_pairs(
+        cross, vc, vb, "v", _cosine_sql, "cosine", threshold
+    ).unionByName(_verify_pairs(within, vb, vb, "v", _cosine_sql, "cosine", threshold))
+
+
+@pytest.mark.parametrize("threshold", [-1.0, 0.9])
+@pytest.mark.parametrize("max_bucket_size", [4096, 8])
+def test_embedding_incremental_matches_two_arm_join(
+    spark, threshold, max_bucket_size
+):
+    """The one grouped verify over hit ∪ batch rows emits exactly the
+    two-arm candidate-join pipeline's rows with the same float bits: a
+    corpus vector with a NULL component (Arrow would hand it to Python as
+    NaN, so without ``_srp_signature``'s NULL rule it would pair), NaN
+    components, zero and 1e-200 rows (zero norm product: no row), 3-dim
+    vectors among 16-dim ones, an index id with no corpus row, and an
+    over-cap bucket on each side."""
+    from feature_engineering_spark.operators.dedup import (
+        embedding_lsh_incremental,
+        srp_banded,
+    )
+
+    dim = 16
+    rng = np.random.default_rng(31)
+    base = rng.normal(size=(40, dim))
+    c, d, ghost = (rng.normal(size=dim) for _ in range(3))
+
+    def near(v):
+        return (v + rng.normal(scale=0.05, size=dim)).tolist()
+
+    null_row = base[0].tolist()
+    null_row[3] = None
+    nan_row = base[1].tolist()
+    nan_row[5] = float("nan")
+    corp_rows = [(i, base[i].tolist()) for i in range(40)] + [
+        (50, null_row), (51, nan_row), (52, [0.0] * dim),
+        (53, [1e-200] * dim), (54, [1.0, 2.0, 3.0]),
+        (70, d.tolist()),
+    ] + [(60 + i, c.tolist()) for i in range(10)]
+    batch_rows = [(100 + i, near(base[i])) for i in range(12)]
+    for i in range(4):
+        v = rng.normal(size=dim)
+        batch_rows += [(200 + 2 * i, v.tolist()), (201 + 2 * i, near(v))]
+    bnull = base[2].tolist()
+    bnull[0] = None
+    bnan = base[3].tolist()
+    bnan[1] = float("nan")
+    batch_rows += [
+        (150, bnull), (151, bnan), (152, [0.0] * dim), (153, [1e-200] * dim),
+        (154, [1.0, 2.0, 3.5]), (155, near(base[0])), (300, c.tolist()),
+        (998, near(ghost)),
+    ] + [(310 + i, d.tolist()) for i in range(10)]
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(corp_rows, schema)
+    batch = spark.createDataFrame(batch_rows, schema)
+    # the ghost's index rows have no corpus row to take a vector from
+    index = srp_banded(
+        corpus.unionByName(spark.createDataFrame([(999, ghost.tolist())], schema)),
+        dim,
+    )
+
+    got = _pair_bits(embedding_lsh_incremental(
+        batch, corpus, index, dim=dim, threshold=threshold,
+        max_bucket_size=max_bucket_size,
+    ))
+    exp = _pair_bits(_joined_srp_incremental(
+        batch, corpus, index, dim, threshold, max_bucket_size
+    ))
+    assert got == exp
+    ids = {x for p in got for x in p}
+    assert not ids & {50, 150, 999}
+    # the NaN rows pair (NaN cosine), the zero-norm rows only with them
+    assert any(51 in p for p in got) and any(151 in p for p in got)
+    assert all(got[p] == "nan" for p in got if {51, 151} & set(p))
+    assert all({51, 151} & set(p) for p in got if {52, 53, 152, 153} & set(p))
+    assert (54, 154) in got and not any(54 in p or 154 in p for p in got
+                                        if p != (54, 154))
+    assert all(a < b for a, b in got if a >= 100)  # in-batch pairs a < b
+    if max_bucket_size == 4096:
+        assert {(60, 300), (70, 310), (310, 311)} <= set(got)
+    else:
+        # the corpus copies of c and the batch copies of d fill every band
+        # bucket of theirs above the cap
+        assert not ids & (set(range(60, 70)) | set(range(310, 320)))
 
 
 def _dropped(banded, cap):
