@@ -10,6 +10,17 @@ There is no session warmup: at 4 cores a synthetic JIT warmup pipeline
 cost more at start (~7 s) than it saved on the first operation (~5 s).
 Without it, perfbench's setup + cold op median (5 interleaved pairs)
 went 27.2 -> 22.5 s on queries and 32.0 -> 31.8 s on extract.
+
+Python workers start from ``worker_daemon``, which runs pyspark's own
+daemon after taking Spark's archives off the import path (see that
+module). The executors' Python must therefore be able to import this
+engine when the daemon starts, before any task ships its files.
+``get_spark`` sets ``spark.executorEnv.PYTHONPATH`` to the engine's root,
+which covers local mode from any working directory and a ``--py-files``
+zip on the driver's host. On a real cluster, YARN's ``--py-files`` puts
+the zip on the executors' path; elsewhere set
+``spark.executorEnv.PYTHONPATH`` (through ``extra_confs``) to where the
+executors find the engine.
 """
 
 from __future__ import annotations
@@ -17,6 +28,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory holding ``feature_engineering_spark``, or the zip when the
+# engine was imported from ``--py-files``.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Confs chosen for the 100 TB design point, applied identically in
 # local-mode tests so the plans we inspect are the plans we'd ship:
@@ -84,6 +99,12 @@ _BASE_CONFS = {
     # Method-call overhead for ordinary-sized expressions is noise by
     # comparison.
     "spark.sql.codegen.methodSplitThreshold": "256",
+    # worker_daemon keeps Spark's archives off the workers' import path:
+    # each task's import-cache invalidation re-read them, a 0.268 s median
+    # per task, now 0.15 ms (4 vCPUs, timed inside the workers). See the
+    # module docstring for the executors' PYTHONPATH.
+    "spark.python.daemon.module": "feature_engineering_spark.worker_daemon",
+    "spark.executorEnv.PYTHONPATH": _ENGINE_ROOT,
 }
 
 
@@ -95,14 +116,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to the
+    number of CPUs this process may run on when that env var is unset.
     ``shuffle_partitions`` defaults to the session's default parallelism
     (N for ``local[N]`` and ``local[N,F]``, the core count for
     ``local[*]``); on a real cluster pass ~2-3x total cores and let AQE
     coalesce.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)

@@ -41,11 +41,7 @@ from feature_engineering_spark.session import get_spark
 # the REST API is the metrics source
 extra = {{"spark.ui.enabled": "true", "spark.ui.port": "4049"}}
 if master.startswith("local-cluster"):
-    # separate executor JVMs spawn their own Python workers: the repo
-    # must be importable there too (local[N] inherits the driver's
-    # sys.path; a real cluster ships the package or sets this env)
-    extra.update({{"spark.executor.memory": "3g",
-                   "spark.executorEnv.PYTHONPATH": {repo!r}}})
+    extra["spark.executor.memory"] = "3g"
 spark = get_spark(f"csb-{{workload}}", master, shuffle_partitions=8,
                   extra_confs=extra)
 spark.sparkContext.setLogLevel("ERROR")
