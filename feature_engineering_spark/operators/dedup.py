@@ -170,8 +170,8 @@ def _signatures_from_shingles(
     g: DataFrame, num_hashes: int, seed: int = 7
 ) -> DataFrame:
     """Signatures from a pre-shingled (id, sh: array<string>) frame — lets
-    minhash_lsh_dedup tokenize the corpus ONCE and reuse the shingle arrays
-    for both the signature pass and the exact-Jaccard verify join."""
+    minhash_lsh_incremental build the batch's shingle frame ONCE for both
+    the signature pass and the exact-Jaccard verify join."""
     exploded = g.select("id", F.explode("sh").alias("shingle"))
     x = token_hash64(F.col("shingle")) % F.lit(_MH_P)
     proj = exploded.select("id", x.alias("x"))
@@ -228,9 +228,9 @@ def minhash_banded(
     shingle_n: int = 3,
     shingle_unit: str = "word",
 ) -> DataFrame:
-    """(id, band, bucket) rows for the MinHash LSH — exposed so jobs can
-    compute lsh_dropped_bucket_stats on exactly the banding the dedup
-    uses."""
+    """(id, band, bucket) rows for the MinHash LSH: the banding
+    ``minhash_lsh_dedup`` builds, exposed so jobs can compute
+    lsh_dropped_bucket_stats on exactly the banding the dedup uses."""
     sig = minhash_signatures(df, text, id_col, num_hashes, shingle_n,
                              shingle_unit=shingle_unit)
     return _band_signature(sig, bands, num_hashes // bands)
@@ -341,61 +341,6 @@ def _verify_pairs(
     )
 
 
-def minhash_lsh_dedup_parts(
-    df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    max_bucket_size: int | None = 64,
-    shingle_unit: str = "word",
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Near-dup pipeline exposing its intermediates:
-    ``(pairs, banded, cached)``.
-
-    - ``pairs``: verified (a, b, jaccard >= threshold) — same frame
-      ``minhash_lsh_dedup`` returns;
-    - ``banded``: the (id, band, bucket) frame the candidate join actually
-      used (derived from the CACHED signature frame, so jobs computing
-      ``lsh_dropped_bucket_stats`` on it do not re-tokenize the corpus);
-    - ``cached``: the persisted frames backing the pipeline. The caller
-      OWNS their lifecycle: unpersist each once ``pairs``/stats are
-      materialized, or they live until session end.
-
-    Round-6 shape (guide §2.3 "shuffle keys and metadata instead of
-    payloads" + §3.1): the corpus-sized pass — tokenize, shingle, md5,
-    32 min-aggregates — runs EXACTLY once, materializing the tiny
-    signature frame (N x 33 longs), which is what gets persisted. Nothing
-    corpus-sized is cached (round 5 persisted the full (id, array<string>)
-    shingle frame: heavy object churn in storage memory, and the verify
-    join broadcast that whole frame twice — measured in the sf1.0 plan).
-    The candidate-pair frame (also tiny) is persisted because both the
-    id-prune and the verify join consume it. The exact-Jaccard verify
-    re-shingles ONLY the candidate docs (a broadcast semi-join on the
-    long-typed candidate id set prunes the scan), so the string arrays it
-    compares exist only for the handful of docs that reached a pair —
-    identical values, since inner joins on cand ids never touched any
-    other row."""
-    rows_per_band = num_hashes // bands
-    g = shingle_frame(df, text, id_col, shingle_n, shingle_unit)
-    sig = _signatures_from_shingles(g, num_hashes).persist()
-    banded = _band_signature(sig, bands, rows_per_band)
-    cand = _candidates_from_banded(banded, max_bucket_size).persist()
-    ids = (
-        cand.select(F.col("a").alias("id"))
-        .unionByName(cand.select(F.col("b").alias("id")))
-        .distinct()
-    )
-    gc = shingle_frame(
-        df.join(F.broadcast(ids), df[id_col] == ids["id"], "left_semi"),
-        text, id_col, shingle_n, shingle_unit,
-    )
-    pairs = _verify_pairs(cand, gc, gc, "sh", _jaccard_sql, "jaccard", threshold)
-    return pairs, banded, [sig, cand]
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     text: str = "text",
@@ -410,17 +355,36 @@ def minhash_lsh_dedup(
     """Full near-dup pipeline: signatures -> LSH candidates -> exact
     Jaccard verify >= threshold. Returns verified (a, b, jaccard).
 
-    NOTE on caching: the (tiny) signature and candidate frames backing the
-    result are persisted and stay in executor storage memory until the
-    returned frame's last consumer runs. Long-lived sessions making
-    repeated calls should use ``minhash_lsh_dedup_parts`` and unpersist
-    the cached frames after materializing the pairs (jobs/dedup_corpus.py
-    does exactly that)."""
-    pairs, _banded, _cached = minhash_lsh_dedup_parts(
-        df, text, id_col, threshold, num_hashes, bands, shingle_n,
-        max_bucket_size, shingle_unit=shingle_unit,
+    Round-6 shape (guide §2.3 "shuffle keys and metadata instead of
+    payloads" + §3.1): the corpus-sized pass (tokenize, shingle, md5,
+    32 min-aggregates) produces the tiny signature frame (N x 33 longs);
+    no shingle array travels through a shuffle. The candidate-pair frame
+    feeds both the id-prune and the verify join, and its two identical
+    subtrees share their exchanges, so the signature pass runs once. The
+    exact-Jaccard verify re-shingles ONLY the candidate docs (a broadcast
+    semi-join on the long-typed candidate id set prunes the scan), so the
+    string arrays it compares exist only for the handful of docs that
+    reached a pair: identical values, since inner joins on cand ids never
+    touched any other row.
+
+    Nothing is cached: the banding is ``minhash_banded``'s plan, so a
+    caller that audits it with ``lsh_dropped_bucket_stats`` persists
+    ``minhash_banded(df, ...)`` before running this frame, and Spark's
+    plan-based cache lookup serves the banding from that cache (the
+    curation jobs do this and unpersist it after the audit)."""
+    banded = minhash_banded(df, text, id_col, num_hashes, bands, shingle_n,
+                            shingle_unit)
+    cand = _candidates_from_banded(banded, max_bucket_size)
+    ids = (
+        cand.select(F.col("a").alias("id"))
+        .unionByName(cand.select(F.col("b").alias("id")))
+        .distinct()
     )
-    return pairs
+    gc = shingle_frame(
+        df.join(F.broadcast(ids), df[id_col] == ids["id"], "left_semi"),
+        text, id_col, shingle_n, shingle_unit,
+    )
+    return _verify_pairs(cand, gc, gc, "sh", _jaccard_sql, "jaccard", threshold)
 
 
 def minhash_lsh_incremental(
@@ -458,28 +422,16 @@ def minhash_lsh_incremental(
       ``_verify_pairs`` scores them all: its a side is the hit corpus
       rows' shingles ∪ the batch's, its b side the batch's.
 
-    The batch shingle frame is persisted for reuse across the signature
-    pass and the verify; single-consumption callers can leave it to
-    session cleanup (see minhash_lsh_dedup's caching note).
-
     ``intermediates``: optional dict the operator fills with
-    ``banded_new`` (the batch banding BEFORE its cap), ``hit`` (the
+    ``banded_new`` (the batch banding BEFORE its cap) and ``hit`` (the
     matched corpus index rows BEFORE their cap) so callers can emit
-    ``lsh_dropped_bucket_stats`` for both caps — no silent caps — and
-    ``shingles`` (the PERSISTED batch shingle frame) so long-lived
-    callers unpersist it once pairs/stats are materialized: without
-    that, every ingest batch / streaming micro-batch would leak one
-    cached frame for the session lifetime (jobs/ingest_increment.py and
-    streaming_neardup_filter both clean up)."""
+    ``lsh_dropped_bucket_stats`` for both caps — no silent caps."""
     rows_per_band = num_hashes // bands
-    g_new = shingle_frame(
-        new_docs, text, id_col, shingle_n, shingle_unit
-    ).persist()
+    g_new = shingle_frame(new_docs, text, id_col, shingle_n, shingle_unit)
     sig_new = _signatures_from_shingles(g_new, num_hashes)
     banded_new = _band_signature(sig_new, bands, rows_per_band)
     if intermediates is not None:
         intermediates["banded_new"] = banded_new
-        intermediates["shingles"] = g_new
     keys = ("band", "bucket")
     banded_new = _cap_buckets(banded_new, max_bucket_size)
     hit = _probe_index(banded_new, corpus_banded, keys, max_bucket_size, intermediates)

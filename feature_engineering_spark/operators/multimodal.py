@@ -39,12 +39,6 @@ MEDIA_SCHEMA = (
     "meta struct<width:int, height:int, n_frames:int, codec:string>"
 )
 
-# Default decode mode: FMM1 only. Pass use_real_codecs=True to media_features
-# to also accept real PGM(P5) payloads — threaded as a closure argument (a
-# module flag would not propagate to already-forked Python workers).
-USE_REAL_CODECS = False
-
-
 def synthesize_media(spark, n: int, seed: int = 42) -> DataFrame:
     """Deterministic fake media table (pytest/bench fixture)."""
     rng = np.random.default_rng(seed)
@@ -82,16 +76,16 @@ def synthesize_media_from_ids(df: DataFrame, id_col: str = "doc_id") -> DataFram
 def media_features(
     df: DataFrame,
     frame_stride: int = 2,
-    use_real_codecs: bool | None = None,
+    use_real_codecs: bool = False,
 ) -> DataFrame:
     """Decode + per-media byte/frame features via one mapInPandas pass.
 
     Output: media_id, media_type, width, height, n_frames, sampled_frames,
     mean_intensity, std_intensity, resized_checksum (8x8 nearest-neighbor
-    resize of frame 0). ``use_real_codecs=True`` additionally decodes real
-    PGM(P5) payloads (stdlib parser in media_worker.py)."""
-    if use_real_codecs is None:
-        use_real_codecs = USE_REAL_CODECS
+    resize of frame 0). The default decodes FMM1 only;
+    ``use_real_codecs=True`` additionally decodes real PGM(P5) payloads
+    (stdlib parser in media_worker.py), threaded to the workers as a
+    closure argument."""
     out_schema = (
         "media_id long, media_type string, width int, height int, "
         "n_frames int, sampled_frames int, mean_intensity double, "

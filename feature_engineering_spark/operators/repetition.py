@@ -166,7 +166,6 @@ def filter_repetitive(
     text: str = "text",
     id_col: str = "doc_id",
     max_dup_word_frac: float = 0.6,
-    max_top_2gram_char_frac: float | None = None,
     max_top_char_frac: dict[int, float] | None = None,
     max_dup_frac: dict[int, float] | None = None,
 ) -> DataFrame:
@@ -175,25 +174,19 @@ def filter_repetitive(
 
     - ``max_top_char_frac``: {n: ceiling} on ``top_{n}gram_char_frac``
       (Gopher: {2: 0.20, 3: 0.18, 4: 0.16});
-    - ``max_dup_frac``: {n: ceiling} on ``dup_{n}gram_frac`` (optional);
-    - ``max_top_2gram_char_frac``: legacy scalar spelling of
-      ``max_top_char_frac={2: ...}`` (kept for callers of the round-4
-      2-gram-only operator).
+    - ``max_dup_frac``: {n: ceiling} on ``dup_{n}gram_frac`` (optional).
 
     BEHAVIOR CHANGE (round 5): the no-args default is Gopher's full
     {2: 0.20, 3: 0.18, 4: 0.16} gate, not the round-4 single 2-gram
     threshold — default-calling pipelines drop strictly MORE documents
     than they did in round 4. Downstream corpus counts shifting across
     that upgrade is this intentional default change, not a regression;
-    pass ``max_top_2gram_char_frac=0.20`` to reproduce the old gate.
+    pass ``max_top_char_frac={2: 0.20}`` to reproduce the old gate.
 
     The signals frame is one row per doc; the anti-join side carries only
     the ids of rejected docs."""
     if max_top_char_frac is None:
-        if max_top_2gram_char_frac is not None:
-            max_top_char_frac = {2: max_top_2gram_char_frac}
-        else:
-            max_top_char_frac = {2: 0.20, 3: 0.18, 4: 0.16}
+        max_top_char_frac = {2: 0.20, 3: 0.18, 4: 0.16}
     ns = tuple(sorted(set(max_top_char_frac) | set(max_dup_frac or {})))
     sig = repetition_signals(docs, text, id_col, ns=ns)
     cond = F.col("dup_word_frac") > max_dup_word_frac

@@ -1649,7 +1649,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     headers from the bytes, samples frames (stride 2), resizes, and
     aggregates — while the DuckDB oracle re-derives the same numbers by
     direct arithmetic over generate_series, never touching a blob. The
-    decode stub boundary (operators/multimodal.py USE_REAL_CODECS) stays
+    decode stub boundary (media_features' use_real_codecs) stays
     documented; everything around it is hash-verified."""
     from feature_engineering_spark.operators.multimodal import (
         media_features,

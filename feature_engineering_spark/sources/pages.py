@@ -16,6 +16,10 @@ boundaries for the sessionizer (reference analog: trip/pass segmentation,
 
 This module is test/bench fixture infrastructure. At production scale the
 input is an existing Iceberg table; the engine never generates data.
+
+Module-level imports are os, numpy and pandas only: ``plan_mapper``'s
+function is unpickled inside mapInPandas workers, which must not import
+pyspark (see functions/window_kernel.py).
 """
 
 from __future__ import annotations
@@ -175,14 +179,56 @@ def url_plan(n_rows: int, seed: int = 42, n_urls: int | None = None) -> pd.DataF
     )
 
 
+def build_url_rows(
+    url: str, url_id: int, lang: str, n: int, t0: float, seed: int
+) -> pd.DataFrame:
+    """One url's page rows for the distributed generator, drawn from
+    ``default_rng([seed, url_id])``: a pure function of the plan row,
+    independent of which Spark partition builds it."""
+    rng = np.random.default_rng([seed, url_id])
+    gaps = rng.uniform(30.0, 600.0, size=n)
+    big = rng.random(n) < 0.05
+    gaps[big] = rng.uniform(1900.0, 7200.0, size=int(big.sum()))
+    rel = np.cumsum(gaps) + t0
+    warc_ts = _EPOCH0 + (rel * 1e6).astype("int64").astype("timedelta64[us]")
+    n_tok = rng.integers(5, 121, size=n)
+    all_tok = rng.integers(0, len(_VOCAB), size=int(n_tok.sum()))
+    bounds = np.r_[0, np.cumsum(n_tok)]
+    words = _VOCAB[all_tok]
+    texts = [" ".join(words[bounds[i] : bounds[i + 1]]) for i in range(n)]
+    htmls = [f"<html><body>{t}</body></html>".encode() for t in texts]
+    return pd.DataFrame(
+        {
+            "url": url,
+            "warc_ts": pd.Series(warc_ts),
+            "html": htmls,
+            "text": texts,
+            "lang": lang,
+        }
+    )
+
+
+def plan_mapper(seed: int):
+    """mapInPandas fn: plan rows (url, url_id, lang, n_rows_url, t0) →
+    page rows."""
+
+    def fn(batches):
+        for b in batches:
+            for row in b.itertuples(index=False):
+                yield build_url_rows(
+                    row.url, int(row.url_id), row.lang,
+                    int(row.n_rows_url), float(row.t0), seed,
+                )
+
+    return fn
+
+
 def pages_distributed(spark, n_rows: int, seed: int = 42, n_urls: int | None = None):
     """Pages table built in parallel on the cluster: the tiny url plan is
     parallelized and each worker synthesizes its urls' rows from
     rng([seed, url_id]) — deterministic regardless of partitioning. Same
     SCHEMA and distribution shape as generate_pages (not row-identical:
     different rng stream consumption). Use for bench-scale inputs."""
-    from feature_engineering_spark.sources.pages_worker import plan_mapper
-
     plan = url_plan(n_rows, seed, n_urls)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     plan_df = spark.createDataFrame(plan).repartition(n_parts)

@@ -183,26 +183,14 @@ def streaming_neardup_filter(
 
     def for_each_batch(sink_fn):
         def fn(batch_df: DataFrame, batch_id: int):
-            inter: dict = {}
             survivors, drops = dedup_batch_against_corpus(
                 batch_df, corpus, corpus_banded, text=text, id_col=id_col,
-                threshold=threshold, intermediates=inter,
+                threshold=threshold,
                 # e.g. shingle_unit='char', or emb/emb_banded/emb_dim for
                 # the multi-signal embedding probe
                 **dedup_kwargs,
             )
-            try:
-                sink_fn(survivors, drops, batch_id)
-            finally:
-                # the sink materialized (or abandoned) the frames — drop
-                # the micro-batch's persisted shingle cache, or a
-                # long-running stream leaks one cached frame per batch.
-                # .get(): if the dedup raised before populating the
-                # intermediates, a KeyError here would mask the original
-                # exception
-                sh = inter.get("shingles")
-                if sh is not None:
-                    sh.unpersist()
+            sink_fn(survivors, drops, batch_id)
 
         return fn
 

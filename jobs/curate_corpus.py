@@ -47,7 +47,8 @@ from feature_engineering_spark.operators.dedup import (  # noqa: E402
     dedup_exact,
     excise_overlaps,
     lsh_dropped_bucket_stats,
-    minhash_lsh_dedup_parts,
+    minhash_banded,
+    minhash_lsh_dedup,
     winnow_overlap_pairs,
 )
 from feature_engineering_spark.operators.graph import dedup_keep_canonical  # noqa: E402
@@ -213,36 +214,39 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.3,
     exact = p.stage("exact_dedup", build_exact, ts_col="warc_ts")
     n3 = p.rows("exact_dedup")
 
-    lsh_parts: dict = {}
+    # the banding the near-dup stage computes, cached for the cap audit:
+    # the operator's identical banding subplan reads it from the cache,
+    # so the audit below takes no second signature pass
+    banded = minhash_banded(exact, text="text", id_col="doc_id").persist()
+    fresh = False
 
     def build_neardup():
-        pairs, banded, cached = minhash_lsh_dedup_parts(
+        nonlocal fresh
+        fresh = True
+        pairs = minhash_lsh_dedup(
             exact, text="text", id_col="doc_id", threshold=jaccard
         )
-        lsh_parts.update(banded=banded, cached=cached)
         return dedup_keep_canonical(exact, pairs, id_col="doc_id")
 
     deduped = p.stage("neardup_dedup", build_neardup, ts_col="warc_ts")
     n4 = p.rows("neardup_dedup")
 
-    # no-silent-caps: what did the LSH bucket cap discard (fresh run
-    # audits the banding actually used while its shingle cache is still
-    # warm, then releases it; a resume skipped the stage, so nothing to
-    # audit — the committed run already reported it)
-    if lsh_parts:
+    # no-silent-caps: what did the LSH bucket cap discard (a resume
+    # skipped the stage, so nothing to audit — the committed run already
+    # reported it)
+    if fresh:
         drop_row = lsh_dropped_bucket_stats(
-            lsh_parts["banded"], max_bucket_size=64
+            banded, max_bucket_size=64
         ).collect()[0]
         p.event("neardup_dedup", "lsh_bucket_cap", max_bucket_size=64,
                 **drop_row.asDict())
-        for frame in lsh_parts["cached"]:
-            frame.unpersist()
         lsh_dropped = {
             "lsh_dropped_buckets": int(drop_row["n_dropped_buckets"] or 0),
             "lsh_dropped_rows": int(drop_row["n_dropped_rows"] or 0),
         }
     else:
         lsh_dropped = {}
+    banded.unpersist()
 
     decontam = p.stage(
         "decontaminated",

@@ -26,7 +26,9 @@ from pyspark.sql import functions as F  # noqa: E402
 from feature_engineering_spark.functions.text import text_scores  # noqa: E402
 from feature_engineering_spark.operators.dedup import (  # noqa: E402
     dedup_exact,
-    minhash_lsh_dedup_parts,
+    lsh_dropped_bucket_stats,
+    minhash_banded,
+    minhash_lsh_dedup,
 )
 from feature_engineering_spark.plans.checkpoint import Pipeline  # noqa: E402
 from feature_engineering_spark.session import get_spark  # noqa: E402
@@ -88,15 +90,17 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
     exact = p.stage("exact_dedup", build_exact, ts_col="warc_ts")
     n2 = p.rows("exact_dedup")
 
-    lsh_parts: dict = {}
+    # the banding the near-dup stage computes, cached for the cap audit:
+    # the operator's identical banding subplan reads it from the cache,
+    # so a fresh run's audit takes no second signature pass
+    banded = minhash_banded(exact, text="text", id_col="doc_id").persist()
 
     def build_neardup():
         from feature_engineering_spark.operators.graph import dedup_keep_canonical
 
-        pairs, banded, cached = minhash_lsh_dedup_parts(
+        pairs = minhash_lsh_dedup(
             exact, text="text", id_col="doc_id", threshold=jaccard
         )
-        lsh_parts.update(banded=banded, cached=cached)
         # transitive cluster closure, ONE survivor (min id) per cluster —
         # pairwise greatest(a,b) dropping under-deletes on chains (pairs
         # (A,C),(B,C) would keep both A and B despite sharing a cluster)
@@ -108,27 +112,8 @@ def run(spark, out_root: str, n_rows: int, min_quality: float = 0.4,
     # no-silent-caps: report what the LSH bucket cap discarded (oversized
     # buckets are assumed to be exact-dup boilerplate clusters already
     # handled by the exact pass — this row makes that assumption auditable)
-    from feature_engineering_spark.operators.dedup import (
-        lsh_dropped_bucket_stats,
-        minhash_banded,
-    )
-
-    if lsh_parts:
-        # fresh run: audit the banding the dedup ACTUALLY used (reads the
-        # still-persisted signature frame — no second tokenization pass),
-        # then release the caches now that the stage is committed
-        drop_row = lsh_dropped_bucket_stats(
-            lsh_parts["banded"], max_bucket_size=64
-        ).collect()[0]
-        for frame in lsh_parts["cached"]:
-            frame.unpersist()
-    else:
-        # resume: the neardup stage loaded from its committed table, so no
-        # banding exists in this session — recompute it for the audit row
-        drop_row = lsh_dropped_bucket_stats(
-            minhash_banded(exact, text="text", id_col="doc_id"),
-            max_bucket_size=64,
-        ).collect()[0]
+    drop_row = lsh_dropped_bucket_stats(banded, max_bucket_size=64).collect()[0]
+    banded.unpersist()
     p.event("neardup_dedup", "lsh_bucket_cap", max_bucket_size=64,
             **drop_row.asDict())
 

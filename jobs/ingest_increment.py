@@ -398,10 +398,6 @@ def run(spark, out_root: str, n_rows: int, n_batches: int = 2,
                     row["n_dropped_buckets"] or 0
                 )
                 b[f"lsh_{tag}_dropped_rows"] = int(row["n_dropped_rows"] or 0)
-            # survivors/index/stats are materialized — release the batch
-            # shingle cache so a long ingest doesn't accumulate one
-            # persisted frame per batch
-            out["shingles"].unpersist()
         stats["batches"].append(b)
 
     stats["corpus_final"] = stats["corpus_initial"] + sum(

@@ -174,15 +174,17 @@ def _node_counts(df) -> dict:
 
 @pytest.mark.parametrize("op, generate, scans, joins", [
     ("winnow", 4, 6, 3),
-    ("minhash", 8, 10, 6),
+    ("minhash", 8, 9, 6),
     ("embed", 2, 4, 2),
 ])
 def test_incremental_plan_shape(spark, tmp_path, op, generate, scans, joins):
     """Each incremental operator finds its index-vs-batch and in-batch
     pairs in one step over hit ∪ batch rows: Generate, scan and join
     counts on a parquet-committed index (as the ingest job reads it) are
-    pinned. The two-arm plans they replace had 12/17/15 (winnow),
-    12/13/10 (minhash) and 5/9/7 (embed)."""
+    pinned, and no plan reads a cache. The two-arm plans they replace had
+    12/17/15 (winnow), 12/13/10 (minhash) and 5/9/7 (embed); minhash had
+    10 scans while it persisted the batch shingles (4 file scans, 6
+    InMemoryTableScans)."""
     from feature_engineering_spark.operators import dedup as D
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
@@ -210,6 +212,7 @@ def test_incremental_plan_shape(spark, tmp_path, op, generate, scans, joins):
         sum(n for k, n in c.items() if k.endswith("Join")),
     )
     assert got == (generate, scans, joins), c
+    assert c["InMemoryRelation"] == 0, c
     if op == "embed":
         assert c["FlatMapGroupsInPandas"] == 1, c
         assert c["BroadcastNestedLoopJoin"] == c["CartesianProduct"] == 0, c

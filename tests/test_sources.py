@@ -143,3 +143,31 @@ def test_drop_duplicate_columns_verify_values(spark):
     diff = a.join(c, a["id"] == c["k"]).select("id", a["v"], c["v"])
     with pytest.raises(ValueError, match="DIFFERENT content"):
         drop_duplicate_columns(diff, verify_values=True)
+
+
+def test_pages_distributed_schema_order_and_partition_independence(spark):
+    """The distributed generator: the pages schema, strictly increasing
+    ``warc_ts`` within each url, and the same rows whatever the shuffle
+    partition count the url plan is spread over."""
+    from feature_engineering_spark.sources.pages import pages_distributed
+
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    frames = []
+    try:
+        for n in ("2", "5"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            df = pages_distributed(spark, 3000, seed=7)
+            assert df.dtypes == [
+                ("url", "string"), ("warc_ts", "timestamp_ntz"),
+                ("html", "binary"), ("text", "string"), ("lang", "string"),
+            ]
+            frames.append(
+                df.toPandas().sort_values(["url", "warc_ts"], kind="stable")
+                .reset_index(drop=True)
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", conf)
+    a, b = frames
+    assert len(a) == 3000
+    assert (a.groupby("url")["warc_ts"].diff().dropna().dt.total_seconds() > 0).all()
+    assert a.equals(b)

@@ -556,7 +556,7 @@ def test_repetition_signals_hand_rows(spark):
     assert r3["top_3gram"] is None and r3["top_4gram"] is None
 
     kept = sorted(r["doc_id"] for r in filter_repetitive(
-        docs, max_dup_word_frac=0.6, max_top_2gram_char_frac=0.9
+        docs, max_dup_word_frac=0.6, max_top_char_frac={2: 0.9}
     ).collect())
     assert kept == [2, 3]  # doc 1 is 80% duplicate words
 
@@ -840,8 +840,8 @@ def _dropped(banded, cap):
 def test_minhash_incremental_intermediates_before_cap(spark):
     """Probe contract: ``banded_new`` and ``hit`` are the frames BEFORE
     their caps, so the drop stats see a planted over-cap batch bucket and
-    a planted over-cap corpus bucket; ``shingles`` is the cached batch
-    shingle frame. A genuine near-dup outside the caps is still found."""
+    a planted over-cap corpus bucket. A genuine near-dup outside the caps
+    is still found."""
     from feature_engineering_spark.operators.dedup import (
         minhash_banded,
         minhash_lsh_incremental,
@@ -868,8 +868,6 @@ def test_minhash_incremental_intermediates_before_cap(spark):
     assert _dropped(inter["banded_new"], 4) == (8, 48, 6)
     # the boiler arrival probes 8 corpus buckets of 10 rows each
     assert _dropped(inter["hit"], 4) == (8, 80, 10)
-    assert inter["shingles"].is_cached
-    inter["shingles"].unpersist()
 
 
 def test_embedding_incremental_intermediates_before_cap(spark):
@@ -1380,3 +1378,77 @@ def test_winnow_char_unit(spark):
     # word unit sees each doc as a single token: no grams, no pairs
     word_pairs = winnow_overlap_pairs(docs, k=5, w=4, min_shared=1).count()
     assert word_pairs == 0
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _reads_cache(df) -> bool:
+    return "InMemoryRelation" in df._jdf.queryExecution().withCachedData().toString()
+
+
+def test_lsh_operators_cache_nothing(spark, near_dup_docs):
+    """Operators never persist: building and running every MinHash
+    operator, and one streaming near-dup micro-batch, leaves the
+    session's CacheManager empty, so no later query reads another run's
+    signatures or candidates."""
+    from feature_engineering_spark.operators.dedup import (
+        dedup_batch_against_corpus,
+        minhash_banded,
+        minhash_lsh_incremental,
+    )
+    from feature_engineering_spark.streaming.stream_ops import (
+        streaming_neardup_filter,
+    )
+
+    spark.catalog.clearCache()
+    corpus = near_dup_docs.where(F.col("doc_id") % 3 != 1)
+    batch = near_dup_docs.where(F.col("doc_id") % 3 == 1)
+    index = minhash_banded(corpus)
+    assert minhash_lsh_dedup(near_dup_docs, threshold=0.5).count() > 0
+    inter: dict = {}
+    assert minhash_lsh_incremental(
+        batch, corpus, index, threshold=0.5, intermediates=inter
+    ).count() > 0
+    survivors, drops = dedup_batch_against_corpus(batch, corpus, index)
+    assert survivors.count() + drops.count() == batch.count()
+    sunk = []
+    streaming_neardup_filter(corpus, index, threshold=0.5)(
+        lambda s, d, bid: sunk.append((s.count(), d.count()))
+    )(batch, 0)
+    assert sunk == [(survivors.count(), drops.count())]
+    assert _cache_empty(spark)
+    assert set(inter) == {"banded_new", "hit"}
+
+
+def test_second_minhash_query_build_reads_no_cache(spark):
+    """A repeated build of the ``minhash_lsh_dedup`` query plans from its
+    sources: nothing the first run left behind is substituted in."""
+    import os
+
+    from feature_engineering_spark.plans.data_queries import q_minhash_lsh_dedup
+
+    sf = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                      "perfbench", "data", "sf0.01")
+    spark.catalog.clearCache()
+    first = q_minhash_lsh_dedup(spark, sf)
+    assert first.count() > 0
+    assert not _reads_cache(q_minhash_lsh_dedup(spark, sf))
+
+
+def test_persisted_banding_serves_minhash_dedup(spark, near_dup_docs):
+    """The plan match the curation jobs rely on: with
+    ``minhash_banded(df)`` persisted, ``minhash_lsh_dedup(df)`` reads
+    its banding from that cache, and its pairs are unchanged."""
+    from feature_engineering_spark.operators.dedup import minhash_banded
+
+    spark.catalog.clearCache()
+    exp = sorted(minhash_lsh_dedup(near_dup_docs, threshold=0.5).collect())
+    banded = minhash_banded(near_dup_docs).persist()
+    try:
+        pairs = minhash_lsh_dedup(near_dup_docs, threshold=0.5)
+        assert _reads_cache(pairs)
+        assert sorted(pairs.collect()) == exp
+    finally:
+        banded.unpersist()

@@ -125,7 +125,6 @@ _MEASURED_MODULES = [
     "functions/features.py",
     "functions/timeutil.py",
     "sources/pages.py",
-    "sources/pages_worker.py",  # pages.py delegates generation to it
 ]
 
 
