@@ -1,23 +1,30 @@
-"""Worker-side cosine verify of one SRP-LSH bucket — imports ONLY numpy/
-pandas (the rule for anything an applyInPandas worker unpickles: a
-pyspark import per Python worker is a measured anti-scaling floor, see
-window_kernel.py).
+"""Worker-side SRP-LSH kernels: the signature of each vector and the
+cosine verify of one bucket. Imports ONLY numpy/pandas/pyarrow (the rule
+for anything a Python worker unpickles: a pyspark import per Python
+worker is a measured anti-scaling floor, see window_kernel.py).
+
+Both reproduce Spark's fold ``aggregate(zip_with(a, b, (x, y) -> x * y),
+0.0D, (x, y) -> x + y)`` bit for bit: each dot product and each squared
+norm is a left fold over the dimensions, ``acc = 0.0; acc += a[k] *
+b[k]``, the same IEEE operation sequence.
+
+The signature bits are ``operators/similarity._dot_sql(v, h) > 0`` under
+Spark's NaN ordering: NaN sorts above every double, so a NaN dot product
+sets its bit. A NULL vector, a NULL component or a length other than the
+hyperplanes' gives a NULL fold and a 0 bit.
 
 The scores are bit-identical to ``operators/similarity._cosine_sql``.
-Each dot product and each squared norm is a left fold over the
-dimensions, ``acc = 0.0; acc += a[k] * b[k]``: the same IEEE operation
-sequence as Spark's ``aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D,
-(x, y) -> x + y)``. The denominator is ``sqrt(|a|^2) * sqrt(|b|^2)``, and
-a zero denominator gives no row, as ``try_divide``'s NULL passes no
-threshold. The threshold compare follows Spark's NaN ordering: NaN sorts
-above every double, so a NaN cosine passes any threshold but NaN, and a
-NaN threshold passes only NaN.
+The denominator is ``sqrt(|a|^2) * sqrt(|b|^2)``, and a zero denominator
+gives no row, as ``try_divide``'s NULL passes no threshold. The
+threshold compare follows the same NaN ordering: a NaN cosine passes any
+threshold but NaN, and a NaN threshold passes only NaN.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 # Rows of the upper triangle scored per step: a 4096-row bucket holds
 # BLOCK_ROWS x 4096 doubles per work array (~8 MB) instead of 4096^2.
@@ -94,3 +101,49 @@ def bucket_verifier(threshold: float):
         return pd.DataFrame({"a": a, "b": b, "cosine": cos})
 
     return verify
+
+
+def srp_signer(planes, bands: int):
+    """The mapInArrow function of the SRP signature: record batches with
+    an array<double> column ``v`` in, the same batches with
+    ``bucket0..bucket{bands-1}`` appended out; every input column passes
+    through untouched, so a NaN component stays NaN (a pandas round trip
+    would make it NULL). Bit j is the sign of ``v . planes[j]``, band b
+    holds bits b*r .. b*r + r - 1 with weights 1, 2, 4, ..., and r =
+    nbits / bands. A bucket is int32 for r <= 31 and int64 above, the
+    types Spark gives the SQL sum of those weights."""
+    h = np.asarray(planes, dtype=np.float64)
+    nbits, dim = h.shape
+    rows = nbits // bands
+    dtype = np.int32 if rows <= 31 else np.int64
+    weights = np.left_shift(1, np.arange(rows, dtype=np.int64))[None, :, None]
+    names = [f"bucket{b}" for b in range(bands)]
+
+    def sign(batches):
+        for batch in batches:
+            v = batch.column("v")
+            off = v.offsets.to_numpy()
+            ok = np.diff(off) == dim
+            if v.null_count:
+                ok &= v.is_valid().to_numpy(zero_copy_only=False)
+            sel = np.flatnonzero(ok)
+            idx = off[sel][None, :] + np.arange(dim)[:, None]  # (dim, m)
+            vals = v.values
+            if vals.null_count:
+                keep = ~vals.is_null().to_numpy(zero_copy_only=False)[idx].any(axis=0)
+                sel, idx = sel[keep], idx[:, keep]
+            vt = vals.to_numpy(zero_copy_only=False)[idx]
+            acc = np.zeros((nbits, len(sel)))
+            prod = np.empty_like(acc)
+            for k in range(dim):
+                np.multiply(h[:, k, None], vt[k, None, :], out=prod)
+                acc += prod
+            bits = (acc > 0) | np.isnan(acc)
+            buckets = np.zeros((bands, len(v)), dtype)
+            buckets[:, sel] = (bits.reshape(bands, rows, -1) * weights).sum(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, *buckets],
+                names=[*batch.schema.names, *names],
+            )
+
+    return sign

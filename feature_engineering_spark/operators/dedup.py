@@ -11,7 +11,8 @@ Scale design notes (the point of each operator is its shuffle shape):
 - simhash: signature scan-side; bucketing by signature prefix bounds the
   candidate join the same way.
 - embedding near-dup: signed-random-projection LSH (embedding_neardup_lsh)
-  is the scale path — hyperplane sign bits scan-side, the band rows carry
+  is the scale path — hyperplane sign bits in one Arrow map over the
+  scan (bit-identical to the JVM dot-product fold), the band rows carry
   their vectors through one (band, bucket) exchange, and a grouped-map
   numpy verify scores each bucket's pairs exactly (bit-identical to the
   JVM cosine fold); the all-pairs operator is the recall oracle for tests
@@ -50,11 +51,7 @@ from feature_engineering_spark.functions.text import (
     ws_token_count,
     ws_tokens,
 )
-from feature_engineering_spark.operators.similarity import (
-    _cosine_sql,
-    _dot_sql,
-    _vector_sql,
-)
+from feature_engineering_spark.operators.similarity import _cosine_sql
 
 
 def dedup_exact(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -660,7 +657,7 @@ def embedding_neardup_lsh(
 ) -> DataFrame:
     """Embedding near-dup PAIRS at scale: signed-random-projection LSH.
 
-    Shuffle shape: one scan-side projection signs each vector once; its
+    Shuffle shape: one Arrow map over the scan signs each vector once; its
     band rows carry the vector through ONE hash exchange on (band,
     bucket), which both the bucket cap's window and the grouped verify
     (``_srp_bucket_pairs``) read; a second, small exchange takes the
@@ -685,6 +682,18 @@ def embedding_neardup_lsh(
     return _srp_bucket_pairs(_flag(banded, True), threshold)
 
 
+def _srp_vectors(df: DataFrame, emb: str, id_col: str) -> DataFrame:
+    """(id, v): each vector as array<double>, NULL when a component is
+    NULL. The cosine fold of such a vector is NULL and never passes a
+    threshold, but Arrow hands the verify a NULL component as NaN, which
+    would."""
+    v = f"CAST({emb} AS ARRAY<DOUBLE>)"
+    return df.selectExpr(
+        f"{id_col} AS id",
+        f"CASE WHEN exists({v}, x -> x IS NULL) THEN NULL ELSE {v} END AS v",
+    )
+
+
 def _srp_signature(
     df: DataFrame,
     dim: int,
@@ -695,48 +704,41 @@ def _srp_signature(
     seed: int,
 ) -> DataFrame:
     """(id, v, bucket0..bucket{bands-1}): the SRP signature of each vector,
-    computed once, next to the vector ``v`` as array<double>.
+    computed once, next to the vector ``v`` of ``_srp_vectors``.
 
     Bit j of the signature = [dot(v, h_j) > 0] over the ``nbits``
     ``srp_hyperplanes``; ``bands`` groups of nbits/bands consecutive bits
     form the bucket keys. The dot products are left-associated sequential
-    folds (aggregate(zip_with(v, h, *), 0.0, +)) — the SAME IEEE
-    operation sequence as the literal add chain emitted in the DuckDB
-    oracle, so the sign bits match exactly. A literal chain was the first
-    implementation; at nbits x dim = 1024 terms it blew Janino's 64 KB
-    per-method limit and silently de-optimized the whole stage to
-    interpreted eval (two `Code grows beyond 64 KB` errors per contract
-    run). The fold keeps the per-bit expression O(1) in codegen size (the
-    lambda body is tiny; only the fold itself is interpreted) while the
-    rest of the stage stays whole-stage-compiled. All scan-side JVM
-    projection — no Python.
+    folds, the SAME IEEE operation sequence as ``_dot_sql`` and as the
+    literal add chain emitted in the DuckDB oracle, so the sign bits match
+    exactly; a NaN dot product sets its bit (Spark orders NaN above every
+    double) and a NULL vector, or one of another length, sets none.
 
-    ``v`` is NULL when a component is NULL: the cosine fold of such a
-    vector is NULL and never passes a threshold, but Arrow hands the
-    verify a NULL component as NaN, which would. Callers that do not
-    read ``v`` never evaluate it (column pruning).
+    Two steps: the JVM projection of ``_srp_vectors``, then one
+    ``mapInArrow`` (``functions/cosine_kernel.srp_signer``) that passes
+    ``id`` and ``v`` through and appends the buckets, folding every
+    hyperplane over a whole Arrow batch in numpy. Not SQL: a
+    ``selectExpr`` of nbits ``CASE WHEN aggregate(zip_with(v, h, ...))``
+    folds carries nbits x dim double literals (24 KB of SQL at dim 64,
+    nbits 16) that every build parses, analyses and optimises, and every
+    row evaluates as interpreted folds. A mapInPandas would turn a NaN
+    component of ``v`` into NULL on the way back."""
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    The bits and bucket sums are built as SQL text and reach Spark in one
-    ``selectExpr``: built as Columns, the nbits x dim hyperplane literals
-    cost ~6,500 Py4J round trips per call at dim 64, nbits 16."""
+    from feature_engineering_spark.functions.cosine_kernel import srp_signer
+
     if nbits % bands:
         raise ValueError("nbits must be divisible by bands")
-    rows_per_band = nbits // bands
-    v = f"CAST({emb} AS ARRAY<DOUBLE>)"
-    bits = [
-        f"CASE WHEN {_dot_sql(v, _vector_sql(h))} > 0 THEN 1 ELSE 0 END"
-        for h in srp_hyperplanes(dim, nbits, seed)
-    ]
-    buckets = []
-    for b in range(bands):
-        expr = "0"
-        for r in range(rows_per_band):
-            expr = f"({expr} + ({bits[b * rows_per_band + r]}) * {2**r})"
-        buckets.append(f"{expr} AS bucket{b}")
-    return df.selectExpr(
-        f"{id_col} AS id",
-        f"CASE WHEN exists({v}, x -> x IS NULL) THEN NULL ELSE {v} END AS v",
-        *buckets,
+    if nbits // bands > 63:
+        raise ValueError("a band holds at most 63 bits")
+    vecs = _srp_vectors(df, emb, id_col)
+    bucket = IntegerType() if nbits // bands <= 31 else LongType()
+    schema = StructType(
+        vecs.schema.fields
+        + [StructField(f"bucket{b}", bucket, False) for b in range(bands)]
+    )
+    return vecs.mapInArrow(
+        srp_signer(srp_hyperplanes(dim, nbits, seed), bands), schema
     )
 
 
@@ -832,7 +834,7 @@ def embedding_lsh_incremental(
       shuffled — and caps the matched rows; the batch banding keeps its
       own cap, as in ``embedding_neardup_lsh``;
     - the capped hit rows (old) take their vectors from one join to the
-      corpus (the committed index holds no vectors; ``_srp_signature``'s
+      corpus (the committed index holds no vectors; ``_srp_vectors``'
       NULL rule applies), the capped batch band rows (new) carry theirs,
       and ``_srp_bucket_pairs`` verifies both in one grouped pass: the
       batch is scanned once.
@@ -852,8 +854,7 @@ def embedding_lsh_incremental(
     keys = ("band", "bucket")
     banded_new = _cap_buckets(banded_new, max_bucket_size)
     hit = _probe_index(banded_new, corpus_banded, keys, max_bucket_size, intermediates)
-    v_corp = _srp_signature(corpus, dim, emb, id_col, nbits, bands, seed)
-    old = hit.select("id", *keys).join(v_corp.select("id", "v"), "id")
+    old = hit.select("id", *keys).join(_srp_vectors(corpus, emb, id_col), "id")
     return _srp_bucket_pairs(
         _flag(old, False).unionByName(_flag(banded_new, True)), threshold
     )

@@ -78,28 +78,29 @@ def forward_select(
     Returns (selected, per-step metric history)."""
     train = df.where(F.col("split") == "train")
     valid = df.where(F.col("split") == "valid")
-    train.cache().count()
-    valid.cache().count()
-
     selected: list[str] = []
     history: list[dict] = []
     best_r2 = float("-inf")
     pool = list(feature_cols)
-    while pool and len(selected) < fmax:
-        scores = [
-            (_fit_r2(train, valid, selected + [c], model, label), c)
-            for c in pool
-        ]
-        step_r2, step_c = max(scores)
-        if step_r2 <= best_r2 + 1e-9:
-            break
-        selected.append(step_c)
-        pool.remove(step_c)
-        best_r2 = step_r2
-        history.append({"step": len(selected), "added": step_c,
-                        "valid_r2": round(step_r2, 6)})
-    train.unpersist()
-    valid.unpersist()
+    try:
+        train.cache().count()
+        valid.cache().count()
+        while pool and len(selected) < fmax:
+            scores = [
+                (_fit_r2(train, valid, selected + [c], model, label), c)
+                for c in pool
+            ]
+            step_r2, step_c = max(scores)
+            if step_r2 <= best_r2 + 1e-9:
+                break
+            selected.append(step_c)
+            pool.remove(step_c)
+            best_r2 = step_r2
+            history.append({"step": len(selected), "added": step_c,
+                            "valid_r2": round(step_r2, 6)})
+    finally:
+        train.unpersist()
+        valid.unpersist()
     return selected, history
 
 

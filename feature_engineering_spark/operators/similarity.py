@@ -9,14 +9,16 @@ first-C-by-id (kept as the DuckDB-oracle fixture: k-means isn't
 SQL-replicable). Either way the operator's shuffle shape is the same:
 one broadcast of centroids, one bucket-pruned scan.
 
-The cosine fold (``_cosine_sql``, also the dedup operators' verify and
-``_dot_sql`` their SRP signature) and the vector literals are built as
-SQL text that Spark parses in one call. Through the Column API every
-literal and operator costs 3-16 Py4J round trips and every higher-order
-lambda 40-50, which made a 64-dim, 16-bit SRP signature ~6,500 round
-trips per query build. The lambda parameters are named x and y, the
-names PySpark gives them, so the plans are the ones the Column API
-built.
+The cosine fold (``_cosine_sql``, also the dedup operators' verify) and
+the vector literals are built as SQL text that Spark parses in one call.
+Through the Column API every literal and operator costs 3-16 Py4J round
+trips and every higher-order lambda 40-50. The lambda parameters are
+named x and y, the names PySpark gives them, so the plans are the ones
+the Column API built. The SRP-LSH signature does not use this fold as
+SQL: ``functions/cosine_kernel.srp_signer`` computes ``_dot_sql``'s
+left fold and sign rule in one Arrow map, because the SQL form is a
+24 KB expression with nbits x dim literals that every build parses and
+every row evaluates as interpreted folds.
 """
 
 from __future__ import annotations

@@ -12,17 +12,52 @@ non-vacuous and still oracle-verified.
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from feature_engineering_spark.functions import text as TX
 
 
+# (realpath, st_mtime_ns, st_size) of a local parquet file -> the schema
+# Spark inferred for it in this process. The parquet inference confs
+# (binaryAsString, int96AsTimestamp, inferTimestampNTZ) are left at their
+# defaults by every session this engine builds.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The one table reader every plans/ module uses."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The one table reader every plans/ module uses.
+
+    Inferring a parquet schema is a one-task Spark job that reads the
+    footer. A local regular file whose schema this process has already
+    inferred is read with that schema, which launches no job; a
+    rewritten file has a new mtime or size and is inferred again. A
+    first read, a directory, or a path that Hadoop resolves to a
+    non-local file system is read as is."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode) or not _local_fs(spark):
+        return spark.read.parquet(path)
+    key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
+def _local_fs(spark: SparkSession) -> bool:
+    """Whether a path without a scheme names a local file."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return conf.get("fs.defaultFS", "file:///").startswith("file:")
 
 
 def _spread(df: DataFrame) -> DataFrame:

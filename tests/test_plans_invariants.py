@@ -4,6 +4,7 @@ north-rule invariants: byte-identical text, zero leakage in rolling stats.
 
 from __future__ import annotations
 
+import itertools
 import threading
 
 import pandas as pd
@@ -147,18 +148,80 @@ def test_winnow_pairs_plan_no_nlj(spark):
 def test_embed_neardup_lsh_plan_no_nlj(spark):
     """The SRP-LSH verify is one grouped map over (band, bucket) on the
     cap's exchange — no join of any kind, so no candidate self-join and
-    no join back to the vectors — and signing stays a JVM projection (no
-    per-row Python eval)."""
+    no join back to the vectors — and signing is one Arrow map over the
+    scan (no per-row Python eval)."""
     from feature_engineering_spark.operators.dedup import embedding_neardup_lsh
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     plan = _plan(embedding_neardup_lsh(emb, dim=64))
     assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # the cap's window exchange and the distinct of the verified pairs
     assert plan.count("Exchange hashpartitioning") == 2, plan
     assert plan.count("FileScan") == 1, plan
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs that ``fn()`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"fes-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_reads_infer_each_schema_once(spark, tmp_path):
+    """``_t`` infers a local file's parquet schema once per process: the
+    first read runs the footer job, a second read of the same file runs
+    none and has the inferred schema; a rewritten file with another
+    schema is inferred again; a directory is read as before, with a
+    footer job each time."""
+    from feature_engineering_spark.plans import data_queries as DQ
+
+    path = tmp_path / "t.parquet"
+    pd.DataFrame({"a": [1, 2], "b": ["x", "y"]}).to_parquet(path)
+    got = []
+
+    def read():
+        got.append(DQ._t(spark, str(tmp_path), "t"))
+
+    assert _jobs_of(spark, read) == 1
+    assert _jobs_of(spark, read) == 0
+    assert got[1].schema == got[0].schema == spark.read.parquet(str(path)).schema
+    assert got[1].count() == 2
+
+    pd.DataFrame({"a": [1.5], "c": [True], "d": [3]}).to_parquet(path)
+    assert _jobs_of(spark, read) == 1
+    assert got[2].schema == spark.read.parquet(str(path)).schema
+    assert got[2].columns == ["a", "c", "d"]
+
+    d = tmp_path / "dir"
+    spark.createDataFrame(pd.DataFrame({"a": [1]})).write.parquet(str(d / "u.parquet"))
+    plain = _jobs_of(spark, lambda: spark.read.parquet(str(d / "u.parquet")))
+    assert plain >= 1
+    for _ in range(2):
+        got = []
+        assert _jobs_of(spark, lambda: got.append(DQ._t(spark, str(d), "u"))) == plain
+        assert got[0].columns == ["a"]
+
+
+def test_query_builds_launch_no_job_after_the_first(spark):
+    """A query build is planning only: once each table's schema is known,
+    building the benchmark's three queries launches no Spark job (each
+    build ran a schema-inference job per table before)."""
+    from feature_engineering_spark.plans.driver_queries import QUERIES
+
+    for name in ("asof_join_events", "window_features_35", "embed_neardup_lsh"):
+        QUERIES[name](spark, SF)
+        assert _jobs_of(spark, lambda: QUERIES[name](spark, SF)) == 0, name
 
 
 def _node_counts(df) -> dict:

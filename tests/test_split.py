@@ -57,3 +57,31 @@ def test_causal_split_cuts_with_tiebreak(spark, fracs):
     assert tied_cuts > 0
     assert set(got.values()) == ({"train", "test"} if len(fracs) == 1
                                  else {"train", "valid", "test"})
+
+
+@pytest.mark.parametrize("fails", [False, True])
+def test_forward_select_leaves_no_cache(spark, monkeypatch, fails):
+    """``forward_select`` caches its train and valid splits across the
+    fits and unpersists both on the way out, also when a fit raises."""
+    from feature_engineering_spark.operators import selection
+
+    rng = random.Random(3)
+    rows = []
+    for i in range(60):
+        a, b = rng.random(), rng.random()
+        rows.append(("train" if i % 3 else "valid", a, b, 2 * a + 0.1 * rng.random()))
+    df = spark.createDataFrame(rows, "split string, a double, b double, y double")
+    if fails:
+        def boom(*args, **kwargs):
+            raise RuntimeError("fit failed")
+
+        monkeypatch.setattr(selection, "_fit_r2", boom)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    if fails:
+        with pytest.raises(RuntimeError, match="fit failed"):
+            selection.forward_select(df, ["a", "b"], fmax=1)
+    else:
+        selected, _ = selection.forward_select(df, ["a", "b"], fmax=1)
+        assert selected == ["a"]
+    assert cache.isEmpty()

@@ -245,6 +245,147 @@ def test_srp_banded_matches_sequential_fold(spark):
     assert len(set(got.values())) > 4  # the fixture spreads over buckets
 
 
+def _srp_signature_sql(df, dim, emb, id_col, nbits, bands, seed):
+    """The SRP signature as one JVM ``selectExpr``: each bit a ``CASE WHEN``
+    over the ``_dot_sql`` fold against a hyperplane literal. The Arrow
+    signer must reproduce it bit for bit."""
+    from feature_engineering_spark.operators.dedup import srp_hyperplanes
+    from feature_engineering_spark.operators.similarity import _dot_sql, _vector_sql
+
+    rows_per_band = nbits // bands
+    v = f"CAST({emb} AS ARRAY<DOUBLE>)"
+    bits = [
+        f"CASE WHEN {_dot_sql(v, _vector_sql(h))} > 0 THEN 1 ELSE 0 END"
+        for h in srp_hyperplanes(dim, nbits, seed)
+    ]
+    buckets = []
+    for b in range(bands):
+        expr = "0"
+        for r in range(rows_per_band):
+            expr = f"({expr} + ({bits[b * rows_per_band + r]}) * {2**r})"
+        buckets.append(f"{expr} AS bucket{b}")
+    return df.selectExpr(
+        f"{id_col} AS id",
+        f"CASE WHEN exists({v}, x -> x IS NULL) THEN NULL ELSE {v} END AS v",
+        *buckets,
+    )
+
+
+def _signature_bits(df) -> list:
+    """Sorted rows with every double as its bit pattern (NaN included)."""
+    import struct
+
+    def bits(x):
+        return x if x is None else struct.pack(f"<{len(x)}d", *x)
+
+    return sorted(
+        (tuple(bits(x) if isinstance(x, list) else x for x in r) for r in df.collect()),
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize("elem, batch_rows", [
+    ("double", 10000), ("double", 3), ("float", 7),
+])
+def test_srp_arrow_signer_matches_sql_signature(spark, elem, batch_rows):
+    """The Arrow signer gives the SQL signature's schema and bits: random
+    vectors; a NaN component (every bit set: Spark orders NaN above
+    every double); a NULL component, a NULL vector and lengths 0, 3 and
+    65 (a NULL fold: every bit clear); +-0.0, +-inf and 1e-200
+    components; array<float> input; several Arrow batches per task."""
+    from feature_engineering_spark.operators.dedup import (
+        _srp_signature,
+        _stack_bands,
+        srp_banded,
+    )
+
+    dim, nbits, bands = 64, 16, 4
+    rng = np.random.default_rng(31)
+    M = rng.normal(size=(30, dim))
+    rows = [(i, M[i].tolist()) for i in range(len(M))]
+    nan_row, null_row = M[0].tolist(), M[1].tolist()
+    nan_row[7], null_row[9] = float("nan"), None
+    edge = [
+        nan_row, null_row, None, [], [1.0, 2.0, 3.0], M[2].tolist() + [1.0],
+        [0.0] * dim, [-0.0] * dim, [1e-200] * dim, [-1e-200] * dim,
+        [float("inf")] + [0.0] * (dim - 1), [float("-inf")] + [1.0] * (dim - 1),
+        [float("inf"), float("-inf")] + [0.0] * (dim - 2),
+    ]
+    rows += [(100 + i, v) for i, v in enumerate(edge)] + [(None, M[3].tolist())]
+    df = spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
+    try:
+        args = (df, dim, "embedding", "vec_id", nbits, bands, 7)
+        got, exp = _srp_signature(*args), _srp_signature_sql(*args)
+        assert got.schema == exp.schema
+        got_rows = _signature_bits(got)
+        assert got_rows == _signature_bits(exp)
+        banded = srp_banded(df, dim, nbits=nbits, bands=bands)
+        assert banded.schema == _stack_bands(exp, bands).schema
+        assert _signature_bits(banded) == _signature_bits(_stack_bands(exp, bands))
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    buckets = {r[0]: r[2:] for r in got_rows}
+    assert buckets[100] == (15,) * bands
+    for i in (101, 102, 103, 104, 105):
+        assert buckets[i] == (0,) * bands, i
+    assert len(set(buckets.values())) > 10  # the fixture spreads over buckets
+
+
+def test_srp_signer_on_sliced_and_empty_batches():
+    """The signer reads a sliced ListArray through its offsets (which do
+    not start at 0), passes the input columns through unchanged, and maps
+    an empty batch to an empty batch with the bucket columns."""
+    import pyarrow as pa
+
+    from feature_engineering_spark.functions.cosine_kernel import srp_signer
+
+    rng = np.random.default_rng(5)
+    dim, nbits, bands = 5, 6, 2
+    H = rng.normal(size=(nbits, dim))
+    vecs = [rng.normal(size=dim).tolist() for _ in range(8)]
+    vecs[3], vecs[5] = None, [1.0, None, 2.0, 3.0, 4.0]
+    vecs[6] = [float("nan")] + vecs[6][1:]
+    vecs.insert(2, [1.0, 2.0])
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(vecs)), pa.int64()),
+         pa.array(vecs, pa.list_(pa.float64()))],
+        names=["id", "v"],
+    )
+
+    def ref(v):
+        if v is None or len(v) != dim or None in v:
+            return (0,) * bands
+        bits = []
+        for h in H:
+            acc = 0.0
+            for x, y in zip(v, h):
+                acc += x * y
+            bits.append(acc > 0 or acc != acc)
+        r = nbits // bands
+        return tuple(sum(bits[b * r + k] << k for k in range(r)) for b in range(bands))
+
+    sign = srp_signer(H.tolist(), bands)
+    sliced = batch.slice(3, 5)
+    assert sliced.column("v").offsets[0].as_py() > 0
+    (out,) = sign(iter([sliced]))
+    assert out.schema.names == ["id", "v", "bucket0", "bucket1"]
+    for name in ("id", "v"):  # the same buffers at the same offset: no copy
+        a, b = out.column(name), sliced.column(name)
+        assert a.offset == b.offset
+        assert [x and x.address for x in a.buffers()] == [
+            x and x.address for x in b.buffers()]
+    assert out.schema.field("bucket0").type == pa.int32()
+    got = list(zip(*(out.column(f"bucket{b}").to_pylist() for b in range(bands))))
+    assert got == [ref(v) for v in vecs[3:8]]
+    assert got[1] == got[3] == (0, 0)  # a NULL vector, a NULL component
+    assert got[4] == (2**(nbits // bands) - 1,) * bands  # the NaN row
+    (empty,) = sign(iter([batch.slice(0, 0)]))
+    assert empty.num_rows == 0
+    assert empty.schema.names == ["id", "v", "bucket0", "bucket1"]
+
+
 def test_embedding_lsh_recall_vs_allpairs(spark):
     """SRP-LSH pairs vs the all-pairs exactness baseline: the verify step
     admits no false positives, and recall >= 0.9 on a near-dup fixture."""
